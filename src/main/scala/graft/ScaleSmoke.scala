@@ -791,8 +791,8 @@ object ScaleSmoke {
           vec.as("embedding"), col("label"))
       }
     }
-    // the tables under `dir` may have just (re)grown — drop any stale
-    // corpus-scaled parameters cached against this path (ADVICE r10)
+    // the tables under `dir` may have just (re)grown — drop the persisted
+    // indexes built from the old tables
     graft.operators.Similarity.invalidateParamCaches(dir)
     graft.operators.Dedup.invalidateParamCaches(dir)
     dir

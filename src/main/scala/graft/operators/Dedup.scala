@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.{QueryDef, Stable}
-import graft.tables.Tables
+import graft.tables.{SourceState, Tables}
 
 /** Deduplication operators for a training-data pipeline, over `documents`:
   *
@@ -70,33 +70,19 @@ object Dedup {
   }
 
   /** Each doc plus a twin (doc_id+100000) with the first 14 chars cut —
-    * high-but-not-perfect shingle overlap.
-    *
-    * The per-doc work downstream (shingling, gram/minhash/simhash
-    * compute) inherits the SOURCE file layout, and the sf0.1 documents
-    * parquet splits into 2 scan tasks — so every dedup operator's heavy
-    * per-row stage ran on 2 of 32 cores (measured: d02's shingle build
-    * 3.7 s task time on 2 tasks). One narrow (doc_id, t) shuffle restores
-    * full-width compute; skipped when the scan is already wide (a 100 TB
-    * corpus arrives as thousands of splits — the StreamJobs conditional
-    * widen discipline). Row-level results are unaffected: every consumer
-    * is per-row compute + equi-joins/aggregates on exact values. */
+    * high-but-not-perfect shingle overlap. Widened on doc_id
+    * ([[SourceState.widen]]) for the per-doc shingle/signature builds
+    * downstream (measured: d02's shingle build 3.7 s task time on the
+    * sf0.1 scan's 2 tasks). Row-level results are unaffected: every
+    * consumer is per-row compute + equi-joins/aggregates on exact values. */
   def corpus(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), lower(trim(col("text"))).as("t"))
     val c = docs.unionAll(docs.select(
       (col("doc_id") + 100000).as("doc_id"),
       col("t").substr(lit(15), length(col("t"))).as("t")))
-    val parts = s.sessionState.conf.numShufflePartitions
-    // the decision needs a physical plan (.rdd) — one per directory, not
-    // one per corpus() call (invalidated with the other per-path caches)
-    val widen = widenCache.computeIfAbsent(d,
-      _ => Boolean.box(c.rdd.getNumPartitions * 2 < parts))
-    if (widen) c.repartition(parts, col("doc_id")) else c
+    SourceState.widenRead(d, "documents.parquet", "dedup corpus", c, col("doc_id"))
   }
-
-  private val widenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   val corpusSql: String =
     """SELECT doc_id, lower(trim(text)) AS t FROM documents
@@ -173,34 +159,18 @@ object Dedup {
     * the bench's sf0.1 base measures the same plan the oracle checked. */
   private val FixtureDocs = 16384L
 
-  private val docsCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   /** Dedup-input cardinality (the mutated-twin corpus, 2× documents) —
-    * one cached parquet-metadata count per directory, invalidated by the
-    * scale-data generator when it (re)writes a table (ADVICE r10: a stale
-    * per-path cache after an in-JVM data rebuild silently reuses the old
-    * corpus size). */
+    * one parquet-metadata count per version of the documents table. */
   private[graft] def corpusDocsFor(s: SparkSession, d: String): Long =
-    docsCache.computeIfAbsent(d, _ => corpus(s, d).count())
+    SourceState.memo(d, "documents.parquet", "dedup corpus rows")(corpus(s, d).count())
 
-  /** Testing seam: refresh only the cached corpus count for `d`, leaving
-    * persisted index state untouched — the fingerprint-staleness spec
-    * needs a stale index on disk to prove [[nearDupStoredIndex]] detects
-    * it (the full [[invalidateParamCaches]] would delete it first). */
-  private[graft] def invalidateDocsCountOnly(d: String): Unit = docsCache.remove(d)
-
-  /** Drop every per-path parameter cache AND the persisted near-dup index
-    * state derived from `d` (ADVICE r12: the docsCache fix alone left the
-    * d17/q57 history index serving stale rows after an in-JVM corpus
-    * rebuild under the same path — the exact staleness class the hook
-    * exists for). Index invalidation covers both layers a rebuilt corpus
-    * can leak through: catalog entries created in THIS JVM (any band
-    * params — matched by key prefix) and warehouse directories left by
-    * ANY previous JVM (restart-reuse means files outlive catalogs). */
+  /** Drop the persisted near-dup index state derived from `d` (ADVICE r12:
+    * the d17/q57 history index served stale rows after an in-JVM corpus
+    * rebuild under the same path). Index invalidation covers both layers a
+    * rebuilt corpus can leak through: catalog entries created in THIS JVM
+    * (any band params — matched by key prefix) and warehouse directories
+    * left by ANY previous JVM (restart-reuse means files outlive catalogs). */
   private[graft] def invalidateParamCaches(d: String): Unit = {
-    docsCache.remove(d)
-    widenCache.remove(d)
-    TextAnalysis.invalidateWidenCache(d)
-    graft.queries.BillingDemo.invalidateWidenCache(d)
     val dkey = pathKey(d)
     val prefixes = Seq(s"graft_ndidx_bands_${dkey}_", s"graft_ndidx_sh_${dkey}_")
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
@@ -450,9 +420,6 @@ object Dedup {
     * inlining). Shingles, not tokens: on a narrow-vocab corpus every doc has
     * nearly the same token SET, which makes token-level simhash degenerate
     * (everything within hamming 2 of everything). */
-  private def simhashCol: Column =
-    graft.functions.VectorFunctions.simHash28(col("th"))
-
   private[operators] def simhashSql: String = {
     val bitSums = (0 until SimBits).map { i =>
       s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(th, " +
@@ -492,8 +459,6 @@ object Dedup {
   }
 
   // ---------- d05: embedding cosine near-dup (brute-force baseline) ----------
-
-  private[operators] def vecNormed(idCol: String): Column = col(idCol)
 
   /** dot(a,b) in double with identical fold order on both sides
     * (compiled loop — see VectorFunctions.FloatVecDot). */
@@ -1559,40 +1524,6 @@ object Dedup {
   private val NdidxBuckets = 32
   private val NdidxSpecFile = "_GRAFT_NDIDX_SPEC"
 
-  /** Fingerprint of the source corpus the index was built from: sorted
-    * (name, size, mtime) of the parquet files under `d`/`table`, hashed.
-    * Pure filesystem metadata — no data scan. Recorded in the
-    * index's spec file at build time and re-checked at restart-reuse time,
-    * so a corpus regenerated BETWEEN JVMs (the cross-process twin of the
-    * [[invalidateParamCaches]] staleness class) forces a rebuild instead
-    * of silently serving stale history. Shared with Similarity's persisted
-    * vector index (same staleness contract over embeddings.parquet). */
-  private[operators] def sourceFingerprint(
-      d: String, table: String = "documents.parquet"): String = {
-    val root = java.nio.file.Paths.get(d, table)
-    // a table may be a Spark-written DIRECTORY of part files or a single
-    // parquet FILE (the driver's testdata) — both must fingerprint, else
-    // a single-file corpus change never invalidates a persisted index
-    if (java.nio.file.Files.isRegularFile(root))
-      return java.lang.Long.toHexString(
-        (s"${root.getFileName}:${java.nio.file.Files.size(root)}:" +
-          s"${java.nio.file.Files.getLastModifiedTime(root).toMillis}")
-          .hashCode.toLong & 0xffffffffL)
-    if (!java.nio.file.Files.isDirectory(root)) return "absent"
-    val ls = java.nio.file.Files.list(root)
-    val entries = try {
-      val b = Seq.newBuilder[String]
-      val it = ls.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        b += s"${p.getFileName}:${java.nio.file.Files.size(p)}:" +
-          s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-      }
-      b.result().sorted
-    } finally ls.close()
-    java.lang.Long.toHexString(entries.mkString("\n").hashCode.toLong & 0xffffffffL)
-  }
-
   /** What the last [[nearDupStoredIndex]] call did per directory, and how
     * long a "built" call spent: "cached" (catalog hit — free),
     * "reregistered" (fresh catalog, valid warehouse files re-declared over
@@ -1632,7 +1563,7 @@ object Dedup {
     val wh = warehouseDir(s)
     def loc(t: String) = s"$wh/$t"
     def specPath(t: String) = java.nio.file.Paths.get(loc(t), NdidxSpecFile)
-    val fp = sourceFingerprint(d)
+    val fp = SourceState.fingerprint(d, "documents.parquet")
     // (table, bucket keys) — bands bucketed on the candidate join's key,
     // shingles on the Jaccard verify's
     val tables = Seq(bandsT -> Seq("band"), shT -> Seq("doc_id"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.{QueryDef, Stable}
-import graft.tables.Tables
+import graft.tables.{SourceState, Tables}
 
 /** Multimodal-column plumbing: treat image/audio/video payloads as opaque
   * `binary` columns with typed metadata, and run decode/feature-extract as
@@ -214,15 +214,10 @@ object Multimodal {
         TextOps.polyHash(col("hx").substr((i * 2 - 1).cast("int"), lit(GramBytes * 2)))))
       .otherwise(expr("array()").cast("array<bigint>"))
     val bb = Dedup.blockBitsFor(Dedup.corpusDocsFor(s, d))
-    // the signature build is the heavy per-row step (one rolling gram hash
-    // per payload byte), but it inherits the SOURCE file layout — at sf0.1
-    // the documents parquet splits into 2 scan tasks, so the build ran on
-    // 2 of 32 cores (measured 3.4 s/task). One narrow shuffle restores
-    // full-width compute; skipped when the scan is already wide (the
-    // 100 TB corpus arrives as thousands of splits — same conditional
-    // widen discipline as StreamJobs' micro-batch repartition).
-    val parts = s.sessionState.conf.numShufflePartitions
-    val cw = if (c.rdd.getNumPartitions * 2 >= parts) c else c.repartition(parts)
+    // widened for the signature build, the heavy per-row step (one rolling
+    // gram hash per payload byte; measured 3.4 s/task on the sf0.1 scan's
+    // 2 tasks)
+    val cw = SourceState.widenRead(d, "documents.parquet", "m04 payloads", c)
     // the shared d04 machinery: signature (corpus-scaled width, two words
     // past 56 bits), 4-block pigeonhole join, hamming verify
     Dedup.simhashBlockPairs(cw.select(col("doc_id"), th.as("th")), bb, PHashMaxHamming)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.{QueryDef, Stable}
-import graft.tables.Tables
+import graft.tables.{SourceState, Tables}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -77,31 +77,21 @@ object Similarity {
     * mass quadratically) — s02 hit ratio 22.5 at ×100 vs ~3 for the linear
     * cohort. At the oracle fixtures (≤2000 vectors) this IS 8, so the
     * pinned DuckDB SQL stays valid; the ×10 gate corpus (20k) gets 12, the
-    * ×100 demonstration (200k) 15. One cached parquet-metadata count job
-    * per directory; the bucket join shape is unchanged — only the key
-    * space widens. */
+    * ×100 demonstration (200k) 15. One parquet-metadata count job per
+    * version of the embeddings table; the bucket join shape is unchanged —
+    * only the key space widens. */
   private val TargetBucket = 8
-  private val planeCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private[graft] def planesFor(s: SparkSession, d: String): Int =
-    planeCache.computeIfAbsent(d, _ => {
+    SourceState.memo(d, "embeddings.parquet", "lsh planes") {
       val n = Tables.embeddings(s, d).count()
       math.max(NumPlanes, math.ceil(
         math.log(math.max(1.0, n.toDouble / TargetBucket)) / math.log(2.0) - 1e-9).toInt)
-    })
+    }
 
-  /** Drop the cached corpus-scaled parameters for `d` (ADVICE r10: the
-    * caches key by path alone, so a path whose embeddings are REGENERATED
-    * with a different row count within one JVM — a scale-data rebuild, a
-    * reused temp dir — would silently reuse the stale plane/bit count, and
-    * on a fixture-sized corpus a stale >8 value reads as an opaque
-    * cross-engine mismatch). Every writer of an embeddings table
-    * (ScaleSmoke.ensureData, test data generators) calls this after the
-    * write. */
-  private[graft] def invalidateParamCaches(d: String): Unit = {
-    planeCache.remove(d)
-    cellBitsCache.remove(d)
-    invalidatePqIndex(d)
-  }
+  /** Drop the persisted vector index derived from `d`. Every writer of an
+    * embeddings table (ScaleSmoke.ensureData, test data generators) calls
+    * this after the write. */
+  private[graft] def invalidateParamCaches(d: String): Unit = invalidatePqIndex(d)
 
   /** Deterministic ±1 hyperplane matrix, SplitMix64-mixed per (plane, dim)
     * and MATERIALIZED AS LITERALS in both engines — the sign matrix is
@@ -254,7 +244,7 @@ object Similarity {
 
   /** Per-(vec row) scored centroid cells for IVF assignment. The ≤k
     * per-label centroids are bounded metadata (k·64 floats), so they are
-    * collected ONCE at plan-build time (the monthsCache pattern) and inlined
+    * collected ONCE at plan-build time (the monthsOf pattern) and inlined
     * as a literal array — assignment is then a pure per-row argmax
     * projection: no cross join, no window, no shuffle. Each array entry is
     * struct(c = cosine to that centroid, negCell = -label); struct ordering
@@ -347,17 +337,16 @@ object Similarity {
     * LABEL centroid; only the candidate-join key refines. */
   private val TargetCell = 512
   private val RefinePlaneBase = 1000
-  private val cellBitsCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private[operators] def cellRefineBits(s: SparkSession, d: String): Int =
     // read through the persisted index spec like [[centroidRows]]: the
     // recorded bit count was derived from the same (fingerprint-checked)
     // corpus, so it equals what the count job would recompute
     specMetaIfValid(s, d).map(_.bits).getOrElse(
-      cellBitsCache.computeIfAbsent(d, _ => {
+      SourceState.memo(d, "embeddings.parquet", "cell refine bits") {
         val n = Tables.embeddings(s, d).count()
         math.max(0, math.ceil(math.log(
           math.max(1.0, n.toDouble / (8.0 * TargetCell))) / math.log(2.0) - 1e-9).toInt)
-      }).intValue())
+      })
   /** Probe-side REFINEMENT multi-probe (round-11, from the gate's new
     * `ivf_recall` gauge): restricting a probe to its own refinement
     * sub-bucket costs recall the hyperplane way — a true neighbor lands
@@ -810,21 +799,12 @@ object Similarity {
       cr: Seq[(Int, Seq[Float], Double)], bits: Int): DataFrame = {
     val cents: Seq[(Int, Seq[Float])] = cr.map { case (lab, cv, _) => (lab, cv) }
     val scoredCells = scoredCellsFrom(cr)
-    // conditional widen (optimization round 17, the Dedup.corpus
-    // discipline): the per-row work below — k full-dimension dots for the
-    // cell argmax, the refine projections, the residual zip — inherits the
-    // SOURCE layout, and the sf0.1 embeddings parquet is ONE split, so the
-    // whole encode chain (and s09's two Lloyd training rounds over it) ran
-    // on 1 of 32 cores. One narrow (vec_id-hashed) exchange restores full
-    // width; skipped when the scan is already wide (a 100 TB corpus
-    // arrives as thousands of splits). Per-row results are unaffected.
-    val s = src.sparkSession
-    val parts = s.sessionState.conf.numShufflePartitions
-    val wide =
-      if (src.rdd.getNumPartitions * 2 < parts)
-        src.repartition(parts, col("vec_id"))
-      else src
-    wide
+    // widened on vec_id for the per-row work below — k full-dimension dots
+    // for the cell argmax, the refine projections, the residual zip: the
+    // sf0.1 embeddings parquet is ONE split, so the whole encode chain (and
+    // s09's two Lloyd training rounds over it) ran on 1 of 32 cores. Not
+    // memoized: `src` may be a delta batch rather than a table read.
+    SourceState.widen(src, col("vec_id"))
       .select(col("vec_id"), col("embedding"),
         (-array_max(scoredCells).getField("negCell")).as("cell"))
       .withColumn("cellr", refinedCellCol(col("cell"), col("embedding"), bits))
@@ -1076,8 +1056,8 @@ object Similarity {
     * [[PqParamsTag]]. Every spec writer records it and every reader
     * re-checks it. */
   private def pqSpecFingerprint(d: String): String =
-    Dedup.sourceFingerprint(d, "embeddings.parquet") + "|" +
-      Dedup.sourceFingerprint(d, "documents.parquet") + "|" + PqParamsTag
+    SourceState.fingerprint(d, "embeddings.parquet") + "|" +
+      SourceState.fingerprint(d, "documents.parquet") + "|" + PqParamsTag
 
   /** Attach the document attribute (`lang`) to a code frame — the
     * filtered-search column persisted WITH the codes (s20's scaladoc:
@@ -1134,11 +1114,9 @@ object Similarity {
     new java.util.concurrent.ConcurrentHashMap[String, PqIndexMeta]()
   /** Test hook: forget the in-memory spec metadata for `d` WITHOUT
     * touching catalog or files — the restart-reuse specs use it to
-    * simulate a fresh JVM faithfully (a real restart loses this map, and
-    * the refine-bit cache with it). */
+    * simulate a fresh JVM (a real restart loses this map). */
   private[graft] def forgetPqMetaForTest(d: String): Unit = {
     pqMetaCache.remove(d)
-    cellBitsCache.remove(d)
     Seq(PqDelta1, PqDelta2).foreach(dd => pqDeltaFpCache.remove(deltaKey(d, dd)))
     pqCompactFpCache.remove(d)
   }
@@ -1261,10 +1239,9 @@ object Similarity {
           try Reconcile.deleteRecursively(loc)
           catch { case _: Exception => () }
           // a rebuild means the on-disk spec is absent/stale — any
-          // lingering in-memory meta/bits for `d` is the same vintage and
-          // must not be read through by the training calls below
+          // lingering in-memory meta for `d` is the same vintage and must
+          // not be read through by the training calls below
           pqMetaCache.remove(d)
-          cellBitsCache.remove(d)
           // ADVICE r15 (medium): the DERIVED layers — delta segments
           // encoded against the codebooks this branch is about to drop,
           // and the compacted generation that folded them — are the same
@@ -1324,21 +1301,13 @@ object Similarity {
     * hook, d17's [[Dedup.ensureNearDupIndex]] contract verbatim. */
   private[graft] def ensurePqIndex(
       s: SparkSession, d: String, force: Boolean = false): (String, Double) = {
-    if (force) { invalidatePqIndex(d); cellBitsCache.remove(d) }
+    if (force) invalidatePqIndex(d)
     pqStoredIndex(s, d)
     val mode = vecIndexBuildMode.getOrDefault(d, "none")
     (mode,
       if (mode == "built") Option(vecIndexBuildSec.get(d)).fold(0.0)(_.doubleValue())
       else 0.0)
   }
-
-  private[graft] def codeVecColForTest(meta: PqIndexMeta, m: Int, code: Column): Column =
-    codeVecCol(meta.cbs(m), code)
-  private[graft] def probeSideForTest(s: SparkSession, d: String, meta: PqIndexMeta): DataFrame =
-    refineMultiProbe(
-      residualFrameFrom(s, d, meta.cents, meta.bits)
-        .filter(col("vec_id") % ProbeMod === 0),
-      meta.bits)
 
   /** Reconstructed sub-vector for a stored code column: chained CASE over
     * sub-codebook `cb`'s ≤[[PqK]] literal vectors — bounded metadata, no
@@ -1461,10 +1430,6 @@ object Similarity {
     def xform(c: Column): Column =
       if (seg == 1) reverse(c)
       else concat(slice(c, Dims / 2 + 1, Dims / 2), slice(c, 1, Dims / 2))
-    /** DuckDB twin of [[xform]]. */
-    def xformSql(e: String): String =
-      if (seg == 1) s"list_reverse($e)"
-      else s"($e[${Dims / 2 + 1}:$Dims] || $e[1:${Dims / 2}])"
   }
   private[graft] val PqDelta1 = PqDeltaDef(1, PqDeltaRes, PqDeltaIdOffset)
   private[graft] val PqDelta2 = PqDeltaDef(2, PqDeltaRes2, 2 * PqDeltaIdOffset)

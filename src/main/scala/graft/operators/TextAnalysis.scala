@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.{QueryDef, Stable}
-import graft.tables.Tables
+import graft.tables.{SourceState, Tables}
 
 /** Text-analysis operators for a training-data pipeline, over `documents`:
   * token counting, quality scoring, language-ID (marker-token heuristic),
@@ -15,34 +15,15 @@ object TextAnalysis {
 
   import TextOps._
 
-  /** Conditionally widened documents read (optimization round 17, the
-    * Dedup.corpus discipline) for the SHUFFLE-bearing text operators whose
-    * heavy per-row stage (tokenize + explode) otherwise inherits the
-    * source file layout — the sf0.1 documents parquet is 2 splits, so
-    * bigram/vocab builds ran on 2 of 32 cores. One narrow (doc_id) hash
-    * exchange restores full width; skipped when the scan is already wide
-    * (a 100 TB corpus arrives as thousands of splits). NOT used by the
-    * map-only operators (t01–t05, c02, t25's encode pass): their zero-
-    * shuffle shape is the point (and PlanSpec pins it) — at scale the
-    * scan is wide and map-only is optimal. */
-  private def widenedDocs(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val parts = s.sessionState.conf.numShufflePartitions
-    val widen = docsWidenCache.computeIfAbsent(d,
-      _ => Boolean.box(docs.rdd.getNumPartitions * 2 < parts))
-    if (widen) docs.repartition(parts, col("doc_id")) else docs
-  }
-
-  private val docsWidenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Drop the cached widen decision for `d` — called from
-    * [[Dedup.invalidateParamCaches]] (ADVICE r17: a documents table rebuilt
-    * at a different split count in the same JVM otherwise keeps a stale
-    * widen decision; performance-only, but it skews the timings the scale
-    * gates ratchet on). */
-  private[operators] def invalidateWidenCache(d: String): Unit =
-    docsWidenCache.remove(d)
+  /** Documents widened on doc_id ([[SourceState.widen]]) for the
+    * SHUFFLE-bearing text operators, whose heavy per-row stage (tokenize +
+    * explode) otherwise ran bigram/vocab builds on the sf0.1 scan's 2
+    * splits. NOT used by the map-only operators (t01–t05, c02, t25's
+    * encode pass): their zero-shuffle shape is the point (and PlanSpec
+    * pins it) — at scale the scan is wide and map-only is optimal. */
+  private def widenedDocs(s: SparkSession, d: String): DataFrame =
+    SourceState.widenRead(d, "documents.parquet", "text docs",
+      Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
 
   /** t01 — token/char counting (whitespace tokenization). */
   val t01TokenCount = QueryDef(

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.tables.Tables
+import graft.tables.{SourceState, Tables}
 
 /** Deterministic billing-shaped fact/dim derived from the TPC-H testdata, so
   * the billing kernel (graft.kernel) can be oracle-checked end-to-end: the
@@ -182,17 +182,10 @@ object BillingDemo {
     * aggregation REUSES the exchange (same Exchange count — guide §2.4);
     * the exchange carries only the 5 pruned raw columns (the constant
     * credits_type array and the derived strings are built after it).
-    * Skipped when the scan is already wide (100 TB shape); same per-dir
-    * decision cache as [[widenNarrow]]. */
-  private[queries] def rawFactWidenedForPivot(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val widen = widenCache.computeIfAbsent(dir,
-      _ => Boolean.box(li.rdd.getNumPartitions * 2 < parts))
-    rawFactFrom(
-      if (widen) li.repartition(parts, col("l_orderkey"), col("l_linenumber"))
-      else li)
-  }
+    * Shares [[widenNarrow]]'s decision. */
+  private[queries] def rawFactWidenedForPivot(spark: SparkSession, dir: String): DataFrame =
+    rawFactFrom(widenFact(dir, Tables.lineitem(spark, dir),
+      col("l_orderkey"), col("l_linenumber")))
 
   /** q23's narrow twin: the narrow keys + raw measures + credit ARRAYS
     * (the precomputed c_* columns dropped — the caller re-derives them
@@ -237,30 +230,19 @@ object BillingDemo {
     * replaces (not adds to) the aggregation's ENSURE_REQUIREMENTS exchange
     * — same exchange count, per-row work post-exchange at full width, and
     * the aggregate plans as one complete-mode hash agg (the partial pass
-    * over ~600k rows → ~580k groups saved nothing anyway). Skipped when
-    * the scan is already wide (a 100 TB fact arrives as thousands of
-    * splits — the Dedup.corpus discipline); the decision is cached per
-    * directory and invalidated with the other per-path caches. */
-  private[queries] def widenNarrow(
-      spark: SparkSession, dir: String, df: DataFrame): DataFrame = {
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val widen = widenCache.computeIfAbsent(dir,
-      _ => Boolean.box(df.rdd.getNumPartitions * 2 < parts))
-    if (widen) df.repartition(parts, narrowKeys.map(col): _*) else df
-  }
+    * over ~600k rows → ~580k groups saved nothing anyway). */
+  private[queries] def widenNarrow(dir: String, df: DataFrame): DataFrame =
+    widenFact(dir, df, narrowKeys.map(col): _*)
 
-  private val widenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Drop the cached widen decision for `dir` — called from
-    * [[graft.operators.Dedup.invalidateParamCaches]] so an in-JVM rebuild
-    * of the tables under the same path re-derives the split count. */
-  private[graft] def invalidateWidenCache(dir: String): Unit =
-    widenCache.remove(dir)
+  /** [[SourceState.widen]] for a projection of the lineitem scan under
+    * `dir`: projections keep the scan's splits, so every fact frame shares
+    * one decision (and one planning pass to make it). */
+  private def widenFact(dir: String, df: DataFrame, keys: Column*): DataFrame =
+    SourceState.widenRead(dir, "lineitem.parquet", "fact scan", df, keys: _*)
 
   def fact(spark: SparkSession, dir: String): DataFrame =
     grainFromNarrow(
-      widenNarrow(spark, dir,
+      widenNarrow(dir,
         narrowRaw(spark, dir).drop("credits_type", "credits_amount"))
         .groupBy(narrowKeys.map(col): _*)
         .agg(measures.map(m => sum(m).as(m)).head,
@@ -297,16 +279,14 @@ object BillingDemo {
       |FROM (SELECT range AS rid FROM range(0, 41)) r
       |CROSS JOIN (SELECT DISTINCT strftime(l_shipdate, '%Y-%m') AS month FROM lineitem) m""".stripMargin
 
-  /** Month list for the demo dim, collected ONCE per data directory. The
-    * fact-month set is bounded metadata (≤ dozens of values at any SF), but
-    * leaving it as a subquery embeds a full lineitem scan+distinct in the
-    * dim's plan — which the 8-family rule-match ladder then re-executes once
-    * per broadcast subtree (8 redundant fact scans per kernel query). */
-  private val monthsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
+  /** Month list for the demo dim, collected ONCE per version of the
+    * lineitem table. The fact-month set is bounded metadata (≤ dozens of
+    * values at any SF), but leaving it as a subquery embeds a full lineitem
+    * scan+distinct in the dim's plan — which the 8-family rule-match ladder
+    * then re-executes once per broadcast subtree (8 redundant fact scans
+    * per kernel query). */
   private def monthsOf(spark: SparkSession, dir: String): Seq[String] =
-    monthsCache.computeIfAbsent(dir, _ =>
+    SourceState.memo(dir, "lineitem.parquet", "fact months")(
       Tables.lineitem(spark, dir)
         .select(date_format(col("l_shipdate"), "yyyy-MM").as("month"))
         .distinct().collect().map(_.getString(0)).sorted.toSeq)

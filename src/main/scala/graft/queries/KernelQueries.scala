@@ -257,7 +257,7 @@ object KernelQueries {
     // layout (1.4 s wall on 3 of 32 cores); the widen is keyed by the
     // grouping keys, so the aggregation reuses the exchange (see
     // BillingDemo.widenNarrow)
-    val raw = BillingDemo.widenNarrow(s, d, BillingDemo.narrowRawForArrays(s, d))
+    val raw = BillingDemo.widenNarrow(d, BillingDemo.narrowRawForArrays(s, d))
     val fact = BillingDemo.grainFromNarrow(
       Credits.deriveCredits(raw)
         .groupBy(BillingDemo.narrowKeys.map(col): _*)

@@ -185,18 +185,12 @@ object StreamJobs {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // the kernel is broadcast-joins + per-row expressions all the way
-        // to the sink's repartition, so its compute inherits the SOURCE
-        // file layout: a micro-batch staged as few files (q39's 1-file
-        // staging; a thin real feed likewise) runs the whole kernel on
-        // that many cores. One narrow round-robin shuffle of the raw
-        // batch restores full-width compute; skipped when the source
-        // already arrives wide (the 100 TB feed's many-file batches).
-        val parts = batch.sparkSession.sessionState.conf.numShufflePartitions
-        val wide =
-          if (batch.rdd.getNumPartitions * 2 >= parts) batch
-          else batch.repartition(parts)
-        val out = Conform.conformToTarget(
-          Calculate.calculateWithCredits(wide, dim, extraDiscount), etlTime)
+        // to the sink's repartition, so a micro-batch staged as few files
+        // (q39's 1-file staging; a thin real feed likewise) runs the whole
+        // kernel on that many cores unless widened. Not memoized: each
+        // batch is new data.
+        val out = Conform.conformToTarget(Calculate.calculateWithCredits(
+          graft.tables.SourceState.widen(batch), dim, extraDiscount), etlTime)
         graft.pipeline.Sink.writePartitioned(out, targetPath)
       }
 }

@@ -449,7 +449,6 @@ class DedupSpec extends SparkSpec {
       // fingerprint no longer matches, so serving the old files would be
       // the stale-history bug; it must REBUILD
       write(Seq(1L -> ("one two three four " * 8), 3L -> ("five six seven eight " * 8)))
-      Dedup.invalidateDocsCountOnly(dir)
       spark.catalog.listTables().collect().map(_.name)
         .filter(_.contains("graft_ndidx")).filter(_.contains("graft_d17_fp"))
         .foreach(t => spark.sql(s"DROP TABLE $t"))
