@@ -9,10 +9,13 @@ import org.apache.spark.sql.SparkSession
   * `daily_cron_work` at 05:00, which computes the 4-day lookback window
   * clamped to the month start and recomputes those partitions).
   *
-  * One tick = [[runDaily]]: lookback window → per-day isolated kernel runs →
-  * idempotent partition overwrite → completion/failure alerts. The
-  * reference's tmp-table/double-DELETE dance collapses into
-  * [[Sink.writePartitioned]]'s atomic dynamic-partition overwrite.
+  * One tick = [[runDaily]]: lookback window → one window job, per-day
+  * isolation on failure ([[IsolatedRun.runDays]]) → idempotent partition
+  * overwrite → completion/failure alerts. The reference's per-day loop of
+  * tmp-table/double-DELETE swaps collapses into ONE
+  * [[Sink.writePartitioned]] atomic dynamic-partition overwrite of the
+  * window's day partitions; the days are retried one by one only when
+  * that write fails.
   *
   * The `main` runs one tick by default (cron owns scheduling in a real
   * deployment — one process per tick is the operable shape); `--daemon

@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.time.LocalDate
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** S7 — append-only CSV failure log with header-on-create
@@ -80,16 +82,21 @@ final class HttpAlerter(
     }
 }
 
-/** E1's per-day failure isolation (ref: billing_calculation_service.py:
-  * 464-468: log + CSV + alert, continue with the next day). Each day is an
-  * independent partition-scoped job; one bad day neither blocks nor
-  * corrupts the others (its partition simply isn't overwritten).
+/** E1's window job with the reference's per-day failure isolation (ref:
+  * billing_calculation_service.py:464-468: log + CSV + alert, continue with
+  * the next day). One window job, per-day isolation on failure: the whole
+  * day range is computed and written as ONE dynamic-partition overwrite;
+  * only if that throws — a failed overwrite commits no partition — is each
+  * day retried as its own job, so one bad day neither blocks nor corrupts
+  * the others (its partition simply isn't overwritten).
   */
 object IsolatedRun {
 
-  /** Runs `computeDay` for each day, writing each result independently;
-    * returns the failed days. The default compute is the full kernel slice
-    * for that day ([[Jobs.computeMonth]]). */
+  /** Writes `compute(days.head, days.last + 1)` in one overwrite; if that
+    * fails, writes `compute(day, day + 1)` for each day independently,
+    * logging and alerting each failed day. Returns the failed days. `days`
+    * must be consecutive. The default compute is the kernel slice for the
+    * range ([[Jobs.computeMonth]]). */
   def runDays(
       spark: SparkSession,
       fact: DataFrame,
@@ -100,26 +107,44 @@ object IsolatedRun {
       failureCsv: String = "failures.csv",
       alerter: Alerter = LogAlerter,
       extraDiscount: Map[String, Double] = Map.empty,
-      computeDay: Option[LocalDate => DataFrame] = None): Seq[LocalDate] = {
-    val compute = computeDay.getOrElse((day: LocalDate) =>
+      computeRange: Option[(LocalDate, LocalDate) => DataFrame] = None): Seq[LocalDate] = {
+    require(days.zip(days.drop(1)).forall { case (a, b) => b == a.plusDays(1) },
+      s"days must be consecutive: $days")
+    val compute = computeRange.getOrElse((from: LocalDate, until: LocalDate) =>
       Jobs.computeMonth(
-        fact, dim, invoiceMonth, dayRange = Some((day, day.plusDays(1))),
+        fact, dim, invoiceMonth, dayRange = Some((from, until)),
         extraDiscount = extraDiscount))
-    val failed = days.filter { day =>
+    def write(from: LocalDate, until: LocalDate): Unit =
+      Sink.writePartitioned(compute(from, until), targetPath,
+        sortCols = Seq("billing_account_id"))
+    val windowFailed = days.nonEmpty && (
+      try { write(days.head, days.last.plusDays(1)); false }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(
+            s"[isolated-run] window ${days.head}..${days.last} of $invoiceMonth failed " +
+              s"(${errorText(e)}); retrying day by day")
+          true
+      })
+    val failed = if (!windowFailed) Nil else days.filter { day =>
       try {
-        Sink.writePartitioned(compute(day), targetPath,
-          sortCols = Seq("billing_account_id"))
+        write(day, day.plusDays(1))
         false
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           FailureLog.append(failureCsv,
-            Seq(invoiceMonth, day.toString, e.getMessage),
+            Seq(invoiceMonth, day.toString, errorText(e)),
             Seq("invoice_month", "usage_day", "error"))
-          alerter.send(s"billing day $day of $invoiceMonth failed: ${e.getMessage}")
+          alerter.send(s"billing day $day of $invoiceMonth failed: ${errorText(e)}")
           true
       }
     }
     if (failed.isEmpty) alerter.send(s"billing month $invoiceMonth complete (${days.size} days)")
     failed
   }
+
+  /** An exception's message, or its class name when it has none (a bare
+    * `NullPointerException`): the failure CSV and alert need a non-null text. */
+  private def errorText(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
 }
