@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line on stdout (driver contract).
   *
   * Each declared query is executed against `SPARK_GRAFT_SF_DIR` and fully
@@ -94,14 +92,6 @@ object Bench {
   private[graft] def bestObservation(runs: Seq[(Double, Long)]): (Double, Long) =
     runs.minBy(_._1)
 
-  /** cumulative host steal ticks from /proc/stat (column 8), -1 if absent */
-  private def stealTicks(): Long =
-    try {
-      val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+")
-      if (cpu.length > 8) cpu(8).toLong else -1L
-    } catch { case _: Exception => -1L }
-
   private def processCpuSeconds(): (Double, Double) = {
     import java.lang.management.ManagementFactory
     val os = ManagementFactory.getOperatingSystemMXBean
@@ -116,22 +106,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(Measure.cpus(32))
 
-    def runNoop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    val steal0 = stealTicks()
-    try runNoop(SparkEntry.entry(spark))
+    val steal0 = ScaleSmoke.stealTicks()
+    try Measure.noop(SparkEntry.entry(spark))
     catch {
       case e: Throwable =>
         // a broken flagship means the first measured query absorbs JVM
@@ -163,7 +142,7 @@ object Bench {
     (Seq("t01_token_count", "s03_centroids") ++ sideEffectWarmed.toSeq.sorted)
       .foreach { n =>
         SparkEntry.benchQueries.get(n).foreach { f =>
-          try runNoop(f(spark, sfDir))
+          try Measure.noop(f(spark, sfDir))
           catch { case e: Throwable =>
             System.err.println(s"[bench] warmup $n failed: ${e.getMessage}")
             if (sideEffectWarmed(n))
@@ -184,70 +163,42 @@ object Bench {
     // contaminates at most one run per query, so the median/min stay
     // interpretable without a re-run
     val perRun = Array.fill(qs.size)(Vector.empty[(Double, Long)])
-    def timedRun(name: String)(run: => Unit): Option[(Double, Long)] = {
-      // queries may cache intermediates — drop them so one run's cache
-      // doesn't serve the next run (or pressure the next query's heap);
-      // release leftover pinned localCheckpoint blocks (d07/d12's final
-      // frames are unevictable storage that squeezes later queries'
-      // execution memory into spill — the ×10 gate's q40/q47 lesson);
-      // then collect, so a measurement never pays for a predecessor's
-      // surviving garbage (unreclaimed broadcasts pin heap until the next
-      // full GC — see ScaleSmoke.timed)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      val s0 = stealTicks()
-      val b0 = ScaleSmoke.hostBusyTicks(); val o0 = ScaleSmoke.ownBusyTicks()
-      val t0 = System.nanoTime()
+    // streaming drains flush checkpoints through kernel worker threads
+    // whose CPU is indistinguishable from a foreign process — exempt them
+    // from the hot-foreign trigger or every drain self-reports as
+    // contaminated and retry-loops
+    val selfIoExempt = Set("q39_kernel_streaming", "q44_windowed_streaming",
+      "q46_windowed_append_sink", "q48_sessionize_append_sink",
+      "q50_interval_join_stream", "q51_dedup_stream")
+    def timedRun(name: String)(run: => Unit): Option[(Double, Long)] =
       try {
-        run
-        val sec = (System.nanoTime() - t0) / 1e9
-        val s1 = stealTicks()
-        val b1 = ScaleSmoke.hostBusyTicks(); val o1 = ScaleSmoke.ownBusyTicks()
+        val t = Measure.timed(spark)(run)
         // the per-run contamination channel counts hypervisor steal PLUS
         // hot foreign load (CPU burned by concurrent processes beyond
         // ~half a core for the run) — concurrent JVM workloads convoy the
         // big hash aggregates up to 20× with ZERO steal (the root-caused
         // ladder flakiness, docs/LADDER_INVESTIGATION.md), so a run's
-        // quietness claim must cover both
-        // hostBusyTicks SUMS the steal field, so subtract the window's
-        // steal delta or `s1 - s0 + hotForeign` below double-counts steal
-        // on a steal-y host (ADVICE r10: queries_steal_runs read ≈2×
-        // steal, non-physical)
-        val foreign =
-          if (b0 >= 0 && b1 >= 0 && o0 >= 0 && o1 >= 0)
-            math.max(0L, (b1 - b0) - (o1 - o0) -
-              (if (s0 >= 0 && s1 >= 0) math.max(0L, s1 - s0) else 0L))
-          else 0L
-        // streaming drains flush checkpoints through kernel worker
-        // threads whose CPU is indistinguishable from a foreign process —
-        // exempt them from the hot-foreign trigger or every drain
-        // self-reports as contaminated and retry-loops
-        val selfIoExempt = Set("q39_kernel_streaming", "q44_windowed_streaming",
-          "q46_windowed_append_sink", "q48_sessionize_append_sink",
-          "q50_interval_join_stream", "q51_dedup_stream")
-        // startsWith: calibration probes time as "<name> (machinery cal)";
-        // the 25-tick absolute floor keeps sub-second runs from flagging
-        // harness noise (a few ticks of shell/driver activity) as foreign
+        // quietness claim must cover both. startsWith: calibration probes
+        // time as "<name> (machinery cal)"; the 25-tick absolute floor
+        // keeps sub-second runs from flagging harness noise (a few ticks
+        // of shell/driver activity) as foreign
         val hotForeign =
-          if (foreign > math.max((sec * 50).toLong, 25L) &&
+          if (t.foreign > math.max((t.sec * 50).toLong, 25L) &&
               !selfIoExempt.exists(name.startsWith))
-            foreign
+            t.foreign
           else 0L
         if (hotForeign > 0)
           System.err.println(
-            f"[bench] $name: foreign host load $foreign ticks in a " +
-              f"$sec%.1f s run — concurrent process, measurement suspect")
-        Some((sec,
-          if (s0 >= 0 && s1 >= 0) s1 - s0 + hotForeign
+            f"[bench] $name: foreign host load ${t.foreign} ticks in a " +
+              f"${t.sec}%.1f s run — concurrent process, measurement suspect")
+        Some((t.sec,
+          if (t.steal >= 0) t.steal + hotForeign
           else if (hotForeign > 0) hotForeign
           else -1L))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         None
       }
-    }
     // machinery calibration (round-8 verdict #1): min of a few epsilon
     // drains per streaming query = its fixed-latency floor; timed runs
     // below report measured − floor (clamped at 0). Runs BEFORE the
@@ -268,7 +219,7 @@ object Bench {
       if (excluded.contains(n)) None
       else {
         val obs = (1 to calRuns).flatMap(_ =>
-          timedRun(s"$n (machinery cal)")(runNoop(f(spark, sfDir))).map(_._1))
+          timedRun(s"$n (machinery cal)")(Measure.noop(f(spark, sfDir))).map(_._1))
         if (obs.isEmpty) { System.err.println(s"[bench] $n: calibration failed — timing unadjusted"); None }
         else Some(n -> obs.min)
       }
@@ -280,7 +231,7 @@ object Bench {
       }
 
     for (_ <- 1 to runs; ((name, fn), i) <- qs.zipWithIndex)
-      timedRun(name)(runNoop(fn(spark, sfDir))).foreach(o => perRun(i) :+= adjust(name, o))
+      timedRun(name)(Measure.noop(fn(spark, sfDir))).foreach(o => perRun(i) :+= adjust(name, o))
 
     // steal-reactive retry (round-7 verdict #1): queries whose EVERY run
     // was steal-contaminated get bounded quiet re-runs appended, stopping
@@ -291,7 +242,7 @@ object Bench {
       retriedNames += name
       var tries = 0
       while (tries < maxRetries && allContaminated(perRun(i))) {
-        timedRun(name)(runNoop(fn(spark, sfDir))).foreach(o => perRun(i) :+= adjust(name, o))
+        timedRun(name)(Measure.noop(fn(spark, sfDir))).foreach(o => perRun(i) :+= adjust(name, o))
         tries += 1
       }
     }
@@ -299,7 +250,7 @@ object Bench {
       val measured = perRun(i)
       val times = measured.map(_._1).sorted
       val median = if (times.isEmpty) -1.0 else times(times.size / 2)
-      val min = if (times.isEmpty) -1.0 else times.head
+      val min = if (measured.isEmpty) -1.0 else bestObservation(measured)._1
       // per-query steal across all its runs: round 3's q24 "12× regression"
       // was entirely a host-steal burst (71.7s contaminated vs 5.4s clean) —
       // this field makes that diagnosable per query instead of per run
@@ -318,19 +269,8 @@ object Bench {
     // the sf0.1 measurement window closes HERE — capture its steal/cpu
     // evidence before the 10× phase runs, or host_steal_ticks stops
     // answering "was the sf0.1 bench quiet" (ADVICE r6)
-    val steal1 = stealTicks()
+    val steal1 = ScaleSmoke.stealTicks()
     val (cpuUser, cpuSys) = processCpuSeconds()
-
-    /** JSON string escape: backslashes, quotes, and control characters —
-      * Spark exception messages routinely carry newlines and Windows-style
-      * paths that would otherwise break the emitted JSON line. */
-    def jsonEscape(s: String): String =
-      String.valueOf(s).flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
 
     // The ×10 scale10 section is RETIRED (round-12 verdict #4): two
     // consecutive rounds it printed phantom regressions (q21 at 14.1×
@@ -359,7 +299,7 @@ object Bench {
     val qRetried = retriedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qMachineryCal = fmt(machineryCal.toSeq.sortBy(_._1))
     val qExcluded = excluded.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":\"" + jsonEscape(v) + "\"" }
+      .map { case (k, v) => "\"" + k + "\":\"" + Measure.jsonEscape(v) + "\"" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // value_min: sum of per-query MINIMA — the steal-immune headline;
@@ -402,7 +342,7 @@ object Bench {
         s""""n_queries":${results.size},"runs":$runs,""" +
         s""""n_unstable":${results.count(_._6)},"n_excluded":${excluded.size},""" +
         s""""n_retried":${retriedNames.size},""" +
-        s""""full_json":"${jsonEscape(out)}","cpu_user_sec":$cpuUser,""" +
+        s""""full_json":"${Measure.jsonEscape(out)}","cpu_user_sec":$cpuUser,""" +
         s""""host_steal_ticks":$stealDelta,"sf":"$sfDir"}"""
     val headlinePrefix =
       s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","queries":"""

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write each named query's `explain("formatted")` output to
   * `<outdir>/<query>_<suffix>.txt` — the plans/rNN before/after evidence
   * the optimization rounds commit (round-17 verdict #8: after-plan dumps
@@ -9,10 +7,11 @@ import org.apache.spark.sql.SparkSession
   *
   *   runMain graft.PlanDump <outdir> <suffix> <query> [query ...]
   *
-  * Same session conf as Bench (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus, AQE on), so the dumped plan is the planned shape the
-  * bench executes (AQE's runtime re-optimization is not visible in a
-  * pre-execution dump; Exchange counts and join strategies are).
+  * Same session as Bench ([[Measure.session]]: local[$SPARK_GRAFT_CPUS],
+  * default 32, shuffle partitions = cpus, AQE on), so the dumped plan is
+  * the planned shape the bench executes (AQE's runtime re-optimization is
+  * not visible in a pre-execution dump; Exchange counts and join
+  * strategies are).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,15 +20,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(Measure.cpus(32))
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>
       val df = SparkEntry.benchQueries(n)(spark, sfDir)

@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: run named queries from [[SparkEntry.queries]] in one JVM,
-  * print executed-plan size and 2 timed runs each (cache cleared between
-  * runs). The minimal harness for "is this query slow, or was the bench
-  * contaminated?" — e.g. `runMain graft.Probe q22_kernel_full
-  * q24_kernel_sql_variant` with `SPARK_GRAFT_SF_DIR` set.
+  * print executed-plan size and 2 timed runs each through
+  * [[Measure.timed]] (caches and pinned RDDs dropped and the heap
+  * collected before each run; wall seconds plus steal and foreign ticks)
+  * on `local[$SPARK_GRAFT_CPUS]`, default 32. The minimal harness for "is
+  * this query slow, or was the bench contaminated?" — e.g. `runMain
+  * graft.Probe q22_kernel_full q24_kernel_sql_variant` with
+  * `SPARK_GRAFT_SF_DIR` set.
   *
   * `--jobs` additionally prints, for the SECOND timed run of each query,
   * every Spark job it launched (wall seconds + summed task time + job
@@ -89,22 +90,12 @@ object Probe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val b0 = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // ad-hoc conf overrides for A/B probes, e.g.
     // SPARK_GRAFT_PROBE_CONF="spark.sql.codegen.wholeStage=false"
-    val spark = sys.env.get("SPARK_GRAFT_PROBE_CONF")
-      .map(_.split(",").filter(_.contains("=")).foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }).getOrElse(b0)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def runNoop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    val conf = sys.env.get("SPARK_GRAFT_PROBE_CONF").toSeq
+      .flatMap(_.split(",").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = Measure.session(Measure.cpus(32), conf: _*)
     // `--explain` prints each query's formatted physical plan (codegen
     // span numbering included) instead of only the plan size
     val explain = args.contains("--explain")
@@ -113,20 +104,16 @@ object Probe {
     val listener = new JobListener
     if (jobs) spark.sparkContext.addSparkListener(listener)
     // warmup
-    runNoop(SparkEntry.entry(spark))
+    Measure.noop(SparkEntry.entry(spark))
     names.foreach { n =>
       val fn = SparkEntry.benchQueries(n)
       val df = fn(spark, sfDir)
       println(s"===== $n plan size: ${df.queryExecution.executedPlan.toString.length}")
       if (explain) df.explain("formatted")
       (1 to 2).foreach { i =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
         if (jobs && i == 2) { listener.drain(); listener.enabled = true }
-        val t0 = System.nanoTime()
-        runNoop(fn(spark, sfDir))
-        println(f"$n run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        val t = Measure.timed(spark)(Measure.noop(fn(spark, sfDir)))
+        println(f"$n run$i: ${t.sec}%.2f s (steal ${t.steal}, foreign ${t.foreign} ticks)")
         if (jobs && i == 2) {
           listener.enabled = false
           // listener events are async — give the bus a moment to drain

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Dedup, Similarity}
+
 /** 10× scale-stress gate (round-6 verdict item #1): the plan assertions in
   * PlanSpec hold at sf0.1 (~600k rows); this gate demonstrates behavior
   * when the data outgrows the single-partition/broadcast comfort zone.
@@ -498,6 +500,27 @@ object ScaleSmoke {
     * first ×100 artifact carrying the row. */
   val PqCompactAbsScale100Sec = 10.0
 
+  /** A forced single-shot build gated as its own entry next to
+    * `gateQuery` (round-12 verdict #2 — warming a build untimed made its
+    * regressions invisible): the persisted artifact is rebuilt from
+    * scratch on each side, min of 2 runs (a single-shot write has no
+    * retry machinery, and contamination only inflates), each run must
+    * report `expect`, and the entry is gated by the ratio ratchet at ×10
+    * and by `absScale100` scale-side seconds at ×100, where the base is a
+    * fully-cached write swinging 2.6× while the scale side is stable (the
+    * [[AbsoluteScale100Sec]] reasoning; the ratio stays recorded). */
+  private final case class ForcedBuild(entry: String, gateQuery: String,
+      expect: String, absScale100: Double, run: (SparkSession, String) => (String, Double))
+
+  /** d17's near-dup index build, s16's vector-index train + encode +
+    * write, s17's frozen-spec delta append (the base index is reused, so
+    * the timing isolates the append) and s18's segment fold. */
+  private val ForcedBuilds: Seq[ForcedBuild] = Seq(
+    ForcedBuild("d17_index_build", "d17_neardup_indexed", "built", IndexBuildAbsScale100Sec, Dedup.ensureNearDupIndex(_, _, force = true)),
+    ForcedBuild("s16_index_build", "s16_ivfpq_indexed", "built", PqIndexBuildAbsScale100Sec, Similarity.ensurePqIndex(_, _, force = true)),
+    ForcedBuild("s17_delta_append", "s17_ivfpq_append", "appended", PqDeltaAppendAbsScale100Sec, Similarity.ensurePqDelta(_, _, force = true)),
+    ForcedBuild("s18_compact", "s18_ivfpq_compact", "compacted", PqCompactAbsScale100Sec, Similarity.ensurePqCompact(_, _, force = true)))
+
   /** Rounds executed by the t24 merge-loop FLATNESS demonstration
     * (round-13 verdict #4): 8× the oracle entry's [[graft.operators
     * .TextAnalysis]] round budget and 4× its lineage-truncation period,
@@ -620,6 +643,15 @@ object ScaleSmoke {
         case b if tScale > b =>
           f"$name: scale-side time $tScale%.1f s exceeds the absolute x100 bound $b%.1f s"
       }
+    else None
+
+  /** The flat-occupancy contract of the candidate-mass gauges (s02 LSH,
+    * d03 band, d04 block, d15 fuzzy, q58 serving ring-row), pure for the
+    * spec: Some(violation) when the scale-side gauge exceeds 3× its base
+    * value (floored at 1) — the operator's corpus scaling was `lost`. */
+  def occupancyViolation(label: String, base: Double, scale: Double, lost: String): Option[String] =
+    if (scale > 3.0 * math.max(base, 1.0))
+      Some(f"$label grew to $scale%.1f at x$Copies (base $base%.1f, bound 3x) — $lost")
     else None
 
   /** Quiet ×100 BASE-side envelopes (seconds) for the same family — the
@@ -943,7 +975,8 @@ object ScaleSmoke {
        |  machinery.
        |- `foreign_ticks` — CPU ticks burned by OTHER processes on the box
        |  during each query's measurements (host busy minus this process's
-       |  own utime+stime; the steal counter only sees the hypervisor).
+       |  own utime+stime minus hypervisor steal, which `steal_ticks`
+       |  records; the steal counter alone misses in-VM processes).
        |  Concurrent JVM workloads convoy the big hash aggregates up to 20×
        |  on a byte-identical plan — a blown ratio with hot foreign_ticks is
        |  contamination, not a regression (docs/LADDER_INVESTIGATION.md).
@@ -1089,51 +1122,52 @@ object ScaleSmoke {
        |""".stripMargin
   }
 
-  private[graft] def stealTicks(): Long =
+  /** Host CPU counters from one parse of the aggregate `cpu ` line of
+    * /proc/stat: (busy, steal), -1 each if unreadable. Busy is
+    * user+nice+system+irq+softirq+steal across all cpus. The busy delta
+    * over a measurement, minus THIS process's own utime+stime delta and
+    * the steal delta, is FOREIGN load ([[Measure.foreignTicks]]) — CPU
+    * eaten by concurrent processes on the box. The steal counter only
+    * sees the hypervisor; in-VM oversubscription (a second 32-thread JVM)
+    * is invisible to it, yet it is exactly the trigger that convoys the
+    * ladder-class hash aggregates 8-20× (docs/LADDER_INVESTIGATION.md). */
+  private[graft] def hostTicks(): (Long, Long) =
     try {
-      val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+")
-      if (cpu.length > 8) cpu(8).toLong else -1L
-    } catch { case _: Exception => -1L }
-
-  /** Total host busy ticks (user+nice+system+irq+softirq+steal across all
-    * cpus). The delta over a measurement, minus THIS process's own
-    * utime+stime delta, is FOREIGN load — CPU eaten by concurrent
-    * processes on the box. The steal counter only sees the hypervisor;
-    * in-VM oversubscription (a second 32-thread JVM) is invisible to it,
-    * yet it is exactly the trigger that convoys the ladder-class hash
-    * aggregates 8-20× (docs/LADDER_INVESTIGATION.md). */
-  private[graft] def hostBusyTicks(): Long =
-    try {
-      val f = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+")
+      val src = scala.io.Source.fromFile("/proc/stat")
+      val f = try src.getLines().find(_.startsWith("cpu ")).get.trim.split("\\s+")
+        finally src.close()
       if (f.length > 8)
-        f(1).toLong + f(2).toLong + f(3).toLong + f(6).toLong + f(7).toLong + f(8).toLong
-      else -1L
-    } catch { case _: Exception => -1L }
+        (f(1).toLong + f(2).toLong + f(3).toLong + f(6).toLong + f(7).toLong + f(8).toLong,
+          f(8).toLong)
+      else (-1L, -1L)
+    } catch { case _: Exception => (-1L, -1L) }
 
-  /** This process's own utime+stime ticks. */
-  private[graft] def ownBusyTicks(): Long =
+  private[graft] def hostBusyTicks(): Long = hostTicks()._1
+  private[graft] def stealTicks(): Long = hostTicks()._2
+
+  /** This process's fault and CPU counters (utime/stime in USER_HZ ticks),
+    * -1 each when /proc/self/stat is unreadable. */
+  final case class SelfStat(minflt: Long, majflt: Long, utime: Long, stime: Long) {
+    def busy: Long = if (utime < 0 || stime < 0) -1L else utime + stime
+    def -(o: SelfStat): SelfStat =
+      SelfStat(minflt - o.minflt, majflt - o.majflt, utime - o.utime, stime - o.stime)
+  }
+
+  private[graft] def selfStat(): SelfStat =
     try {
       val s = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/self/stat")))
+      // comm may contain spaces/parens — fields start after the last ')';
+      // post-comm 0-indexed: minflt=7, majflt=9, utime=11, stime=12
       val f = s.substring(s.lastIndexOf(')') + 2).split(" ")
-      f(11).toLong + f(12).toLong
-    } catch { case _: Exception => -1L }
+      SelfStat(f(7).toLong, f(9).toLong, f(11).toLong, f(12).toLong)
+    } catch { case _: Exception => SelfStat(-1L, -1L, -1L, -1L) }
 
-  /** JSON string escape for violation messages — exception text riding in
-    * a violation can carry quotes/newlines/backslashes that would break
-    * the artifact (the Bench r6-ADVICE bug class). */
-  private def jsonEscape(s: String): String =
-    String.valueOf(s).flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  /** This process's own utime+stime ticks. */
+  private[graft] def ownBusyTicks(): Long = selfStat().busy
 
   private def violationsJson(vs: Seq[String]): String =
-    vs.map("\"" + jsonEscape(_) + "\"").mkString("[", ",", "]")
+    vs.map("\"" + Measure.jsonEscape(_) + "\"").mkString("[", ",", "]")
 
   /** Shape violations in a 10×-scale plan: a cartesian/nested-loop join
     * anywhere, or (kernel queries) a lost broadcast ladder. Mirrors
@@ -1196,82 +1230,31 @@ object ScaleSmoke {
     // shuffle partitions scale with the DATA so per-task sort state stays
     // flat (the q22/d02 OOMs at ×100 were 32 slots × ×100-sized
     // partitions). AQE coalesces the excess partitions at small scale.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", if (Copies > 10) "16" else "32")
-    val shufflePartitions =
-      math.max(cpus.toInt, math.min(512, 32 * Copies / 10))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-    if (Copies > 10)
-      builder.config("spark.unsafe.sorter.spill.read.ahead.enabled", "false")
-    val spark = builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Measure.cpus(if (Copies > 10) 16 else 32)
+    val shufflePartitions = math.max(cpus, math.min(512, 32 * Copies / 10))
+    val spark = Measure.session(cpus,
+      Seq("spark.sql.shuffle.partitions" -> shufflePartitions.toString) ++
+        (if (Copies > 10) Seq("spark.unsafe.sorter.spill.read.ahead.enabled" -> "false")
+         else Nil): _*)
     val heap = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     System.err.println(s"[scale] driver heap ${heap}MB, base=$base")
 
-    def runNoop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     // SPARK_GRAFT_SCALE_DIAG=1: per-measurement process CPU/fault deltas
     // from /proc/self/stat (utime/stime in USER_HZ ticks, minor/major
     // faults) on stderr — the discriminator for the ladder investigation
     // (slow runs bill ~1.1k CPU-s of SYSTEM time on ~50 s wall; see
     // docs/LADDER_INVESTIGATION.md).
     val diagOn = sys.env.get("SPARK_GRAFT_SCALE_DIAG").contains("1")
-    def procSelfStat(): Array[Long] =
-      try {
-        val s = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/stat")))
-        // comm may contain spaces/parens — fields start after the last ')'
-        val f = s.substring(s.lastIndexOf(')') + 2).split(" ")
-        // post-comm 0-indexed: minflt=7, majflt=9, utime=11, stime=12
-        Array(f(7).toLong, f(9).toLong, f(11).toLong, f(12).toLong)
-      } catch { case _: Exception => Array(-1L, -1L, -1L, -1L) }
-    def timed(f: => Unit): (Double, Long) = {
-      spark.catalog.clearCache()
-      // ALSO release leftover persistent RDDs: the iterative dedup
-      // operators (d07/d12) leave their final `localCheckpoint` frame
-      // pinned — localCheckpoint cuts lineage, so its blocks are
-      // UNEVICTABLE storage that neither clearCache (catalog-level) nor
-      // GC touches. Those pinned blocks shrink the unified pool's
-      // execution side for every LATER measurement, and whichever big
-      // shuffle/broadcast query tips into spill first reads 15-20× slow
-      // on a byte-identical plan — observed intermittently on q47 and
-      // q40 (position-dependent, JVM-persistent through 3 in-JVM retries,
-      // absent in fresh-JVM isolation). Blocking unpersist makes each
-      // measurement start from an EMPTY storage pool; a query's own
-      // in-flight checkpoints remain its own timed cost.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // full GC before the clock starts: by the 16th gate query the 4 GiB
-      // heap carries every predecessor's surviving garbage (AQE/listener
-      // state, unreclaimed broadcasts pinned until the next full GC), and
-      // a measurement taken against that heap charges THIS query for THAT
-      // garbage — observed as q47's ladder timing 12-20× only when ≥10
-      // queries precede it (clean 1.2-1.8× in five isolation subsets, plan
-      // byte-identical to q21's). The ratio gate exists to catch scaling
-      // regressions in the measured query, so each measurement starts from
-      // a collected heap; a REAL regression survives GC just fine.
-      System.gc()
-      val d0 = if (diagOn) procSelfStat() else null
-      val s0 = stealTicks(); val t0 = System.nanoTime()
-      f
-      val s1 = stealTicks()
-      val wall = (System.nanoTime() - t0) / 1e9
-      if (diagOn && d0 != null) {
-        val d1 = procSelfStat()
+    def timed(f: => Unit): Measure.Timing = {
+      val t = Measure.timed(spark)(f)
+      if (diagOn) {
         val hz = 100.0 // USER_HZ on linux
         System.err.println(
-          f"[diag] wall=$wall%.2fs utime=${(d1(2) - d0(2)) / hz}%.1fs " +
-            f"stime=${(d1(3) - d0(3)) / hz}%.1fs " +
-            s"minflt=${d1(0) - d0(0)} majflt=${d1(1) - d0(1)}")
+          f"[diag] wall=${t.sec}%.2fs utime=${t.self.utime / hz}%.1fs " +
+            f"stime=${t.self.stime / hz}%.1fs " +
+            s"minflt=${t.self.minflt} majflt=${t.self.majflt}")
       }
-      // -1 means "steal unknown" (no /proc/stat), not "quiet host" —
-      // propagate the sentinel instead of reporting a phantom 0
-      (wall, if (s0 >= 0 && s1 >= 0) s1 - s0 else -1L)
+      t
     }
 
     // one-off adversarial-duplication mode: candidate-pair accounting on
@@ -1279,7 +1262,6 @@ object ScaleSmoke {
     // SPARK_GRAFT_SCALE_ADVERSARIAL=1 or arg "adversarial")
     if (sys.env.get("SPARK_GRAFT_SCALE_ADVERSARIAL").contains("1") ||
         args.contains("adversarial")) {
-      import graft.operators.Dedup
       val adv = ensureAdversarialData(spark, base)
       var v = Vector.empty[String]
       val (naiveBase, stoppedBase, docsBase) = Dedup.candidatePairStats(spark, base)
@@ -1293,7 +1275,7 @@ object ScaleSmoke {
       // d08 end-to-end on the adversarial corpus — the stop-listed join
       // must COMPLETE comfortably (its candidate mass is `stopped`)
       val d08fn = SparkEntry.queries("d08_dedup_stoplist")
-      val (tD08, _) = timed(runNoop(d08fn(spark, adv)))
+      val tD08 = timed(Measure.noop(d08fn(spark, adv))).sec
       // SIGNAL preservation (ADVICE r7): the boilerplate block is shingle-
       // disjoint from the base, so the base corpus's document frequencies
       // are untouched — d08 on the mixed corpus restricted to base ids
@@ -1363,7 +1345,7 @@ object ScaleSmoke {
     }
 
     val dir = ensureData(spark, base)
-    try runNoop(SparkEntry.entry(spark)) // absorb JVM/codegen init
+    try Measure.noop(SparkEntry.entry(spark)) // absorb JVM/codegen init
     catch { case e: Throwable => System.err.println(s"[scale] warmup failed: $e") }
 
     var violations = Vector.empty[String]
@@ -1422,27 +1404,51 @@ object ScaleSmoke {
     // blown ratio is diagnosable as contamination vs regression.
     val foreignByQuery = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     def timedQ(name: String)(f: => Unit): (Double, Long) = {
-      val b0 = hostBusyTicks(); val o0 = ownBusyTicks()
-      val r = timed(f)
-      val b1 = hostBusyTicks(); val o1 = ownBusyTicks()
-      if (b0 >= 0 && b1 >= 0 && o0 >= 0 && o1 >= 0) {
-        val foreign = math.max(0L, (b1 - b0) - (o1 - o0))
-        foreignByQuery(name) = foreignByQuery.getOrElse(name, 0L) + foreign
+      val t = timed(f)
+      if (t.foreign >= 0) {
+        foreignByQuery(name) = foreignByQuery.getOrElse(name, 0L) + t.foreign
         // > ~half a core for the whole run, floored at 25 ticks so
         // sub-second runs don't flag harness noise
-        if (foreign > math.max((r._1 * 50).toLong, 25L))
+        if (t.foreign > math.max((t.sec * 50).toLong, 25L))
           System.err.println(
-            f"[scale] $name: foreign host load $foreign ticks during a " +
-              f"${r._1}%.1f s run — concurrent process, measurement suspect")
+            f"[scale] $name: foreign host load ${t.foreign} ticks during a " +
+              f"${t.sec}%.1f s run — concurrent process, measurement suspect")
       }
-      r
+      (t.sec, t.steal)
     }
+    // one [[ForcedBuild]] entry: min of 2 forced runs per side, published
+    // under `index_build`; returns the scale-side seconds when it passed
+    // its status check
+    def forcedBuild(fb: ForcedBuild): Option[Double] =
+      try {
+        def min2(d: String): (String, Double) = (1 to 2).map(_ => fb.run(spark, d)).minBy(_._2)
+        val (mb, sb) = min2(base)
+        val (ms, ss) = min2(dir)
+        if (mb != fb.expect || ms != fb.expect) {
+          violations :+= s"${fb.entry}: forced run did not return ${fb.expect} (base=$mb, scale=$ms)"
+          None
+        } else {
+          val br = ss / math.max(sb, 0.001)
+          System.err.println(f"[scale] ${fb.entry}: base $sb%.2fs scale $ss%.2fs ratio $br%.2f")
+          indexBuildRows ++= Seq(s"${fb.entry}_base_sec" -> sb,
+            s"${fb.entry}_scale_sec" -> ss, s"${fb.entry}_ratio" -> br)
+          if (Copies == 100) {
+            indexBuildRows :+= (s"${fb.entry}_abs_scale_bound" -> fb.absScale100)
+            if (ss > fb.absScale100)
+              violations :+= f"${fb.entry}: scale-side run $ss%.1f s exceeds the absolute x100 bound ${fb.absScale100}%.1f s"
+          } else violations ++= ratioViolation(fb.entry, br)
+          Some(ss)
+        }
+      } catch { case e: Throwable =>
+        violations :+= s"${fb.entry}: ${e.getClass.getSimpleName}: ${e.getMessage}"
+        None
+      }
     val rows = gateSet.map { name =>
       System.err.println(s"[scale] gate query: $name")
       foreignByQuery(name) = 0L
       val fn = SparkEntry.queries(name)
       val floor = streamingProbes.get(name).map { probe =>
-        val f = (1 to 2).map(_ => timed(runNoop(probe(spark, base)))._1).min
+        val f = (1 to 2).map(_ => timed(Measure.noop(probe(spark, base))).sec).min
         System.err.println(f"[scale] $name machinery floor: $f%.2fs")
         streamingFloors :+= (s"${name}_floor" -> f)
         f
@@ -1457,170 +1463,37 @@ object ScaleSmoke {
         if (floor > 0 && t < rawMin(side)) rawMin(side) = t
         (math.max(t - floor, 0.001), s)
       }
-      // d17's one-time index build is a GATED TIMING ENTRY of its own
-      // (round-12 verdict #2 — warming it untimed made a build regression
-      // invisible): force a from-scratch build per side, record both
-      // times and gate their ratio like any other entry. The d17 timed
-      // runs below then measure the read-back shape against the fresh
-      // index, exactly as before.
-      if (name == "d17_neardup_indexed") {
-        try {
-          // min-of-2 forced builds per side: the build is a single-shot
-          // history pipeline + bucketed write with no retry machinery, so
-          // one foreign-load burst would inflate it unanswerably (the
-          // first committed ×100 artifact read 36.2 s in-context vs
-          // 11.65 s isolated); contamination only inflates, so the min of
-          // two from-scratch builds is the quiet observation
-          def build2(d: String): (String, Double) =
-            (1 to 2).map(_ => graft.operators.Dedup.ensureNearDupIndex(spark, d, force = true))
-              .minBy(_._2)
-          val (mb, sb) = build2(base)
-          val (ms, ss) = build2(dir)
-          if (mb != "built" || ms != "built")
-            violations :+= s"d17_index_build: forced build did not build (base=$mb, scale=$ms)"
-          else {
-            val br = ss / math.max(sb, 0.001)
-            System.err.println(f"[scale] d17 index build: base $sb%.2fs scale $ss%.2fs ratio $br%.2f")
-            indexBuildRows ++= Seq("d17_index_build_base_sec" -> sb,
-              "d17_index_build_scale_sec" -> ss, "d17_index_build_ratio" -> br)
-            // ×10: the base build is stable (2.1-3.4 s), so the ratio
-            // ratchet applies. ×100: the base is a fully-cached 1-3 s
-            // write swinging 2.6× while the scale side is stable — gate
-            // the absolute scale-side seconds instead (the
-            // AbsoluteScale100Sec reasoning; the ratio stays recorded).
+      // the forced build runs first, so this entry's timed runs below
+      // measure the read-back shape against the freshly built index
+      val forced = ForcedBuilds.find(_.gateQuery == name).flatMap(forcedBuild)
+      // s17's delta-sized claim is gated at ×100 a second time, as a
+      // fraction of the SAME run's forced s16 full build (recorded a few
+      // entries earlier in this gate order): a path that quietly retrains
+      // or re-encodes the corpus fails it even with absolute headroom
+      if (name == "s17_ivfpq_append") forced.foreach { ss =>
+        indexBuildRows.toMap.get("s16_index_build_scale_sec") match {
+          case Some(bld) =>
+            val frac = ss / math.max(bld, 0.001)
+            indexBuildRows :+= ("s17_delta_append_vs_build" -> frac)
             if (Copies == 100) {
-              indexBuildRows :+= ("d17_index_build_abs_scale_bound" -> IndexBuildAbsScale100Sec)
-              if (ss > IndexBuildAbsScale100Sec)
-                violations :+= f"d17_index_build: scale-side build $ss%.1f s exceeds the absolute x100 bound $IndexBuildAbsScale100Sec%.1f s"
-            } else violations ++= ratioViolation("d17_index_build", br)
-          }
-        } catch { case e: Throwable =>
-          violations :+= s"d17_index_build: ${e.getClass.getSimpleName}: ${e.getMessage}"
-        }
-      }
-      // s16's one-time vector-index build is a GATED TIMING ENTRY —
-      // d17's protocol verbatim (round-13 verdict #1: the build must be
-      // its own measured claim, or a training/encode regression hides
-      // inside an untimed warm-up): force a from-scratch build per side
-      // (min of 2 — single-shot write, contamination only inflates),
-      // gate the ratio at ×10 and the absolute scale-side seconds at
-      // ×100. The s16 timed runs below then measure the read-back shape
-      // against the freshly built index.
-      if (name == "s16_ivfpq_indexed") {
-        try {
-          def build2(dd: String): (String, Double) =
-            (1 to 2).map(_ =>
-              graft.operators.Similarity.ensurePqIndex(spark, dd, force = true))
-              .minBy(_._2)
-          val (mb, sb) = build2(base)
-          val (ms, ss) = build2(dir)
-          if (mb != "built" || ms != "built")
-            violations :+= s"s16_index_build: forced build did not build (base=$mb, scale=$ms)"
-          else {
-            val br = ss / math.max(sb, 0.001)
-            System.err.println(
-              f"[scale] s16 index build: base $sb%.2fs scale $ss%.2fs ratio $br%.2f")
-            indexBuildRows ++= Seq("s16_index_build_base_sec" -> sb,
-              "s16_index_build_scale_sec" -> ss, "s16_index_build_ratio" -> br)
-            if (Copies == 100) {
-              indexBuildRows :+= ("s16_index_build_abs_scale_bound" -> PqIndexBuildAbsScale100Sec)
-              if (ss > PqIndexBuildAbsScale100Sec)
-                violations :+= f"s16_index_build: scale-side build $ss%.1f s exceeds the absolute x100 bound $PqIndexBuildAbsScale100Sec%.1f s"
-            } else violations ++= ratioViolation("s16_index_build", br)
-          }
-        } catch { case e: Throwable =>
-          violations :+= s"s16_index_build: ${e.getClass.getSimpleName}: ${e.getMessage}"
-        }
-      }
-      // s17's forced delta append, timed per side (min of 2, the
-      // d17/s16 protocol): the delta-sized claim is gated at ×100 both
-      // absolutely and as a fraction of the SAME run's forced s16 full
-      // build (recorded a few entries earlier in this gate order) — a
-      // path that quietly retrains or re-encodes the corpus fails the
-      // fraction bound even if the absolute bound has headroom. The base
-      // index is NOT re-forced here: ensurePqDelta reuses it, so the
-      // timing isolates the append.
-      if (name == "s17_ivfpq_append") {
-        try {
-          def append2(dd: String): (String, Double) =
-            (1 to 2).map(_ =>
-              graft.operators.Similarity.ensurePqDelta(spark, dd, force = true))
-              .minBy(_._2)
-          val (mb, sb) = append2(base)
-          val (ms, ss) = append2(dir)
-          if (mb != "appended" || ms != "appended")
-            violations :+= s"s17_delta_append: forced append did not append (base=$mb, scale=$ms)"
-          else {
-            val br = ss / math.max(sb, 0.001)
-            System.err.println(
-              f"[scale] s17 delta append: base $sb%.2fs scale $ss%.2fs ratio $br%.2f")
-            indexBuildRows ++= Seq("s17_delta_append_base_sec" -> sb,
-              "s17_delta_append_scale_sec" -> ss, "s17_delta_append_ratio" -> br)
-            indexBuildRows.toMap.get("s16_index_build_scale_sec") match {
-              case Some(bld) =>
-                val frac = ss / math.max(bld, 0.001)
-                indexBuildRows :+= ("s17_delta_append_vs_build" -> frac)
-                if (Copies == 100) {
-                  indexBuildRows :+= ("s17_delta_append_vs_build_bound" -> PqDeltaAppendVsBuild100Bound)
-                  if (frac > PqDeltaAppendVsBuild100Bound)
-                    violations :+= f"s17_delta_append: scale-side append $ss%.1f s is $frac%.2f of the full build $bld%.1f s — not delta-sized (> $PqDeltaAppendVsBuild100Bound)"
-                }
-              case None =>
-                // ADVICE r15 #2: a silently skipped fraction gate read as
-                // "gated twice" in the report — make the skip VISIBLE. If
-                // s16 ran in this gate set but produced no build row, its
-                // own violation is already recorded and the fraction claim
-                // is genuinely unverified — fail loudly at ×100. A subset
-                // run that deliberately omitted s16 records the skip.
-                if (Copies == 100 && gateSet.contains("s16_ivfpq_indexed"))
-                  violations :+= "s17_delta_append: vs_build fraction gate SKIPPED — s16 ran but recorded no build row"
-                else {
-                  indexBuildRows :+= ("s17_delta_append_vs_build_skipped" -> 1.0)
-                  System.err.println(
-                    "[scale] s17 vs_build fraction not gated: no s16 build row in this run")
-                }
+              indexBuildRows :+= ("s17_delta_append_vs_build_bound" -> PqDeltaAppendVsBuild100Bound)
+              if (frac > PqDeltaAppendVsBuild100Bound)
+                violations :+= f"s17_delta_append: scale-side append $ss%.1f s is $frac%.2f of the full build $bld%.1f s — not delta-sized (> $PqDeltaAppendVsBuild100Bound)"
             }
-            if (Copies == 100) {
-              indexBuildRows :+= ("s17_delta_append_abs_scale_bound" -> PqDeltaAppendAbsScale100Sec)
-              if (ss > PqDeltaAppendAbsScale100Sec)
-                violations :+= f"s17_delta_append: scale-side append $ss%.1f s exceeds the absolute x100 bound $PqDeltaAppendAbsScale100Sec%.1f s"
-            } else violations ++= ratioViolation("s17_delta_append", br)
-          }
-        } catch { case e: Throwable =>
-          violations :+= s"s17_delta_append: ${e.getClass.getSimpleName}: ${e.getMessage}"
-        }
-      }
-      // s18's forced segment FOLD, timed per side (min of 2 — the
-      // d17/s16/s17 single-shot-write protocol): compaction must be a
-      // pure bucketed rewrite of the corpus-compressed codes — its cost
-      // rides the index size (~10 small ints per vector), never training
-      // or re-encoding (SimilaritySpec pins the job counters; this entry
-      // times the executed fold). The timed s18 runs below then measure
-      // the single-table read-back against the fresh generation.
-      if (name == "s18_ivfpq_compact") {
-        try {
-          def compact2(dd: String): (String, Double) =
-            (1 to 2).map(_ =>
-              graft.operators.Similarity.ensurePqCompact(spark, dd, force = true))
-              .minBy(_._2)
-          val (mb, sb) = compact2(base)
-          val (ms, ss) = compact2(dir)
-          if (mb != "compacted" || ms != "compacted")
-            violations :+= s"s18_compact: forced compaction did not fold (base=$mb, scale=$ms)"
-          else {
-            val br = ss / math.max(sb, 0.001)
-            System.err.println(
-              f"[scale] s18 compact: base $sb%.2fs scale $ss%.2fs ratio $br%.2f")
-            indexBuildRows ++= Seq("s18_compact_base_sec" -> sb,
-              "s18_compact_scale_sec" -> ss, "s18_compact_ratio" -> br)
-            if (Copies == 100) {
-              indexBuildRows :+= ("s18_compact_abs_scale_bound" -> PqCompactAbsScale100Sec)
-              if (ss > PqCompactAbsScale100Sec)
-                violations :+= f"s18_compact: scale-side fold $ss%.1f s exceeds the absolute x100 bound $PqCompactAbsScale100Sec%.1f s"
-            } else violations ++= ratioViolation("s18_compact", br)
-          }
-        } catch { case e: Throwable =>
-          violations :+= s"s18_compact: ${e.getClass.getSimpleName}: ${e.getMessage}"
+          case None =>
+            // ADVICE r15 #2: a silently skipped fraction gate read as
+            // "gated twice" in the report — make the skip VISIBLE. If
+            // s16 ran in this gate set but produced no build row, its
+            // own violation is already recorded and the fraction claim
+            // is genuinely unverified — fail loudly at ×100. A subset
+            // run that deliberately omitted s16 records the skip.
+            if (Copies == 100 && gateSet.contains("s16_ivfpq_indexed"))
+              violations :+= "s17_delta_append: vs_build fraction gate SKIPPED — s16 ran but recorded no build row"
+            else {
+              indexBuildRows :+= ("s17_delta_append_vs_build_skipped" -> 1.0)
+              System.err.println(
+                "[scale] s17 vs_build fraction not gated: no s16 build row in this run")
+            }
         }
       }
       // t24's production-merge-count claim is a GATED FLATNESS ENTRY
@@ -1672,14 +1545,13 @@ object ScaleSmoke {
       // untimed warm run first: the first execution of a query absorbs its
       // codegen + scan init, which would inflate t_base and understate the
       // ratio (observed: q22 cold 16s vs warm 8s at sf0.1)
-      try runNoop(fn(spark, base))
+      try Measure.noop(fn(spark, base))
       catch { case e: Throwable => System.err.println(s"[scale] warm $name: $e") }
       // d17/s16/s17 read their index on BOTH sides — warm the scale side
       // too, so the first timed scale run measures the read-back shape,
       // not scan init against the just-built index
-      if (name == "d17_neardup_indexed" || name == "s16_ivfpq_indexed" ||
-          name == "s17_ivfpq_append" || name == "s18_ivfpq_compact")
-        try runNoop(fn(spark, dir))
+      if (ForcedBuilds.exists(_.gateQuery == name))
+        try Measure.noop(fn(spark, dir))
         catch { case e: Throwable => System.err.println(s"[scale] warm-scale $name: $e") }
       // a transient broadcast-build OOM under the deliberately-tight 4 GiB
       // heap (GC pressure + checkpoint pinning from earlier gate queries)
@@ -1698,8 +1570,8 @@ object ScaleSmoke {
           minOf = math.max(if (streamingProbes.contains(name)) 3 else 1,
             sys.env.getOrElse("SPARK_GRAFT_SCALE_MINOF",
               if (Copies > 10) "3" else "1").toInt))(
-          cal(0)(() => timedQ(name)(runNoop(fn(spark, base)))),
-          cal(1)(() => timedQ(name)(runNoop(fn(spark, dir)))))
+          cal(0)(() => timedQ(name)(Measure.noop(fn(spark, base)))),
+          cal(1)(() => timedQ(name)(Measure.noop(fn(spark, dir)))))
       val (t1, t10, steal, tries) =
         try attempt()
         catch {
@@ -1775,14 +1647,23 @@ object ScaleSmoke {
       (name, t1, t10, ratio, steal, tries)
     }
 
+    // one post-loop check: skipped when a SPARK_GRAFT_SCALE_ONLY subset
+    // leaves out its gate query; a throw becomes a recorded violation
+    def section(gateQuery: String, check: String)(rows: => Seq[(String, Double)]): Seq[(String, Double)] =
+      if (onlySubset.exists(!_.contains(gateQuery))) Nil
+      else try rows catch { case e: Throwable =>
+        violations :+= s"$check: ${e.getClass.getSimpleName}: ${e.getMessage}"
+        Nil
+      }
+    def sides[A](gauge: String => A): (A, A) = (gauge(base), gauge(dir))
+
     // E1's real sink at scale (round-7 verdict item #5): the gate queries
     // all end in a noop write — this entry runs the headline WRITE shape,
     // read → kernel → dynamic-partition overwrite (Jobs/Sink, the
     // delete+insert twin of main.py:177-202), at base and ×Copies under
     // the same constrained driver, and audits run-twice idempotency AT
     // SCALE with the declared reconciliation operator.
-    val writeRows: Seq[(String, Double)] = if (
-      onlySubset.exists(s => !s.contains("e1_write_month"))) Nil else try {
+    val writeRows = section("e1_write_month", "e1_write_month") {
       import graft.queries.BillingDemo
       import graft.pipeline.{Jobs, Sink}
       // busiest fact month keeps the written slice meaningful
@@ -1795,7 +1676,7 @@ object ScaleSmoke {
         Sink.writePartitioned(
           Jobs.computeMonth(BillingDemo.fact(spark, d), BillingDemo.dim(spark, d), month),
           tgt, sortCols = Seq("billing_account_id"))
-      }._1
+      }.sec
       val tgtBase = s"$dir/write_base_$month"
       val tgt10 = s"$dir/write_x${Copies}_$month"
       // min of two runs on BOTH sides, or the base pays all the codegen /
@@ -1816,9 +1697,6 @@ object ScaleSmoke {
       violations ++= ratioViolation("e1_write_month", wratio)
       Seq("e1_write_month_t_base" -> t1, "e1_write_month_t_scale" -> math.min(t10, t10again),
         "e1_write_month_ratio" -> wratio, "e1_write_month_rerun_diff_rows" -> diffN.toDouble)
-    } catch { case e: Throwable =>
-      violations :+= s"e1_write_month: ${e.getClass.getSimpleName}: ${e.getMessage}"
-      Nil
     }
 
     // LSH bucket-occupancy boundedness (round-9 verdict #2): with
@@ -1826,71 +1704,50 @@ object ScaleSmoke {
     // per probe, Σ n_b² / n over bucket sizes n_b, must stay ~flat as the
     // corpus grows ×Copies — a fixed 8-plane bucket space would grow it
     // ≈×Copies (the recorded ×100 signature: s02 ratio 22.5 vs linear
-    // cohort ~3). 3× headroom absorbs occupancy-skew drift between the
-    // fixture corpus and its shifted copies.
-    val occRows: Seq[(String, Double)] = if (
-      onlySubset.exists(s => !s.contains("s02_ann_lsh"))) Nil else try {
-      def candPerProbe(dd: String): Double =
+    // cohort ~3). [[occupancyViolation]]'s 3× headroom absorbs
+    // occupancy-skew drift between the fixture corpus and its shifted
+    // copies.
+    val occRows = section("s02_ann_lsh", "bucket-occupancy check") {
+      val (cb, cs) = sides(dd =>
         graft.tables.Tables.embeddings(spark, dd)
-          .select(graft.operators.Similarity.bucketCol(col("embedding"),
-            graft.operators.Similarity.planesFor(spark, dd)).as("bucket"))
+          .select(Similarity.bucketCol(col("embedding"), Similarity.planesFor(spark, dd)).as("bucket"))
           .groupBy("bucket").count()
-          .agg((sum(col("count") * col("count")) /
-            sum(col("count"))).as("cpp"))
-          .head().getDouble(0)
-      val cb = candPerProbe(base)
-      val cs = candPerProbe(dir)
-      if (cs > 3.0 * math.max(cb, 1.0))
-        violations :+= f"s02 candidates/probe grew to $cs%.1f at x$Copies (base $cb%.1f, bound 3x) — plane scaling lost"
+          .agg((sum(col("count") * col("count")) / sum(col("count"))).as("cpp"))
+          .head().getDouble(0))
+      violations ++= occupancyViolation("s02 candidates/probe", cb, cs, "plane scaling lost")
       Seq("s02_cand_per_probe_base" -> cb, "s02_cand_per_probe_scale" -> cs)
-    } catch { case e: Throwable =>
-      violations :+= s"bucket-occupancy check: ${e.getClass.getSimpleName}: ${e.getMessage}"
-      Nil
     }
 
     // MinHash-band / SimHash-block occupancy boundedness (round-10 verdict
     // #2 — the d03/d04 members of the fixed-parameter class): candidate
     // pairs PER DOC from the band/block equi-joins, under each directory's
     // own corpus-scaled parameters (Dedup.bandParamsFor / blockBitsFor).
-    // Same contract as lsh_occupancy: flat base→scale (3× headroom) or the
-    // partitioning lost its corpus scaling. On the disjoint-copies gate
-    // data the per-doc mass is flat by construction even unscaled — the
-    // gauge's real job is catching a parameter-scaling regression, and on
-    // real corpora the scaled parameters are what keep the j≈0.3 candidate
+    // Same contract as lsh_occupancy: flat base→scale or the partitioning
+    // lost its corpus scaling. On the disjoint-copies gate data the
+    // per-doc mass is flat by construction even unscaled — the gauge's
+    // real job is catching a parameter-scaling regression, and on real
+    // corpora the scaled parameters are what keep the j≈0.3 candidate
     // mass (quadratic under fixed bands) bounded.
-    val bandOccRows: Seq[(String, Double)] = if (
-      onlySubset.exists(s => !s.contains("d03_dedup_minhash"))) Nil else try {
-      val bb = graft.operators.Dedup.bandCandidatesPerDoc(spark, base)
-      val bs = graft.operators.Dedup.bandCandidatesPerDoc(spark, dir)
-      if (bs > 3.0 * math.max(bb, 1.0))
-        violations :+= f"d03 band candidates/doc grew to $bs%.1f at x$Copies (base $bb%.1f, bound 3x) — band scaling lost"
-      val kb = graft.operators.Dedup.blockCandidatesPerDoc(spark, base)
-      val ks = graft.operators.Dedup.blockCandidatesPerDoc(spark, dir)
-      if (ks > 3.0 * math.max(kb, 1.0))
-        violations :+= f"d04 block candidates/doc grew to $ks%.1f at x$Copies (base $kb%.1f, bound 3x) — block scaling lost"
+    val bandOccRows = section("d03_dedup_minhash", "band-occupancy check") {
+      val (bb, bs) = sides(Dedup.bandCandidatesPerDoc(spark, _))
+      violations ++= occupancyViolation("d03 band candidates/doc", bb, bs, "band scaling lost")
+      val (kb, ks) = sides(Dedup.blockCandidatesPerDoc(spark, _))
+      violations ++= occupancyViolation("d04 block candidates/doc", kb, ks, "block scaling lost")
       Seq("d03_band_cand_per_doc_base" -> bb, "d03_band_cand_per_doc_scale" -> bs,
         "d04_block_cand_per_doc_base" -> kb, "d04_block_cand_per_doc_scale" -> ks)
-    } catch { case e: Throwable =>
-      violations :+= s"band-occupancy check: ${e.getClass.getSimpleName}: ${e.getMessage}"
-      Nil
     }
 
     // d15 gram-index candidate-mass boundedness (round-11 verdict #2):
     // pair mass per doc under the FuzzyMaxGramDf posting-list cap must
-    // stay ~flat base→scale (3× headroom, the band-occupancy contract) —
-    // the cap bounds every posting list, so growth here means the cutoff
-    // stopped binding and the Levenshtein verify's candidate set is no
-    // longer delta-sized.
-    val fuzzyOccRows: Seq[(String, Double)] = if (
-      onlySubset.exists(s => !s.contains("d15_fuzzy_join"))) Nil else try {
-      val fb = graft.operators.Dedup.fuzzyCandidatesPerDoc(spark, base)
-      val fs = graft.operators.Dedup.fuzzyCandidatesPerDoc(spark, dir)
-      if (fs > 3.0 * math.max(fb, 1.0))
-        violations :+= f"d15 fuzzy candidates/doc grew to $fs%.1f at x$Copies (base $fb%.1f, bound 3x) — posting-list cap stopped binding"
+    // stay ~flat base→scale (the band-occupancy contract) — the cap
+    // bounds every posting list, so growth here means the cutoff stopped
+    // binding and the Levenshtein verify's candidate set is no longer
+    // delta-sized.
+    val fuzzyOccRows = section("d15_fuzzy_join", "fuzzy-occupancy check") {
+      val (fb, fs) = sides(Dedup.fuzzyCandidatesPerDoc(spark, _))
+      violations ++= occupancyViolation("d15 fuzzy candidates/doc", fb, fs,
+        "posting-list cap stopped binding")
       Seq("d15_fuzzy_cand_per_doc_base" -> fb, "d15_fuzzy_cand_per_doc_scale" -> fs)
-    } catch { case e: Throwable =>
-      violations :+= s"fuzzy-occupancy check: ${e.getClass.getSimpleName}: ${e.getMessage}"
-      Nil
     }
 
     // q58 serving-occupancy boundedness (round-15 verdict #2 — "the
@@ -1907,22 +1764,15 @@ object ScaleSmoke {
     // per-batch cost, not corpus-scale. Both numbers are recorded; the
     // 3× bound rides the per-ring-row gauge — growth THERE means the
     // refined-cell population is riding the corpus again.
-    val serveOccRows: Seq[(String, Double)] = if (
-      onlySubset.exists(s => !s.contains("q58_ann_stream_enrich"))) Nil else try {
-      def servOcc(dd: String): (Double, Double) =
-        graft.operators.Similarity.annServeCandPerProbe(spark, dd,
-          graft.operators.Similarity.unionProbeVecs(spark, dd))
-      val (obProbe, obRing) = servOcc(base)
-      val (osProbe, osRing) = servOcc(dir)
-      if (osRing > 3.0 * math.max(obRing, 1.0))
-        violations :+= f"q58 serving candidates/ring-row grew to $osRing%.1f at x$Copies (base $obRing%.1f, bound 3x) — refined-cell population is corpus-scale again"
+    val serveOccRows = section("q58_ann_stream_enrich", "serve-occupancy check") {
+      val ((obProbe, obRing), (osProbe, osRing)) =
+        sides(dd => Similarity.annServeCandPerProbe(spark, dd, Similarity.unionProbeVecs(spark, dd)))
+      violations ++= occupancyViolation("q58 serving candidates/ring-row", obRing, osRing,
+        "refined-cell population is corpus-scale again")
       Seq("q58_serve_cand_per_probe_base" -> obProbe,
         "q58_serve_cand_per_probe_scale" -> osProbe,
         "q58_serve_cand_per_ring_row_base" -> obRing,
         "q58_serve_cand_per_ring_row_scale" -> osRing)
-    } catch { case e: Throwable =>
-      violations :+= s"serve-occupancy check: ${e.getClass.getSimpleName}: ${e.getMessage}"
-      Nil
     }
 
     // IVF recall at scale (ADVICE r10; bounds reworked round-12 per
@@ -1940,10 +1790,8 @@ object ScaleSmoke {
     // originally found (s05 read 0.05 < 0.07). SECONDARY: a relative
     // collapse bound at 0.4×base (was 0.5 — the flaky part), for
     // regressions that land between the floor and the quiet reading.
-    val ivfRecallRows: Seq[(String, Double)] = if (
-      onlySubset.exists(s => !s.contains("s09_ivfpq_adc"))) Nil else try {
-      val (b05, b06) = graft.operators.Similarity.ivfSampleRecall(spark, base)
-      val (s05, s06) = graft.operators.Similarity.ivfSampleRecall(spark, dir)
+    val ivfRecallRows = section("s09_ivfpq_adc", "ivf-recall check") {
+      val ((b05, b06), (s05, s06)) = sides(Similarity.ivfSampleRecall(spark, _))
       for (((nm, r), floor) <- Seq("s05" -> s05, "s06" -> s06).zip(IvfRecallFloor))
         if (r < floor)
           violations :+= f"$nm sampled recall $r%.3f below the absolute floor $floor%.3f at x$Copies"
@@ -1954,9 +1802,6 @@ object ScaleSmoke {
       Seq("s05_recall_base" -> b05, "s05_recall_scale" -> s05,
         "s06_recall_base" -> b06, "s06_recall_scale" -> s06,
         "s05_recall_floor" -> IvfRecallFloor(0), "s06_recall_floor" -> IvfRecallFloor(1))
-    } catch { case e: Throwable =>
-      violations :+= s"ivf-recall check: ${e.getClass.getSimpleName}: ${e.getMessage}"
-      Nil
     }
 
     // pinned-RDD leak guard: localCheckpoint blocks are unevictable, so an
@@ -1976,14 +1821,8 @@ object ScaleSmoke {
         s""""t_scale_sec":${fmt(rows.map(r => r._1 -> r._3))},""" +
         s""""ratio":${fmt(rows.map(r => r._1 -> r._4))},""" +
         s""""ratio_bound":${fmt(gateSet.map(n => n -> boundFor(n)) ++
-          (if (gateSet.contains("d17_neardup_indexed") && Copies == 10)
-            Seq("d17_index_build" -> boundFor("d17_index_build")) else Nil) ++
-          (if (gateSet.contains("s16_ivfpq_indexed") && Copies == 10)
-            Seq("s16_index_build" -> boundFor("s16_index_build")) else Nil) ++
-          (if (gateSet.contains("s17_ivfpq_append") && Copies == 10)
-            Seq("s17_delta_append" -> boundFor("s17_delta_append")) else Nil) ++
-          (if (gateSet.contains("s18_ivfpq_compact") && Copies == 10)
-            Seq("s18_compact" -> boundFor("s18_compact")) else Nil) :+
+          ForcedBuilds.filter(fb => Copies == 10 && gateSet.contains(fb.gateQuery))
+            .map(fb => fb.entry -> boundFor(fb.entry)) :+
           ("e1_write_month" -> boundFor("e1_write_month")))},""" +
         s""""steal_ticks":${rows.map(r => "\"" + r._1 + "\":" + r._5).mkString("{", ",", "}")},""" +
         s""""foreign_ticks":${gateSet.map(n => "\"" + n + "\":" + foreignByQuery.getOrElse(n, -1L)).mkString("{", ",", "}")},""" +
@@ -2000,7 +1839,7 @@ object ScaleSmoke {
         s""""bpe_rounds":${fmt(bpeRoundsRows)},""" +
         (if (Copies > 10)
           s""""excluded_by_design":${ExcludedPast10x.toSeq.sorted
-            .map { case (k, v) => "\"" + k + "\":\"" + jsonEscape(v) + "\"" }
+            .map { case (k, v) => "\"" + k + "\":\"" + Measure.jsonEscape(v) + "\"" }
             .mkString("{", ",", "}")},"""
         else "") +
         s""""violations":${violationsJson(violations)}}"""

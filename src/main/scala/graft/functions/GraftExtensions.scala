@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** `SparkSessionExtensions` injection point, so the engine's functions are
   * available in ANY session without code changes:
@@ -17,32 +17,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  import VectorFunctions._
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[VectorFunctions.type].getName, name, usage, "", "")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
-
-    inject("graft_polyhash", "rolling 31-base codepoint hash mod 1e9+7") {
-      exprs => PolyHash(exprs.head)
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.Table.foreach { case (name, usage, builder) =>
+      val info = new ExpressionInfo(classOf[VectorFunctions.type].getName, name, usage, "", "")
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    inject("graft_dot", "double dot product of two float arrays") {
-      exprs => FloatVecDot(exprs(0), exprs(1))
-    }
-    inject("graft_shingles", "distinct word 3-shingles of a string") {
-      exprs => WordShingles(exprs.head, 3)
-    }
-    inject("graft_simhash", "28-bit simhash of an array of feature hashes") {
-      exprs => SimHash28(exprs.head)
-    }
-    inject("graft_minhash_sig", "16-permutation minhash signature") {
-      exprs => MinHashSig(exprs.head, 16)
-    }
-    inject("graft_credits_pivot", "billing credits pivot over parallel arrays") {
-      exprs => CreditsPivot(exprs(0), exprs(1))
-    }
-  }
 }

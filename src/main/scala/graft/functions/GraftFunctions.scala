@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** SQL registration for graft's custom expressions, so `spark.sql` users
   * get them too:
@@ -14,19 +15,21 @@ object GraftFunctions {
 
   import VectorFunctions._
 
+  /** Every custom SQL function as (name, usage, builder) — the one list
+    * [[register]] and [[GraftExtensions]] both install. */
+  private[functions] val Table: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("graft_polyhash", "rolling 31-base codepoint hash mod 1e9+7", e => PolyHash(e.head)),
+    ("graft_dot", "double dot product of two float arrays", e => FloatVecDot(e(0), e(1))),
+    ("graft_shingles", "distinct word 3-shingles of a string", e => WordShingles(e.head, 3)),
+    ("graft_simhash", "28-bit simhash of an array of feature hashes", e => SimHash28(e.head)),
+    ("graft_minhash_sig", "16-permutation minhash signature", e => MinHashSig(e.head, 16)),
+    ("graft_credits_pivot", "billing credits pivot over parallel arrays",
+      e => CreditsPivot(e(0), e(1))))
+
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "graft_polyhash", exprs => PolyHash(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "graft_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => WordShingles(exprs.head, 3), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash28(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => MinHashSig(exprs.head, 16), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "graft_credits_pivot", exprs => CreditsPivot(exprs(0), exprs(1)), "scala_udf")
+    Table.foreach { case (name, _, builder) =>
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

@@ -28,14 +28,13 @@ object Launcher {
       dimPath: String,
       targetPath: String,
       failureCsv: String = "failures.csv",
-      lookbackDays: Int = 4,
       alerter: Alerter = LogAlerter,
       extraDiscount: Map[String, Double] = Map.empty)
 
   /** One E1 tick for `today`: returns the failed days (empty = clean run). */
   def runDaily(spark: SparkSession, config: Config,
                today: LocalDate = LocalDate.now()): Seq[LocalDate] = {
-    val (start, endExclusive) = Jobs.lookbackWindow(today, config.lookbackDays)
+    val (start, endExclusive) = Jobs.lookbackWindow(today)
     val invoiceMonth = today.format(DateTimeFormatter.ofPattern("yyyyMM"))
     val days = Iterator.iterate(start)(_.plusDays(1))
       .takeWhile(_.isBefore(endExclusive)).toSeq

@@ -81,6 +81,15 @@ class ScaleSmokeSpec extends SparkSpec {
     assert(!ScaleSmoke.absScale100Downgrades("q22_kernel_full", 1.0, 0.1, 100))
   }
 
+  test("flat-occupancy gauges fail only past 3x a base floored at 1") {
+    assert(ScaleSmoke.occupancyViolation("s02 candidates/probe", 40.0, 119.0, "lost").isEmpty)
+    assert(ScaleSmoke.occupancyViolation("s02 candidates/probe", 40.0, 121.0, "lost")
+      .exists(_.startsWith("s02 candidates/probe grew to 121.0")))
+    // a near-empty base cannot make any small scale-side reading a violation
+    assert(ScaleSmoke.occupancyViolation("gauge", 0.1, 2.9, "lost").isEmpty)
+    assert(ScaleSmoke.occupancyViolation("gauge", 0.1, 3.1, "lost").nonEmpty)
+  }
+
   test("gate retry absorbs a transient burst but cannot mask a real regression") {
     // q15 bound is 3.0. Transient: the first scale run is a 10× steal
     // burst, the retry is quiet — the kept pair must be the quiet one and
