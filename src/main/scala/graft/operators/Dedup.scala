@@ -1,7 +1,10 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.queries.{QueryDef, Stable}
 import graft.tables.{SourceState, Tables}
 
@@ -780,33 +783,16 @@ object Dedup {
 
   // ---------- d07: keeper selection (pairs → clusters → one keeper) ----------
 
-  /** Connected components by iterative min-label propagation: every node
-    * starts as its own cluster; each round a node adopts the smallest label
-    * among itself and its neighbors; converged ⇒ every node carries its
-    * component's minimum id (= the keeper). The driver loop is the correct
-    * shape for an iterative fixpoint (each round is one distributed
-    * join + min-aggregate; rounds ≈ component diameter, and near-dup
-    * components are shallow in practice). Each round `localCheckpoint`s the
-    * labels: persist alone truncates RECOMPUTE but not LINEAGE, and the
-    * logical plan grows ~3× per round (union ∘ join ∘ agg over the previous
-    * plan) — by ~8 rounds plan stringification alone OOMs. On a cluster
-    * with an unreliable-executor concern, swap in `checkpoint()` against a
-    * checkpoint dir — same shape, durable lineage cut.
-    *
-    * Returns (node, cluster). 100 TB note: same join shape as GraphX/
-    * GraphFrames label propagation — shuffles keyed by node id; for
-    * adversarially deep graphs switch to large-star/small-star, which this
-    * API can host without changing callers. */
-  /** localCheckpoint blocks are PINNED — the lineage is cut, so Spark can
-    * never evict or recompute them; they free only when driver GC happens
-    * to collect the Dataset. Left alone, every ROUND's blocks (and every
-    * INVOCATION's) stay resident, and on a constrained driver the memory
-    * finally runs out exactly when a broadcast build needs it — found by
-    * the ×10 ScaleSmoke gate at -Xmx4g, as an intermittent "Not enough
-    * memory to build and broadcast" inside the iteration. The iterative
-    * operators therefore track which RDD ids each checkpoint pins and
-    * explicitly release the PREVIOUS round's once the next is materialized
-    * (only the final, node-bounded result stays pinned for the caller). */
+  /** localCheckpoint blocks are PINNED: the lineage is cut, so Spark can
+    * never evict or recompute them, and they free only when driver GC
+    * collects their handle. Left alone, every round's blocks (and every
+    * invocation's) stay resident, and on a constrained driver memory runs
+    * out exactly when a broadcast build needs it (found by the ×10
+    * ScaleSmoke gate at -Xmx4g as an intermittent "Not enough memory to
+    * build and broadcast" inside the iteration). The DataFrame loop of
+    * [[keeperSelectionStar]] has no handle on the RDD its
+    * `Dataset.localCheckpoint` pins, so it tracks the ids each round adds
+    * and releases the previous round's once the next is materialized. */
   private def pinnedSince(sc: org.apache.spark.SparkContext,
                           before: Set[Int]): Set[Int] =
     sc.getPersistentRDDs.keySet.toSet -- before
@@ -815,74 +801,70 @@ object Dedup {
                             ids: Set[Int]): Unit =
     ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 
+  /** Connected components by iterative min-label propagation: every
+    * edge-touched node starts as its own label; each round a node adopts
+    * the smallest label among itself and its neighbors, so at the fixpoint
+    * every node carries its component's minimum id (= the keeper). A round
+    * moves a label one hop, so rounds ≈ component diameter + 1 (the last
+    * confirms no change), at most `maxIter`; near-dup components are
+    * shallow in practice.
+    *
+    * A round's tasks take milliseconds; its cost is the driver planning
+    * and submitting jobs, so the loop runs over pair RDDs and a round is
+    * ONE job:
+    *  - the symmetric, deduplicated adjacency lists are keyed by node under
+    *    one `HashPartitioner` as wide as `spark.sql.shuffle.partitions`,
+    *    built once and persisted; the labels are keyed by node under the
+    *    same partitioner, so both the labels ⋈ edges join and the
+    *    old ⋈ new comparison are narrow;
+    *  - the round's one shuffle is `reduceByKey(min)` over primitive
+    *    (Long, Long) records, which Spark serializes with Kryo;
+    *  - the round's one action counts the changed nodes and, in the same
+    *    pass, materializes the new labels' `localCheckpoint`. The
+    *    checkpoint cuts the lineage, which otherwise grows by a join and a
+    *    shuffle per round.
+    * Checkpointed blocks are pinned (see [[pinnedSince]]), so each round
+    * releases the previous round's labels through their handle once the
+    * next are materialized, and the edges are released after the loop:
+    * only the final labels, bounded by the touched nodes, stay pinned for
+    * the caller.
+    *
+    * A node with no edge never adopts a neighbor's label, so it never
+    * enters the loop: on a real corpus near-dups are a small fraction, and
+    * the working set is 2|pairs|, not |corpus|. Singletons re-enter in the
+    * final left join with their own id as cluster. Self-loops and repeated
+    * or reversed pairs fold away when the adjacency is built.
+    *
+    * Returns (node, cluster). For adversarially deep graphs use
+    * [[keeperSelectionStar]] (O(log diameter) rounds, same contract). */
   def keeperSelection(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val sc = nodes.sparkSession.sparkContext
-    // symmetrize with ONE explode pass, not a self-union (optimization
-    // round 18): the union referenced the pairs subtree TWICE, and because
-    // only its inner frames (shingles, signatures) are cached, the
-    // candidate band join + Jaccard verify — the expensive tail of the
-    // d03 pipeline — executed once PER BRANCH inside edges' one
-    // materialization (measured in d07: two extra ~12 s-task stages vs
-    // d03 alone). The explode doubles rows in the same stage instead.
-    val edges = pairs
-      .select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst")),
-        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().persist()
-    // materialize the edge cache BEFORE the pinned-RDD snapshot
-    // (optimization round 17): its backing RDD otherwise registers inside
-    // whichever ROUND's job first touches it, lands in that round's
-    // pinned set, and gets released one round later — after which every
-    // remaining round silently recomputes the entire upstream pair
-    // subtree (measured as a second full d03 verify join inside d07)
-    edges.count()
-    val beforeInit = sc.getPersistentRDDs.keySet.toSet
-    // Propagate over EDGE-TOUCHED nodes only (optimization round 17): a
-    // node with no edge can never adopt a neighbor's label — it is its own
-    // keeper by construction — so carrying the (mostly-singleton) corpus
-    // through every round's join+aggregate is pure waste; on a real corpus
-    // near-dups are a small fraction, so the loop's working set drops from
-    // |corpus| to 2|pairs| rows per round. Singletons re-enter once, in
-    // the final left-join (coalesce(label, own id)). The edge set is
-    // symmetric, so DISTINCT src covers every touched node.
-    var labels = edges
-      .select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("cluster"))
-      .localCheckpoint()
-    var pinned = pinnedSince(sc, beforeInit)
+    val spark = nodes.sparkSession
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val edges: RDD[(Long, Array[Long])] = pairs
+      .select(col("id_a").cast("long"), col("id_b").cast("long")).na.drop()
+      .rdd.flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        if (a == b) Iterator.empty else Iterator((a, b), (b, a))
+      }
+      .groupByKey(part).mapValues(_.toArray.distinct)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var labels: RDD[(Long, Long)] =
+      edges.mapPartitions(_.map { case (n, _) => (n, n) }, preservesPartitioning = true)
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
-      val prop = labels.as("l").join(edges.as("e"), col("l.node") === col("e.src"))
-        .select(col("e.dst").as("node"), col("l.cluster").as("cluster"))
-      // each node's previous label rides through the aggregate (`own` is
-      // non-null only on the node's self row, and nodes are unique in
-      // `labels`), so convergence is a filter over the materialized result —
-      // no per-round join+count pass
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val next = labels
-        .select(col("node"), col("cluster"), col("cluster").as("own"))
-        .unionAll(prop.withColumn("own", lit(null).cast("long")))
-        .groupBy("node")
-        .agg(min("cluster").as("cluster"), max("own").as("own"))
-        .localCheckpoint() // eager: materializes AND cuts lineage
-      changed = next.filter(col("cluster") =!= col("own")).count()
-      labels = next.select(col("node"), col("cluster"))
-      // next is materialized and the convergence check is done — the
-      // previous round's pinned blocks are garbage NOW, not at some GC
-      val nextPinned = pinnedSince(sc, before)
-      releasePinned(sc, pinned)
-      pinned = nextPinned
+      val next = labels.join(edges, part)
+        .flatMap { case (n, (l, ds)) => Iterator.single((n, l)) ++ ds.iterator.map(d => (d, l)) }
+        .reduceByKey(part, math.min(_, _))
+        .localCheckpoint()
+      changed = next.join(labels, part).filter { case (_, (a, b)) => a != b }.count()
+      labels.unpersist(blocking = false)
+      labels = next
       iter += 1
     }
-    edges.unpersist()
-    // singletons (no edges) re-enter here with their own id as cluster —
-    // identical output to looping over the full corpus, one join cheaper
-    // per ROUND. The propagated side is bounded by the touched-node set,
-    // typically far under the broadcast threshold; stats pick the join.
+    edges.unpersist(blocking = false)
     nodes.select(col("doc_id").cast("long").as("node"))
-      .join(labels, Seq("node"), "left")
+      .join(spark.createDataFrame(labels).toDF("node", "cluster"), Seq("node"), "left")
       .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
   }
 
@@ -955,12 +937,6 @@ object Dedup {
     // tags (min 1, max 2). One exchange and one tiny cached-scan job
     // replace the distinct exchange plus the 3-job equality action.
     //
-    // Exactly ONE alternation pair per materialization: each star op
-    // references its input 2-3× (the min-agg AND the join probe), so an
-    // un-checkpointed nested round would recompute the whole inner chain
-    // per reference — measured 1.9× SLOWER than materializing each round
-    // (12.7s vs 6.7s on the sf0.1 deep chain). The checkpoint per round
-    // IS the cheap part.
     // ONE alternation pair per materialization: each star op references
     // its input 2-3× (the min-agg AND the join probe), so an
     // un-checkpointed nested round recomputes the whole inner chain per
@@ -990,7 +966,7 @@ object Dedup {
       // the new canonical edge set: rows the smallStar pass emitted
       e = tagged.filter(col("__tmin") === 1).select(col("lo"), col("hi"))
       // the stability check was the old edge set's last use — release its
-      // pinned blocks now (see keeperSelection's pinned-block note)
+      // pinned blocks now (see the note on pinnedSince)
       val nextPinned = pinnedSince(sc, before)
       releasePinned(sc, pinned)
       pinned = nextPinned

@@ -49,10 +49,14 @@ class DedupSpec extends SparkSpec {
     (1 to 3).foreach { _ =>
       val n = 30
       val ids = (0L until n).toSeq
-      val pairs = Seq.fill(25) {
+      val distinct = Seq.fill(25) {
         val a = rnd.nextInt(n).toLong; val b = rnd.nextInt(n).toLong
         if (a == b) (a, (b + 1) % n) else (a, b)
       }
+      // repeated pairs, both orientations of one pair, and self-loops
+      // on random nodes must fold away
+      val pairs = distinct ++ distinct.take(5) ++ distinct.slice(5, 10).map(_.swap) ++
+        Seq.fill(4)(rnd.nextInt(n).toLong).map(a => (a, a))
       // driver-side union-find reference
       val parent = Array.tabulate(n)(identity)
       def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
@@ -70,10 +74,53 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** Jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  // a path of 17 nodes: label 1 needs 16 hops, plus one round that sees no
+  // change; 40 is a singleton
+  private val pathIds = (1L to 17L) :+ 40L
+  private val path = (1L to 17L).sliding(2).map(s => (s(1), s.head)).toSeq
+
+  test("keeperSelection: one job per propagation round (driver round-trip ratchet)") {
+    val rounds = 17
+    var m = Map.empty[Long, Long]
+    val jobs = jobsDuring { m = keepers(pathIds, path) }
+    assert((1L to 17L).forall(m(_) == 1L) && m(40L) == 40L)
+    // the rounds plus the final left join's stages (4 under AQE's
+    // defaults); the DataFrame round loop this replaced ran 95 here
+    assert(jobs <= rounds + 6, s"$jobs jobs for $rounds rounds")
+  }
+
+  test("keeperSelection: only the final labels stay pinned, converged or cut short") {
+    val sc = spark.sparkContext
+    Seq(50, 3).foreach { budget =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val m = run(Dedup.keeperSelection(_, _, maxIter = budget))(pathIds, path)
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(added.size <= 1, s"maxIter=$budget left ${added.size} persistent RDDs")
+      // k rounds move every label k hops down the path
+      assert(pathIds.forall(i => m(i) == (if (i == 40L) 40L else math.max(1L, i - budget))))
+      added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+    }
+  }
+
   test("keeperSelectionStar: long chain and singletons (the deep-graph case it exists for)") {
-    val ids = (1L to 17L) :+ 40L
-    val path = (1L to 17L).sliding(2).map(s => (s(1), s.head)).toSeq
-    val m = starKeepers(ids, path)
+    val m = starKeepers(pathIds, path)
     assert((1L to 17L).forall(m(_) == 1L))
     assert(m(40L) == 40L) // isolated node keeps itself
   }
