@@ -65,10 +65,10 @@ object Measure {
   /** Time `f` from a reset state. Before the clock starts:
     *  - drop cached tables, so one run's cache doesn't serve the next run
     *    or pressure the next query's heap;
-    *  - release every persistent RDD, blocking: the iterative dedup
-    *    operators leave their final labels pinned (d07 its last round's
-    *    `localCheckpoint`ed RDD, d12 its last `localCheckpoint` frame),
-    *    and localCheckpoint blocks are UNEVICTABLE storage that
+    *  - release every persistent RDD, blocking: the connected-components
+    *    loop behind d07 and d12 leaves its final state pinned (the last
+    *    round's `localCheckpoint`ed RDD), and localCheckpoint blocks are
+    *    UNEVICTABLE storage that
     *    neither clearCache nor GC touches. They shrink the unified pool's
     *    execution side for every later measurement, and whichever big
     *    shuffle/broadcast query tips into spill first reads 15-20× slow on

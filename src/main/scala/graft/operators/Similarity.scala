@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.{QueryDef, Stable}
@@ -996,14 +997,13 @@ object Similarity {
     // against a leaf. Blocks are pinned (the d07 lesson), so they are
     // released explicitly once training is done; the final plan below
     // derives rf fresh, so the declared query still owns its own encode
-    // cost (and PlanSpec still sees both embeddings scans).
-    val sc = s.sparkContext
-    val beforeCp = sc.getPersistentRDDs.keySet.toSet
+    // cost (and PlanSpec still sees both embeddings scans). The frame's
+    // leaf holds the pinned RDD, which is the handle released here.
     val rfT = rf.localCheckpoint()
     val cbs =
       try trainSubCodebooks(rfT)
-      finally (sc.getPersistentRDDs.keySet.toSet -- beforeCp)
-        .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      finally rfT.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+        .foreach(_.unpersist(false))
     val bests = pqBests(cbs)
     val cand = rf.select(Seq(
       col("vec_id"), col("cell"), col("cellr"), col("res"),

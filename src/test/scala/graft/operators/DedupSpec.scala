@@ -5,14 +5,19 @@ import graft.kernel.SparkSpec
 
 class DedupSpec extends SparkSpec {
 
-  private def run(
+  private def rows(
       fn: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame)(
-      nodeIds: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+      nodeIds: Seq[Long], pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     import spark.implicits._
     val nodes = nodeIds.toDF("doc_id")
     val edges = pairs.toDF("id_a", "id_b")
-    fn(nodes, edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    fn(nodes, edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
   }
+
+  private def run(
+      fn: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame)(
+      nodeIds: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] =
+    rows(fn)(nodeIds, pairs).toMap
 
   private def keepers(nodeIds: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] =
     run(Dedup.keeperSelection(_, _))(nodeIds, pairs)
@@ -42,6 +47,16 @@ class DedupSpec extends SparkSpec {
   test("keeperSelection: no edges means every node keeps itself") {
     val m = keepers(Seq(3L, 7L), Seq.empty)
     assert(m == Map(3L -> 3L, 7L -> 7L))
+  }
+
+  test("keeperSelection / keeperSelectionStar: a null node id comes out as (null, null)") {
+    import spark.implicits._
+    val nodes = Seq(Some(1L), Some(2L), None, Some(5L)).toDF("doc_id")
+    val pairs = Seq((2L, 1L)).toDF("id_a", "id_b")
+    Seq(Dedup.keeperSelection(nodes, pairs), Dedup.keeperSelectionStar(nodes, pairs)).foreach { df =>
+      assert(df.collect().map(_.toSeq).toSet ==
+        Set(Seq(1L, 1L), Seq(2L, 1L), Seq(null, null), Seq(5L, 5L)))
+    }
   }
 
   test("keeperSelection equals union-find on random graphs (seeded property)") {
@@ -101,21 +116,46 @@ class DedupSpec extends SparkSpec {
     var m = Map.empty[Long, Long]
     val jobs = jobsDuring { m = keepers(pathIds, path) }
     assert((1L to 17L).forall(m(_) == 1L) && m(40L) == 40L)
-    // the rounds plus the final left join's stages (4 under AQE's
-    // defaults); the DataFrame round loop this replaced ran 95 here
-    assert(jobs <= rounds + 6, s"$jobs jobs for $rounds rounds")
+    // the rounds plus the collect, which also runs the narrow labelling
+    // tail; the DataFrame round loop this replaced ran 95 here, and the
+    // DataFrame left join that was the tail ran 4 more
+    assert(jobs <= rounds + 1, s"$jobs jobs for $rounds rounds")
+  }
+
+  test("keeperSelectionStar: one job per star round (driver round-trip ratchet)") {
+    var m = Map.empty[Long, Long]
+    val jobs = jobsDuring { m = starKeepers(pathIds, path) }
+    assert((1L to 17L).forall(m(_) == 1L) && m(40L) == 40L)
+    // each star round about halves the path's diameter: 4 rounds contract
+    // the 17 nodes into a star and a 5th sees no change, plus the collect;
+    // the DataFrame star loop this replaced ran 49 here
+    assert(jobs <= 6, s"$jobs jobs for 5 rounds")
   }
 
   test("keeperSelection: only the final labels stay pinned, converged or cut short") {
     val sc = spark.sparkContext
-    Seq(50, 3).foreach { budget =>
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val m = run(Dedup.keeperSelection(_, _, maxIter = budget))(pathIds, path)
-      val added = sc.getPersistentRDDs.keySet.toSet -- before
-      assert(added.size <= 1, s"maxIter=$budget left ${added.size} persistent RDDs")
-      // k rounds move every label k hops down the path
-      assert(pathIds.forall(i => m(i) == (if (i == 40L) 40L else math.max(1L, i - budget))))
-      added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+    // the components of the path fixture: 1..17 and the singleton 40
+    def component(i: Long) = if (i == 40L) 40L else 1L
+    Seq(
+      ("keeperSelection", Dedup.keeperSelection _),
+      ("keeperSelectionStar", Dedup.keeperSelectionStar _)).foreach { case (name, fn) =>
+      Seq(50, 3).foreach { budget =>
+        val before = sc.getPersistentRDDs.keySet.toSet
+        val got = rows(fn(_, _, budget))(pathIds, path)
+        val added = sc.getPersistentRDDs.keySet.toSet -- before
+        assert(added.size <= 1, s"$name maxIter=$budget left ${added.size} persistent RDDs")
+        // cut short or not: one row per node, cluster ≤ node, same component
+        assert(got.map(_._1).sorted == pathIds, s"$name maxIter=$budget: $got")
+        val out = got.toMap
+        assert(pathIds.forall(i => out(i) <= i && component(out(i)) == component(i)),
+          s"$name maxIter=$budget: $out")
+        if (budget == 50) assert(pathIds.forall(i => out(i) == component(i)), s"$name: $out")
+        else assert(pathIds.exists(i => out(i) != component(i)), s"$name: $budget rounds converged")
+        // k propagation rounds move every label k hops down the path
+        if (name == "keeperSelection")
+          assert(pathIds.forall(i => out(i) == (if (i == 40L) 40L else math.max(1L, i - budget))))
+        added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+      }
     }
   }
 

@@ -68,6 +68,14 @@ class SimilaritySpec extends SparkSpec {
     } finally out.unpersist()
   }
 
+  test("s09 releases its pinned training checkpoint") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    Similarity.s09IvfPqAdc.fn(spark, sf) // trains the codebooks eagerly
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(added.isEmpty, s"s09 left ${added.size} persistent RDDs")
+  }
+
   test("s09 quantization is non-vacuous and deterministic") {
     val out = Similarity.s09IvfPqAdc.fn(spark, sf).cache()
     try {
