@@ -823,10 +823,6 @@ object ScaleSmoke {
           vec.as("embedding"), col("label"))
       }
     }
-    // the tables under `dir` may have just (re)grown — drop the persisted
-    // indexes built from the old tables
-    graft.operators.Similarity.invalidateParamCaches(dir)
-    graft.operators.Dedup.invalidateParamCaches(dir)
     dir
   }
 
@@ -859,7 +855,6 @@ object ScaleSmoke {
         .parquet(s"$dir/documents.parquet")
     }
     java.nio.file.Files.createFile(done)
-    graft.operators.Dedup.invalidateParamCaches(dir)
     dir
   }
 

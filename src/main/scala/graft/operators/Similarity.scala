@@ -89,11 +89,6 @@ object Similarity {
         math.log(math.max(1.0, n.toDouble / TargetBucket)) / math.log(2.0) - 1e-9).toInt)
     }
 
-  /** Drop the persisted vector index derived from `d`. Every writer of an
-    * embeddings table (ScaleSmoke.ensureData, test data generators) calls
-    * this after the write. */
-  private[graft] def invalidateParamCaches(d: String): Unit = invalidatePqIndex(d)
-
   /** Deterministic ±1 hyperplane matrix, SplitMix64-mixed per (plane, dim)
     * and MATERIALIZED AS LITERALS in both engines — the sign matrix is
     * planes×[[Dims]] values, tiny metadata, so neither engine needs the
@@ -1110,51 +1105,30 @@ object Similarity {
       cents: Seq[(Int, Seq[Float], Double)],
       cbs: Seq[Seq[(Long, Seq[Double])]])
 
-  private val pqMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PqIndexMeta]()
-  /** Test hook: forget the in-memory spec metadata for `d` WITHOUT
-    * touching catalog or files — the restart-reuse specs use it to
-    * simulate a fresh JVM (a real restart loses this map). */
-  private[graft] def forgetPqMetaForTest(d: String): Unit = {
-    pqMetaCache.remove(d)
-    Seq(PqDelta1, PqDelta2).foreach(dd => pqDeltaFpCache.remove(deltaKey(d, dd)))
-    pqCompactFpCache.remove(d)
-  }
-
-  /** The persisted index spec's metadata when a VALID one exists for `d`:
-    * the in-memory map first (writers invalidate it), else the warehouse
-    * spec file with its recorded fingerprint re-checked against
-    * embeddings.parquet — the read-through that lets the WHOLE IVF family
-    * (s05/s06/s09/s13 and the index paths) skip centroid/count jobs in
-    * any JVM that can see a completed build. None ⇒ no trustworthy
+  /** The persisted index's metadata when a VALID spec exists for `d`: the
+    * codes table's spec file, its recorded fingerprint re-checked against
+    * [[pqSpecFingerprint]] — the read-through that lets the WHOLE IVF
+    * family (s05/s06/s09/s13 and the index paths) skip centroid/count jobs
+    * in any JVM that can see a completed build. None ⇒ no trustworthy
     * persisted training; callers fall back to training inline. */
   private def specMetaIfValid(s: SparkSession, d: String): Option[PqIndexMeta] =
-    Option(pqMetaCache.get(d)).orElse {
-      val specPath = java.nio.file.Paths.get(
-        s"${Dedup.warehouseDir(s)}/${pqCodesTable(d)}", PqIdxSpecFile)
-      if (!java.nio.file.Files.exists(specPath)) None
-      else parsePqSpec(java.nio.file.Files.readString(specPath)) match {
-        case Some((sfp, _, meta)) if sfp == pqSpecFingerprint(d) =>
-          pqMetaCache.put(d, meta)
-          Some(meta)
-        case _ => None
-      }
-    }
-  /** What the last [[pqStoredIndex]] call did per directory ("cached" /
-    * "reregistered" / "built") and the build seconds when "built" — the
-    * d17 `indexBuildMode` contract, read by the gate's timed
-    * `s16_index_build` entry and the restart-reuse spec. */
-  private[graft] val vecIndexBuildMode =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] val vecIndexBuildSec =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+    graft.pipeline.Bucketing.validSpec(
+      s, pqCodesTable(d), PqIdxSpecFile, pqSpecFingerprint(d))
+      .flatMap { case (_, meta) => parsePqMeta(meta) }
 
   private def pqCodesTable(d: String): String =
     s"graft_pqidx_codes_${Dedup.pathKey(d)}"
 
-  private def renderPqSpec(fp: String, ddl: String, meta: PqIndexMeta): String = {
+  /** Every persisted layer of `d`'s vector index, base first: codes, both
+    * delta segments, the compacted generation. */
+  private[graft] def pqTables(d: String): Seq[String] =
+    pqCodesTable(d) +: Seq(PqDelta1, PqDelta2).map(pqDeltaTable(d, _)) :+
+      pqCompactTable(d)
+
+  /** The spec text after the schema line: refine bits, then one line per
+    * coarse centroid and per sub-codebook entry. */
+  private def renderPqMeta(meta: PqIndexMeta): String = {
     val sb = new StringBuilder
-    sb.append(fp).append('\n').append(ddl).append('\n')
     sb.append("bits=").append(meta.bits).append('\n')
     meta.cents.foreach { case (lab, cv, cn) =>
       sb.append("c ").append(lab).append(' ').append(dHex(cn)).append(' ')
@@ -1166,18 +1140,14 @@ object Similarity {
     sb.result()
   }
 
-  /** Parse a spec file: (fingerprint, schema DDL, meta). None on any
-    * malformed content — the caller then rebuilds (a torn spec is the
-    * crashed-build case the marker-last write protocol makes safe). */
-  private def parsePqSpec(text: String): Option[(String, String, PqIndexMeta)] =
+  /** Parse [[renderPqMeta]]'s text. None on any malformed content. */
+  private def parsePqMeta(text: String): Option[PqIndexMeta] =
     try {
       val lines = text.split("\n")
-      val fp = lines(0)
-      val ddl = lines(1)
-      val bits = lines(2).stripPrefix("bits=").toInt
+      val bits = lines(0).stripPrefix("bits=").toInt
       val cents = Seq.newBuilder[(Int, Seq[Float], Double)]
       val cbs = Array.fill(SubSpaces)(Seq.newBuilder[(Long, Seq[Double])])
-      lines.drop(3).filter(_.nonEmpty).foreach { ln =>
+      lines.drop(1).filter(_.nonEmpty).foreach { ln =>
         val p = ln.split(" ")
         p(0) match {
           case "c" =>
@@ -1186,8 +1156,23 @@ object Similarity {
             cbs(p(1).toInt) += ((p(2).toLong, p(3).split(",").toSeq.map(dUnhex)))
         }
       }
-      Some((fp, ddl, PqIndexMeta(bits, cents.result(), cbs.toSeq.map(_.result()))))
+      Some(PqIndexMeta(bits, cents.result(), cbs.toSeq.map(_.result())))
     } catch { case _: Exception => None }
+
+  /** One bucketed `cellr`-keyed layer of the vector index through
+    * [[graft.pipeline.Bucketing.ensureIndex]]. */
+  private def ensurePqLayer(s: SparkSession, t: String, fp: String,
+      builtAs: String)(build: => graft.pipeline.Bucketing.IndexBuild) =
+    graft.pipeline.Bucketing.ensureIndex(
+      s, Seq(t -> Seq("cellr")), PqIdxBuckets, PqIdxSpecFile, fp, builtAs)(build)
+
+  /** Frozen-spec PQ codes of residual frame `rf` under sub-codebooks `cbs`,
+    * with the source document's attribute: the stored index row. */
+  private def encodeCodes(s: SparkSession, d: String, rf: DataFrame,
+      cbs: Seq[Seq[(Long, Seq[Double])]]): DataFrame =
+    withSourceLang(s, d, rf.select(
+      Seq(col("vec_id"), col("cell"), col("cellr")) ++
+        pqBests(cbs).zipWithIndex.map { case (b, m) => b.getField("cid").as(s"c$m") }: _*))
 
   /** Build-once PERSISTED vector index — d17's treatment applied to the
     * s-family (round-13 verdict #1: s05/s06/s09/s13 re-train centroids
@@ -1198,115 +1183,46 @@ object Similarity {
     * — [[SubSpaces]] small ints per vector, the ~32× compression that is
     * the index's entire reason to exist — and the bounded training
     * artifacts (refine bits, coarse centroids, residual sub-codebooks)
-    * in a spec file next to it, serialized as raw IEEE bits so a fresh
-    * JVM replays literal-identical plans. Same lifecycle as
-    * [[Dedup.nearDupStoredIndex]]: in-catalog hit = "cached"; fresh
-    * catalog + valid warehouse files (spec fingerprint still matches
-    * embeddings.parquet) = "reregistered" (CREATE TABLE ... CLUSTERED BY
-    * ... LOCATION — catalog metadata only, zero data touched); missing/
-    * stale = "built" (the one path that trains and encodes). The spec
-    * file is written LAST, so a crashed build self-heals into a rebuild. */
+    * in its spec file, serialized as raw IEEE bits so a fresh JVM replays
+    * literal-identical plans. Same lifecycle as [[Dedup.nearDupStoredIndex]]
+    * ([[graft.pipeline.Bucketing.ensureIndex]] against
+    * [[pqSpecFingerprint]]); the build is the one path that trains and
+    * encodes. */
+  private def pqBase(s: SparkSession, d: String) =
+    ensurePqLayer(s, pqCodesTable(d), pqSpecFingerprint(d), "built") {
+      // the index's files were just deleted, so the training calls below
+      // cannot read an older spec through
+      val t0 = System.nanoTime()
+      val bits = cellRefineBits(s, d)
+      val cr = centroidRows(s, d)
+      val t1 = System.nanoTime()
+      System.err.println(f"[pqidx] centroids: ${(t1 - t0) / 1e9}%.1f s")
+      val rf = residualFrameFrom(s, d, cr, bits).persist()
+      val cbs = try trainSubCodebooks(rf)
+        catch { case e: Throwable => rf.unpersist(blocking = false); throw e }
+      System.err.println(f"[pqidx] train: ${(System.nanoTime() - t1) / 1e9}%.1f s")
+      graft.pipeline.Bucketing.IndexBuild(Seq(encodeCodes(s, d, rf, cbs)),
+        renderPqMeta(PqIndexMeta(bits, cr, cbs)), () => rf.unpersist(blocking = false))
+    }
+
+  /** The persisted vector index for `d`: its codes table and metadata. */
   private[graft] def pqStoredIndex(
       s: SparkSession, d: String): (DataFrame, PqIndexMeta) = {
-    val codesT = pqCodesTable(d)
-    val loc = s"${Dedup.warehouseDir(s)}/$codesT"
-    val specPath = java.nio.file.Paths.get(loc, PqIdxSpecFile)
-    val fp = pqSpecFingerprint(d)
-    val cached = Option(pqMetaCache.get(d))
-    if (s.catalog.tableExists(codesT) && cached.isDefined) {
-      vecIndexBuildMode.put(d, "cached")
-      (graft.pipeline.Bucketing.readBucketed(s, codesT), cached.get)
-    } else {
-      val onDisk =
-        if (java.nio.file.Files.exists(specPath))
-          parsePqSpec(java.nio.file.Files.readString(specPath))
-        else None
-      onDisk match {
-        case Some((sfp, ddl, meta)) if sfp == fp =>
-          if (s.catalog.tableExists(codesT)) vecIndexBuildMode.put(d, "cached")
-          else {
-            s.sql(s"""CREATE TABLE $codesT ($ddl) USING parquet
-                     |CLUSTERED BY (cellr) SORTED BY (cellr)
-                     |INTO $PqIdxBuckets BUCKETS
-                     |LOCATION '$loc'""".stripMargin)
-            vecIndexBuildMode.put(d, "reregistered")
-          }
-          pqMetaCache.put(d, meta)
-          (graft.pipeline.Bucketing.readBucketed(s, codesT), meta)
-        case _ =>
-          val t0 = System.nanoTime()
-          s.sql(s"DROP TABLE IF EXISTS $codesT")
-          try Reconcile.deleteRecursively(loc)
-          catch { case _: Exception => () }
-          // a rebuild means the on-disk spec is absent/stale — any
-          // lingering in-memory meta for `d` is the same vintage and must
-          // not be read through by the training calls below
-          pqMetaCache.remove(d)
-          // ADVICE r15 (medium): the DERIVED layers — delta segments
-          // encoded against the codebooks this branch is about to drop,
-          // and the compacted generation that folded them — are the same
-          // vintage; with a persistent metastore they would otherwise
-          // keep serving stale codes after the base self-heals
-          invalidatePqDelta(d)
-          invalidatePqCompact(d)
-          val bits = cellRefineBits(s, d)
-          val cr = centroidRows(s, d)
-          def mark(tag: String, since: Long): Long = {
-            val now = System.nanoTime()
-            System.err.println(f"[pqidx] $tag: ${(now - since) / 1e9}%.1f s")
-            now
-          }
-          val t1 = mark("centroids", t0)
-          val rf = residualFrameFrom(s, d, cr, bits).persist()
-          try {
-            val cbs = trainSubCodebooks(rf)
-            val t2 = mark("train", t1)
-            val bests = pqBests(cbs)
-            val codes = withSourceLang(s, d, rf.select(
-              Seq(col("vec_id"), col("cell"), col("cellr")) ++
-                bests.zipWithIndex.map { case (b, m) => b.getField("cid").as(s"c$m") }: _*))
-            graft.pipeline.Bucketing.writeBucketed(
-              codes, codesT, Seq("cellr"), PqIdxBuckets, Some(loc))
-            mark("encode+write", t2)
-            val meta = PqIndexMeta(bits, cr, cbs)
-            java.nio.file.Files.writeString(
-              specPath, renderPqSpec(fp, codes.schema.toDDL, meta))
-            pqMetaCache.put(d, meta)
-            vecIndexBuildMode.put(d, "built")
-            vecIndexBuildSec.put(d, (System.nanoTime() - t0) / 1e9)
-            (graft.pipeline.Bucketing.readBucketed(s, codesT), meta)
-          } finally rf.unpersist(blocking = false)
-      }
-    }
-  }
-
-  /** Drop the persisted vector index for `d` — both catalog layers and
-    * the warehouse files. Called by [[invalidateParamCaches]] (writers
-    * regenerating embeddings) and by the gate's forced-build timing. */
-  private[graft] def invalidatePqIndex(d: String): Unit = {
-    pqMetaCache.remove(d)
-    invalidatePqDelta(d) // a delta segment encoded against dropped codebooks is undefined
-    val t = pqCodesTable(d)
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-      try {
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        try Reconcile.deleteRecursively(s"${Dedup.warehouseDir(s)}/$t")
-        catch { case _: Exception => () }
-      } catch { case _: Exception => () }
-    }
+    val e = pqBase(s, d)
+    (e.frames.head, parsePqMeta(e.spec).getOrElse(throw new IllegalStateException(
+      s"unreadable PQ index spec for $d under ${pqCodesTable(d)}; drop the index to rebuild")))
   }
 
   /** Force-or-ensure the persisted vector index, returning (mode, build
     * seconds — 0 unless "built"): the gate's `s16_index_build` timing
-    * hook, d17's [[Dedup.ensureNearDupIndex]] contract verbatim. */
+    * hook, d17's [[Dedup.ensureNearDupIndex]] contract verbatim. `force`
+    * drops every layer: the delta segments and the compacted generation
+    * were encoded against the codebooks the rebuild replaces. */
   private[graft] def ensurePqIndex(
       s: SparkSession, d: String, force: Boolean = false): (String, Double) = {
-    if (force) invalidatePqIndex(d)
-    pqStoredIndex(s, d)
-    val mode = vecIndexBuildMode.getOrDefault(d, "none")
-    (mode,
-      if (mode == "built") Option(vecIndexBuildSec.get(d)).fold(0.0)(_.doubleValue())
-      else 0.0)
+    if (force) graft.pipeline.Bucketing.dropIndex(s, pqTables(d))
+    val e = pqBase(s, d)
+    (e.mode, e.seconds)
   }
 
   /** Reconstructed sub-vector for a stored code column: chained CASE over
@@ -1447,20 +1363,6 @@ object Similarity {
     if (dd.seg == 1) s"graft_pqidx_delta_${Dedup.pathKey(d)}"
     else s"graft_pqidx_delta${dd.seg}_${Dedup.pathKey(d)}"
 
-  /** Mode/seconds map key for segment `dd` of directory `d` — segment 1
-    * keeps the bare directory key (the gate and the r15 specs read it). */
-  private def deltaKey(d: String, dd: PqDeltaDef): String =
-    if (dd.seg == 1) d else s"$d#seg${dd.seg}"
-
-  /** What the last [[pqDeltaSegment]] call did per directory ("cached" /
-    * "reregistered" / "appended") and the append seconds when "appended"
-    * — the delta twin of [[vecIndexBuildMode]], read by the gate's timed
-    * `s17_delta_append` entry and the no-Lloyd spec. */
-  private[graft] val vecDeltaMode =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] val vecDeltaSec =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-
   /** Incremental APPEND to the persisted vector index (round-14 verdict
     * #1 — the index's one missing lifecycle step: any corpus change
     * forced a FULL retrain + re-encode, turning a daily vector ingest
@@ -1471,138 +1373,55 @@ object Similarity {
     * delta-sized projection with zero training jobs (the no-Lloyd spec
     * pins [[pqTrainCalls]]/[[centroidJobCalls]] unmoved) — and land in a
     * DELTA SEGMENT: a second bucketed EXTERNAL table with the same
-    * `cellr` bucketing as the base codes table, its spec file written
-    * LAST (fingerprint = base corpus+params fp + the segment's tag), so a
+    * `cellr` bucketing as the base codes table, on the base's lifecycle
+    * with fingerprint = base corpus+params fp + the segment's tag, so a
     * crashed append self-heals into a re-append and the base table is
     * never mutated in place (the LSM/Faiss-shard shape;
     * [[pqCompactedIndex]] folds segments into a new base GENERATION at
     * leisure). Readers union base + segments. A changed base corpus (or
-    * training params) flips the recorded fingerprint and re-encodes the
-    * delta against the REBUILT spec — frozen-codebook reuse never
-    * outlives the codebooks themselves. ADVICE r15 (medium): the cached
-    * path re-validates the recorded fingerprint (the in-memory
-    * [[pqDeltaFpCache]], populated only by paths that checked or wrote
-    * the on-disk spec) instead of trusting catalog existence alone — a
-    * persistent metastore can hold a table whose codes predate a base
-    * rebuild. */
+    * training params) flips the fingerprint and re-encodes the delta
+    * against the REBUILT spec — frozen-codebook reuse never outlives the
+    * codebooks themselves. */
+  private def pqDelta(s: SparkSession, d: String, meta: PqIndexMeta, dd: PqDeltaDef) =
+    ensurePqLayer(s, pqDeltaTable(d, dd), pqSpecFingerprint(d) + "|" + dd.tag,
+        "appended") {
+      // the <1M-local-ids disjointness assumption, asserted (see
+      // [[PqDeltaIdOffset]]) — a vec_id-only column-pruned agg, paid
+      // once per APPEND, never per read
+      val maxLocal = Tables.embeddings(s, d)
+        .agg(max(col("vec_id") % PqDeltaBlockSpan)).head.getLong(0)
+      require(maxLocal < PqDeltaIdOffset,
+        s"delta-id disjointness violated: max local vec_id $maxLocal >= " +
+          s"$PqDeltaIdOffset — delta ids would collide with real vectors " +
+          s"(raise PqDeltaIdOffset / re-space id blocks)")
+      graft.pipeline.Bucketing.IndexBuild(Seq(encodeCodes(s, d,
+        residualFrameOf(deltaVecs(s, d, dd), meta.cents, meta.bits), meta.cbs)))
+    }
+
+  /** Delta segment `dd` of `d`'s vector index (see [[pqDelta]]). */
   private[graft] def pqDeltaSegment(
       s: SparkSession, d: String, meta: PqIndexMeta,
-      dd: PqDeltaDef = PqDelta1): DataFrame = {
-    val deltaT = pqDeltaTable(d, dd)
-    val k = deltaKey(d, dd)
-    val loc = s"${Dedup.warehouseDir(s)}/$deltaT"
-    val specPath = java.nio.file.Paths.get(loc, PqIdxSpecFile)
-    val fp = pqSpecFingerprint(d) + "|" + dd.tag
-    if (s.catalog.tableExists(deltaT) && Option(pqDeltaFpCache.get(k)).contains(fp)) {
-      vecDeltaMode.put(k, "cached")
-      graft.pipeline.Bucketing.readBucketed(s, deltaT)
-    } else {
-      val onDisk =
-        if (java.nio.file.Files.exists(specPath))
-          Some(java.nio.file.Files.readString(specPath).split("\n", 2))
-        else None
-      onDisk match {
-        case Some(Array(sfp, ddl)) if sfp == fp =>
-          if (s.catalog.tableExists(deltaT)) vecDeltaMode.put(k, "cached")
-          else {
-            s.sql(s"""CREATE TABLE $deltaT ($ddl) USING parquet
-                     |CLUSTERED BY (cellr) SORTED BY (cellr)
-                     |INTO $PqIdxBuckets BUCKETS
-                     |LOCATION '$loc'""".stripMargin)
-            vecDeltaMode.put(k, "reregistered")
-          }
-          pqDeltaFpCache.put(k, fp)
-          graft.pipeline.Bucketing.readBucketed(s, deltaT)
-        case _ =>
-          val t0 = System.nanoTime()
-          s.sql(s"DROP TABLE IF EXISTS $deltaT")
-          try Reconcile.deleteRecursively(loc)
-          catch { case _: Exception => () }
-          // the <1M-local-ids disjointness assumption, asserted (see
-          // [[PqDeltaIdOffset]]) — a vec_id-only column-pruned agg, paid
-          // once per APPEND, never per read
-          val maxLocal = Tables.embeddings(s, d)
-            .agg(max(col("vec_id") % PqDeltaBlockSpan)).head.getLong(0)
-          require(maxLocal < PqDeltaIdOffset,
-            s"delta-id disjointness violated: max local vec_id $maxLocal >= " +
-              s"$PqDeltaIdOffset — delta ids would collide with real vectors " +
-              s"(raise PqDeltaIdOffset / re-space id blocks)")
-          val rf = residualFrameOf(deltaVecs(s, d, dd), meta.cents, meta.bits)
-          val bests = pqBests(meta.cbs)
-          val codes = withSourceLang(s, d, rf.select(
-            Seq(col("vec_id"), col("cell"), col("cellr")) ++
-              bests.zipWithIndex.map { case (b, m) => b.getField("cid").as(s"c$m") }: _*))
-          graft.pipeline.Bucketing.writeBucketed(
-            codes, deltaT, Seq("cellr"), PqIdxBuckets, Some(loc))
-          java.nio.file.Files.writeString(
-            specPath, fp + "\n" + codes.schema.toDDL)
-          pqDeltaFpCache.put(k, fp)
-          vecDeltaMode.put(k, "appended")
-          vecDeltaSec.put(k, (System.nanoTime() - t0) / 1e9)
-          graft.pipeline.Bucketing.readBucketed(s, deltaT)
-      }
-    }
-  }
-
-  /** Recorded-and-validated spec fingerprint per delta segment — the
-    * in-memory gate on [[pqDeltaSegment]]'s cached path. Populated ONLY
-    * after the on-disk spec was read (or written) with a matching
-    * fingerprint; cleared by every invalidation. */
-  private val pqDeltaFpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drop the DELTA segments for `d` (the base index survives) — the
-    * forced-append timing's invalidation hook, and [[pqStoredIndex]]'s
-    * rebuild-branch cleanup. Folding generations are derived from the
-    * segments, so the compacted table falls with them. */
-  private[graft] def invalidatePqDelta(d: String): Unit = {
-    Seq(PqDelta1, PqDelta2).foreach { dd =>
-      val k = deltaKey(d, dd)
-      vecDeltaMode.remove(k)
-      pqDeltaFpCache.remove(k)
-      val t = pqDeltaTable(d, dd)
-      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-        try {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          try Reconcile.deleteRecursively(s"${Dedup.warehouseDir(s)}/$t")
-          catch { case _: Exception => () }
-        } catch { case _: Exception => () }
-      }
-    }
-    invalidatePqCompact(d)
-  }
+      dd: PqDeltaDef = PqDelta1): DataFrame =
+    pqDelta(s, d, meta, dd).frames.head
 
   /** Force-or-ensure the delta segment, returning (mode, append seconds —
     * 0 unless "appended"): the gate's `s17_delta_append` timing hook.
     * The base index is ensured first (never forced here — the forced
     * BUILD timing is [[ensurePqIndex]]'s), so the returned seconds time
-    * the DELTA-SIZED append alone. */
+    * the DELTA-SIZED append alone. `force` drops the segments and the
+    * compacted generation folded from them; the base survives. */
   private[graft] def ensurePqDelta(
       s: SparkSession, d: String, force: Boolean = false): (String, Double) = {
     val (_, meta) = pqStoredIndex(s, d)
-    if (force) invalidatePqDelta(d)
-    pqDeltaSegment(s, d, meta)
-    val mode = vecDeltaMode.getOrDefault(d, "none")
-    (mode,
-      if (mode == "appended") Option(vecDeltaSec.get(d)).fold(0.0)(_.doubleValue())
-      else 0.0)
+    if (force) graft.pipeline.Bucketing.dropIndex(s, pqTables(d).tail)
+    val e = pqDelta(s, d, meta, PqDelta1)
+    (e.mode, e.seconds)
   }
 
   // ---------- s18: segment COMPACTION into a new base generation ----------
 
   private def pqCompactTable(d: String): String =
     s"graft_pqidx_compact_${Dedup.pathKey(d)}"
-
-  /** What the last [[pqCompactedIndex]] call did per directory ("cached" /
-    * "reregistered" / "compacted") and the fold seconds when "compacted" —
-    * the compaction twin of [[vecIndexBuildMode]], read by the gate's
-    * timed `s18_compact` entry. */
-  private[graft] val vecCompactMode =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] val vecCompactSec =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-  private val pqCompactFpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** COMPACTION — the LSM fold that completes the index lifecycle
     * (round-15 verdict #3: build → append → ??? had no third step; a
@@ -1614,80 +1433,33 @@ object Similarity {
     * [[centroidJobCalls]] unmoved across a forced compaction), so the
     * result is row-identical to the union it replaces BY CONSTRUCTION —
     * s18 declares exactly s17's oracle, verbatim. The LSM discipline:
-    * the fold writes a new GENERATION (its own external table + spec,
-    * marker-last, fingerprint = base fp + the ordered segment tags) and
-    * never mutates the base in place — s16/s17 keep serving their own
+    * the fold writes a new GENERATION (its own external table on the
+    * base's lifecycle, fingerprint = base fp + the ordered segment tags)
+    * and never mutates the base in place — s16/s17 keep serving their own
     * layouts unchanged, readers of the compacted generation get the
     * single-table scan (no per-query union, segment-count-independent
     * plans), and retiring the folded segments is the operator's separate
-    * choice ([[invalidatePqDelta]]). 100 TB: compaction cost is one
-    * corpus-compressed shuffle-free bucketed rewrite (~10 small ints per
-    * vector — the cheapest possible rewrite of the index), scheduled at
-    * leisure, amortized over every search that follows. */
+    * choice. 100 TB: compaction cost is one corpus-compressed
+    * shuffle-free bucketed rewrite (~10 small ints per vector — the
+    * cheapest possible rewrite of the index), scheduled at leisure,
+    * amortized over every search that follows. */
+  private def pqCompact(s: SparkSession, d: String, segs: Seq[PqDeltaDef]) = {
+    val (base, meta) = pqStoredIndex(s, d)
+    val ordered = segs.sortBy(_.seg)
+    val e = ensurePqLayer(s, pqCompactTable(d),
+        pqSpecFingerprint(d) + ordered.map(dd => "|" + dd.tag).mkString, "compacted") {
+      graft.pipeline.Bucketing.IndexBuild(Seq(
+        ordered.map(pqDeltaSegment(s, d, meta, _)).foldLeft(base)(_ unionByName _)))
+    }
+    (e, meta)
+  }
+
+  /** The compacted generation of base + `segs` (see [[pqCompact]]). */
   private[graft] def pqCompactedIndex(
       s: SparkSession, d: String,
       segs: Seq[PqDeltaDef] = Seq(PqDelta1)): (DataFrame, PqIndexMeta) = {
-    val (base, meta) = pqStoredIndex(s, d)
-    val compT = pqCompactTable(d)
-    val loc = s"${Dedup.warehouseDir(s)}/$compT"
-    val specPath = java.nio.file.Paths.get(loc, PqIdxSpecFile)
-    val fp = pqSpecFingerprint(d) +
-      segs.sortBy(_.seg).map(dd => "|" + dd.tag).mkString
-    if (s.catalog.tableExists(compT) && Option(pqCompactFpCache.get(d)).contains(fp)) {
-      vecCompactMode.put(d, "cached")
-      (graft.pipeline.Bucketing.readBucketed(s, compT), meta)
-    } else {
-      val onDisk =
-        if (java.nio.file.Files.exists(specPath))
-          Some(java.nio.file.Files.readString(specPath).split("\n", 2))
-        else None
-      onDisk match {
-        case Some(Array(sfp, ddl)) if sfp == fp =>
-          if (s.catalog.tableExists(compT)) vecCompactMode.put(d, "cached")
-          else {
-            s.sql(s"""CREATE TABLE $compT ($ddl) USING parquet
-                     |CLUSTERED BY (cellr) SORTED BY (cellr)
-                     |INTO $PqIdxBuckets BUCKETS
-                     |LOCATION '$loc'""".stripMargin)
-            vecCompactMode.put(d, "reregistered")
-          }
-          pqCompactFpCache.put(d, fp)
-          (graft.pipeline.Bucketing.readBucketed(s, compT), meta)
-        case _ =>
-          val t0 = System.nanoTime()
-          s.sql(s"DROP TABLE IF EXISTS $compT")
-          try Reconcile.deleteRecursively(loc)
-          catch { case _: Exception => () }
-          val folded = segs.sortBy(_.seg)
-            .map(dd => pqDeltaSegment(s, d, meta, dd))
-            .foldLeft(base)(_ unionByName _)
-          graft.pipeline.Bucketing.writeBucketed(
-            folded, compT, Seq("cellr"), PqIdxBuckets, Some(loc))
-          java.nio.file.Files.writeString(
-            specPath, fp + "\n" + folded.schema.toDDL)
-          pqCompactFpCache.put(d, fp)
-          vecCompactMode.put(d, "compacted")
-          vecCompactSec.put(d, (System.nanoTime() - t0) / 1e9)
-          (graft.pipeline.Bucketing.readBucketed(s, compT), meta)
-      }
-    }
-  }
-
-  /** Drop only the COMPACTED generation for `d` (base + segments
-    * survive) — the forced-compaction timing's invalidation hook, and
-    * the derived-layer cleanup called by every base/segment
-    * invalidation. */
-  private[graft] def invalidatePqCompact(d: String): Unit = {
-    vecCompactMode.remove(d)
-    pqCompactFpCache.remove(d)
-    val t = pqCompactTable(d)
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-      try {
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        try Reconcile.deleteRecursively(s"${Dedup.warehouseDir(s)}/$t")
-        catch { case _: Exception => () }
-      } catch { case _: Exception => () }
-    }
+    val (e, meta) = pqCompact(s, d, segs)
+    (e.frames.head, meta)
   }
 
   /** Force-or-ensure the compacted generation, returning (mode, fold
@@ -1696,12 +1468,9 @@ object Similarity {
     * never forced, so the returned seconds time the FOLD alone. */
   private[graft] def ensurePqCompact(
       s: SparkSession, d: String, force: Boolean = false): (String, Double) = {
-    if (force) invalidatePqCompact(d)
-    pqCompactedIndex(s, d)
-    val mode = vecCompactMode.getOrDefault(d, "none")
-    (mode,
-      if (mode == "compacted") Option(vecCompactSec.get(d)).fold(0.0)(_.doubleValue())
-      else 0.0)
+    if (force) graft.pipeline.Bucketing.dropIndex(s, Seq(pqCompactTable(d)))
+    val (e, _) = pqCompact(s, d, Seq(PqDelta1))
+    (e.mode, e.seconds)
   }
 
   /** Per-micro-batch ANN enrichment against the PERSISTED index — q58's
@@ -1833,13 +1602,9 @@ object Similarity {
       s: SparkSession, d: String,
       segs: Seq[PqDeltaDef] = Seq(PqDelta1)): DataFrame = {
     val (_, meta) = pqStoredIndex(s, d)
-    val rf = residualFrameOf(
+    encodeCodes(s, d, residualFrameOf(
       segs.map(deltaVecs(s, d, _)).foldLeft(vecs(s, d))(_ unionByName _),
-      meta.cents, meta.bits)
-    val bests = pqBests(meta.cbs)
-    withSourceLang(s, d, rf.select(
-      Seq(col("vec_id"), col("cell"), col("cellr")) ++
-        bests.zipWithIndex.map { case (b, m) => b.getField("cid").as(s"c$m") }: _*))
+      meta.cents, meta.bits), meta.cbs)
   }
 
   /** Test hook: base codes table ∪ delta segment, as s17's candidate side

@@ -50,4 +50,98 @@ object Bucketing {
     * vs `read.parquet(path)`, which would silently DROP the bucket info). */
   def readBucketed(spark: SparkSession, table: String): DataFrame =
     spark.table(table)
+
+  /** What an index build hands [[ensureIndex]]: one frame per table (in the
+    * table order given there), extra text recorded in every table's spec
+    * file after its schema line, and a release for whatever the build
+    * cached, run once the frames are written. */
+  final case class IndexBuild(frames: Seq[DataFrame], spec: String = "",
+      release: () => Unit = () => ())
+
+  /** [[ensureIndex]]'s result: the tables read back, the recorded extra
+    * spec text, what the call did — "cached", "reregistered" or the build's
+    * label — and the build seconds (0 unless it built). */
+  final case class Ensured(frames: Seq[DataFrame], spec: String, mode: String,
+      seconds: Double)
+
+  /** Where index table `t` keeps its files: under the warehouse dir, so the
+    * files (and their spec) outlive the catalog entry. */
+  def indexLocation(s: SparkSession, t: String): String =
+    s"${s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")}/$t"
+
+  /** (schema DDL, extra spec text) of index table `t` when its spec file
+    * exists and records `fingerprint`; None when the table was never
+    * completed here or was built from other sources. The spec file is
+    * `fingerprint`, the DDL and the extra text, newline-separated (the
+    * extra line only when non-empty). */
+  def validSpec(s: SparkSession, t: String, specFile: String,
+      fingerprint: String): Option[(String, String)] = {
+    val p = java.nio.file.Paths.get(indexLocation(s, t), specFile)
+    if (!java.nio.file.Files.isRegularFile(p)) None
+    else java.nio.file.Files.readString(p).split("\n", 3) match {
+      case Array(`fingerprint`, ddl) => Some((ddl, ""))
+      case Array(`fingerprint`, ddl, extra) => Some((ddl, extra))
+      case _ => None
+    }
+  }
+
+  /** Drop index tables: their catalog entries and their files. */
+  def dropIndex(s: SparkSession, tables: Seq[String]): Unit = tables.foreach { t =>
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    graft.operators.Reconcile.deleteRecursively(indexLocation(s, t))
+  }
+
+  /** The one lifecycle of a persisted bucketed index: external tables
+    * (name, bucket keys) under [[indexLocation]], each with a spec file
+    * recording the `fingerprint` of the sources it was built from. Decided
+    * from disk on every call, so there is no in-memory state to forget:
+    *  - every spec records `fingerprint` and the catalog holds every
+    *    table: "cached";
+    *  - every spec records it but the catalog lacks a table (a fresh
+    *    metastore): the missing tables are re-declared over their files
+    *    (CREATE TABLE … CLUSTERED BY … LOCATION, catalog metadata only):
+    *    "reregistered";
+    *  - otherwise (no build, a build from other sources, deleted files, a
+    *    crashed build): drop and delete every table, then write each of
+    *    `build`'s frames followed by its table's spec file, so a crash
+    *    leaves at least one table without a valid spec and the next call
+    *    rebuilds: `builtAs`. */
+  def ensureIndex(s: SparkSession, tables: Seq[(String, Seq[String])],
+      numBuckets: Int, specFile: String, fingerprint: String,
+      builtAs: String = "built")(build: => IndexBuild): Ensured = {
+    def read(spec: String, mode: String, seconds: Double) =
+      Ensured(tables.map { case (t, _) => readBucketed(s, t) }, spec, mode, seconds)
+    val specs = tables.map { case (t, _) => validSpec(s, t, specFile, fingerprint) }
+    if (specs.forall(_.isDefined)) {
+      val missing = tables.zip(specs.flatten)
+        .filterNot { case ((t, _), _) => s.catalog.tableExists(t) }
+      missing.foreach { case ((t, keys), (ddl, _)) =>
+        val cluster = keys.mkString(", ")
+        s.sql(s"""CREATE TABLE $t ($ddl) USING parquet
+                 |CLUSTERED BY ($cluster) SORTED BY ($cluster)
+                 |INTO $numBuckets BUCKETS
+                 |LOCATION '${indexLocation(s, t)}'""".stripMargin)
+      }
+      read(specs.head.get._2, if (missing.isEmpty) "cached" else "reregistered", 0.0)
+    } else {
+      val t0 = System.nanoTime()
+      dropIndex(s, tables.map(_._1))
+      val b = build
+      try {
+        tables.zip(b.frames).foreach { case ((t, keys), df) =>
+          writeBucketed(df, t, keys, numBuckets, Some(indexLocation(s, t)))
+          val text = fingerprint + "\n" + df.schema.toDDL +
+            (if (b.spec.isEmpty) "" else "\n" + b.spec)
+          // written whole or not at all: a torn spec never validates
+          val p = java.nio.file.Paths.get(indexLocation(s, t), specFile)
+          val tmp = p.resolveSibling(specFile + ".tmp")
+          java.nio.file.Files.writeString(tmp, text)
+          java.nio.file.Files.move(tmp, p,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        }
+      } finally b.release()
+      read(b.spec, builtAs, (System.nanoTime() - t0) / 1e9)
+    }
+  }
 }

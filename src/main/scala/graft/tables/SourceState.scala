@@ -15,8 +15,9 @@ object SourceState {
   /** Fingerprint of `d`/`table`: sorted (name, size, mtime) of its parquet
     * files, hashed. Pure filesystem metadata — no data scan. Besides keying
     * [[memo]], it is recorded in the persisted indexes' spec files and
-    * re-checked when a later JVM reuses them, so a table regenerated
-    * between JVMs forces a rebuild instead of serving stale rows. */
+    * re-checked on every use ([[graft.pipeline.Bucketing.ensureIndex]]),
+    * so a regenerated table forces a rebuild instead of serving stale
+    * rows. */
   def fingerprint(d: String, table: String): String = {
     val root = java.nio.file.Paths.get(d, table)
     // a table may be a Spark-written DIRECTORY of part files or a single

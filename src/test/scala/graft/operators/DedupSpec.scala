@@ -516,26 +516,47 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.d17NearDupIndexed.fn(spark, sf).collect().map(_.toSeq).toSet == d16)
   }
 
-  test("d17 index invalidates on corpus change: stale fingerprint forces a rebuild") {
+  /** Drop every index table built over `dir`: catalog entry and files. */
+  private def dropIndexesOf(dir: String): Unit =
+    graft.pipeline.Bucketing.dropIndex(spark, spark.catalog.listTables().collect()
+      .map(_.name).filter(_.contains(Dedup.pathKey(dir))).toSeq)
+
+  private def writeDocs(dir: String, texts: Seq[(Long, String)]): Unit = {
     import spark.implicits._
+    texts.toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("t"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  private def rowsOf(q: graft.queries.QueryDef, dir: String) =
+    q.fn(spark, dir).collect().map(_.toSeq).toSet
+
+  test("d17 index invalidates on corpus change: stale fingerprint forces a rebuild") {
     val dir = java.nio.file.Files.createTempDirectory("graft_d17_fp").toString
-    def write(texts: Seq[(Long, String)]): Unit =
-      texts.toDF("doc_id", "text")
-        .withColumn("lang", lit("en")).withColumn("source", lit("t"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val (a, b) = ("alpha beta gamma delta " * 8, "omega psi chi phi " * 8)
     try {
-      write(Seq(1L -> ("alpha beta gamma delta " * 8), 2L -> ("omega psi chi phi " * 8)))
-      Dedup.invalidateParamCaches(dir)
+      writeDocs(dir, Seq(1L -> a, 2L -> b))
       val (m1, _) = Dedup.ensureNearDupIndex(spark, dir)
       assert(m1 == "built")
       // same JVM, same catalog: a second call is free
       assert(Dedup.ensureNearDupIndex(spark, dir)._1 == "cached")
+      // corpus rewritten IN THIS JVM — same texts, every doc_id shifted —
+      // with the catalog tables still registered and no hook called: the
+      // recorded fingerprint no longer matches, so it must REBUILD, and d17
+      // must name the new history ids exactly as d16 does
+      writeDocs(dir, Seq(2L -> a, 3L -> b))
+      val (mJvm, _) = Dedup.ensureNearDupIndex(spark, dir)
+      assert(mJvm == "built", s"an in-JVM corpus rewrite must force a rebuild, got $mJvm")
+      val d16 = rowsOf(Dedup.d16IncrementalNearDup, dir)
+      assert(d16.exists(r => r(2) != null), "no history match — the comparison is vacuous")
+      assert(rowsOf(Dedup.d17NearDupIndexed, dir) == d16,
+        "d17 serves the old corpus's history after an in-JVM rewrite")
       // corpus regenerated BETWEEN "JVMs": rewrite the parquet, drop the
       // catalog entries (files + spec survive), re-ensure — the source
       // fingerprint no longer matches, so serving the old files would be
       // the stale-history bug; it must REBUILD
-      write(Seq(1L -> ("one two three four " * 8), 3L -> ("five six seven eight " * 8)))
+      writeDocs(dir, Seq(1L -> ("one two three four " * 8), 3L -> ("five six seven eight " * 8)))
       spark.catalog.listTables().collect().map(_.name)
         .filter(_.contains("graft_ndidx")).filter(_.contains("graft_d17_fp"))
         .foreach(t => spark.sql(s"DROP TABLE $t"))
@@ -543,7 +564,30 @@ class DedupSpec extends SparkSpec {
       assert(m2 == "built",
         s"a changed corpus fingerprint must force a rebuild, got $m2")
     } finally {
-      Dedup.invalidateParamCaches(dir)
+      dropIndexesOf(dir)
+      graft.operators.Reconcile.deleteRecursively(dir)
+    }
+  }
+
+  test("d17 index whose files were deleted under a live catalog entry is rebuilt, not served empty") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_d17_gone").toString
+    try {
+      writeDocs(dir, Seq(1L -> ("alpha beta gamma delta " * 8), 2L -> ("omega psi chi phi " * 8)))
+      assert(Dedup.ensureNearDupIndex(spark, dir)._1 == "built")
+      // a persistent metastore keeps the tables registered while their
+      // warehouse directories are removed underneath
+      val tables = spark.catalog.listTables().collect().map(_.name)
+        .filter(_.contains(Dedup.pathKey(dir)))
+      assert(tables.length == 2, s"expected the two index tables, saw: ${tables.toSeq}")
+      tables.foreach(t => graft.operators.Reconcile.deleteRecursively(
+        graft.pipeline.Bucketing.indexLocation(spark, t)))
+      val (mode, _) = Dedup.ensureNearDupIndex(spark, dir)
+      assert(mode == "built", s"an index with no files must rebuild, got $mode")
+      val d16 = rowsOf(Dedup.d16IncrementalNearDup, dir)
+      assert(d16.exists(r => r(1) != 0L), "no history match — the comparison is vacuous")
+      assert(rowsOf(Dedup.d17NearDupIndexed, dir) == d16)
+    } finally {
+      dropIndexesOf(dir)
       graft.operators.Reconcile.deleteRecursively(dir)
     }
   }

@@ -13,6 +13,28 @@ class SimilaritySpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Drop the catalog entries (not the files) of tables whose name starts
+    * with `prefix` — all that a JVM restart loses. */
+  private def dropCatalogTables(prefix: String): Unit =
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith(prefix)).foreach(t => spark.sql(s"DROP TABLE $t"))
+
+  /** Deterministic nonzero 64-dim float vectors under `dir`; the seed
+    * varies the data so a rewrite genuinely changes file content. */
+  private def writeVecs(dir: String, seed: Int): Unit =
+    spark.range(0, 60).select(
+      col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(63)),
+        i => sin((col("id") + 1) * (i + lit(seed + 1))).cast("float")).as("embedding"),
+      (col("id") % 2).cast("int").as("label"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+
+  /** Drop every layer of `dir`'s vector index and then `dir` itself. */
+  private def cleanUp(dir: String): Unit = {
+    graft.pipeline.Bucketing.dropIndex(spark, Similarity.pqTables(dir))
+    graft.operators.Reconcile.deleteRecursively(dir)
+  }
+
   test("s09 ADC top-k recalls the exact-in-cell ranking well above the naive-PQ floor") {
     val adc = Similarity.s09IvfPqAdc.fn(spark, sf)
       .select(col("probe_id"), col("neighbor_id"), lit(1L).as("__hit"))
@@ -171,14 +193,13 @@ class SimilaritySpec extends SparkSpec {
     val s09 = Similarity.s09IvfPqAdc.fn(spark, sf).collect().map(_.toSeq).toSet
     // first build (or reuse of an earlier suite's)
     Similarity.ensurePqIndex(spark, sf)
-    // simulate a fresh JVM: the in-memory catalog loses the table and the
-    // spec-metadata map empties, but the EXTERNAL table's warehouse files
-    // (and spec file) remain — DROP TABLE on external deletes metadata only
+    // simulate a fresh JVM: the in-memory catalog loses the table, but
+    // the EXTERNAL table's warehouse files (and spec file) remain — DROP
+    // TABLE on external deletes metadata only
     val pqidx = spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_pqidx_"))
     assert(pqidx.nonEmpty, "expected the codes index table in the catalog")
     pqidx.foreach(t => spark.sql(s"DROP TABLE $t"))
-    Similarity.forgetPqMetaForTest(sf)
     val (mode, sec) = Similarity.ensurePqIndex(spark, sf)
     // "reregistered" is the claim: catalog metadata re-declared over the
     // existing files and the spec literals re-parsed — the 16 Lloyd jobs
@@ -193,9 +214,9 @@ class SimilaritySpec extends SparkSpec {
     // a completed build leaves the spec file in the warehouse
     Similarity.ensurePqIndex(spark, sf)
     val expected = Similarity.s05IvfSearch.fn(spark, sf).collect().map(_.toSeq).toSet
-    // simulate a fresh JVM: in-memory spec metadata and refine-bit cache
-    // gone (the warehouse files survive a restart)
-    Similarity.forgetPqMetaForTest(sf)
+    // simulate a fresh JVM: the catalog tables are gone (the warehouse
+    // files survive a restart)
+    dropCatalogTables("graft_pqidx_")
     val cents0 = Similarity.centroidJobCalls.get()
     val lloyd0 = Similarity.pqTrainCalls.get()
     val got = Similarity.s05IvfSearch.fn(spark, sf).collect().map(_.toSeq).toSet
@@ -251,12 +272,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("s17 delta segment survives a catalog restart: re-registered, not re-encoded") {
     val before = Similarity.s17IvfPqAppend.fn(spark, sf).collect().map(_.toSeq).toSet
-    // simulate a fresh JVM: drop BOTH catalog tables (external — files
-    // survive) and the in-memory spec metadata
-    spark.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith("graft_pqidx_"))
-      .foreach(t => spark.sql(s"DROP TABLE $t"))
-    Similarity.forgetPqMetaForTest(sf)
+    // simulate a fresh JVM: drop the catalog tables (external — files
+    // survive)
+    dropCatalogTables("graft_pqidx_")
     val (mode, sec) = Similarity.ensurePqDelta(spark, sf)
     assert(mode == "reregistered",
       s"restart must reuse the persisted delta segment, got $mode")
@@ -266,69 +284,50 @@ class SimilaritySpec extends SparkSpec {
 
   test("s17 delta segment invalidates with the base corpus: stale fingerprint re-encodes") {
     val dir = java.nio.file.Files.createTempDirectory("graft_s17_fp").toString
-    def write(seed: Int): Unit =
-      spark.range(0, 60).select(
-        col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(63)),
-          i => sin((col("id") + 1) * (i + lit(seed + 1))).cast("float")).as("embedding"),
-        (col("id") % 2).cast("int").as("label"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     try {
-      write(0)
-      Similarity.invalidateParamCaches(dir)
+      writeVecs(dir, 0)
       assert(Similarity.ensurePqDelta(spark, dir)._1 == "appended")
       assert(Similarity.ensurePqDelta(spark, dir)._1 == "cached")
       // corpus regenerated "between JVMs": the delta's recorded fingerprint
       // (base fp + delta tag) no longer matches — serving old delta codes
       // against REBUILT codebooks would rank garbage; it must re-encode
-      write(7)
-      spark.catalog.listTables().collect().map(_.name)
-        .filter(n => n.startsWith("graft_pqidx_") && n.contains("graft_s17_fp"))
-        .foreach(t => spark.sql(s"DROP TABLE $t"))
-      Similarity.forgetPqMetaForTest(dir)
+      writeVecs(dir, 7)
+      dropCatalogTables("graft_pqidx_")
       val (m2, _) = Similarity.ensurePqDelta(spark, dir)
       assert(m2 == "appended",
         s"a changed base corpus must force a delta re-encode, got $m2")
-    } finally {
-      Similarity.invalidateParamCaches(dir)
-      graft.operators.Reconcile.deleteRecursively(dir)
-    }
+    } finally cleanUp(dir)
   }
 
   test("s16 index invalidates on corpus change: stale fingerprint forces a rebuild") {
     val dir = java.nio.file.Files.createTempDirectory("graft_s16_fp").toString
-    // deterministic nonzero 64-dim float vectors; seed varies the data so
-    // the rewrite genuinely changes file content (and size)
-    def write(seed: Int): Unit =
-      spark.range(0, 60).select(
-        col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(63)),
-          i => sin((col("id") + 1) * (i + lit(seed + 1))).cast("float")).as("embedding"),
-        (col("id") % 2).cast("int").as("label"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def rows() = Similarity.s16IvfPqIndexed.fn(spark, dir).collect().map(_.toSeq).toSet
     try {
-      write(0)
-      Similarity.invalidateParamCaches(dir)
+      writeVecs(dir, 0)
       val (m1, _) = Similarity.ensurePqIndex(spark, dir)
       assert(m1 == "built")
       // same JVM, same catalog: a second call is free
       assert(Similarity.ensurePqIndex(spark, dir)._1 == "cached")
-      // corpus regenerated BETWEEN "JVMs": rewrite the parquet, drop the
-      // catalog entry (files + spec survive), forget the in-memory spec —
-      // the source fingerprint no longer matches, so serving the old codes
-      // would be the stale-index bug; it must REBUILD
-      write(7)
-      spark.catalog.listTables().collect().map(_.name)
-        .filter(n => n.startsWith("graft_pqidx_") && n.contains("graft_s16_fp"))
-        .foreach(t => spark.sql(s"DROP TABLE $t"))
-      Similarity.forgetPqMetaForTest(dir)
+      // corpus rewritten IN THIS JVM with the catalog table still
+      // registered and no hook called: the recorded fingerprint no longer
+      // matches, so it must REBUILD and serve what a forced build serves
+      writeVecs(dir, 7)
+      val (mJvm, _) = Similarity.ensurePqIndex(spark, dir)
+      assert(mJvm == "built", s"an in-JVM corpus rewrite must force a rebuild, got $mJvm")
+      val served = rows()
+      assert(served.nonEmpty, "s16 returned no rows — the comparison is vacuous")
+      assert(Similarity.ensurePqIndex(spark, dir, force = true)._1 == "built")
+      assert(served == rows(), "s16 after an in-JVM rewrite differs from a forced build")
+      // corpus regenerated BETWEEN "JVMs": rewrite the parquet and drop the
+      // catalog entry (files + spec survive) — the source fingerprint no
+      // longer matches, so serving the old codes would be the stale-index
+      // bug; it must REBUILD
+      writeVecs(dir, 14)
+      dropCatalogTables("graft_pqidx_")
       val (m2, _) = Similarity.ensurePqIndex(spark, dir)
       assert(m2 == "built",
         s"a changed corpus fingerprint must force a rebuild, got $m2")
-    } finally {
-      Similarity.invalidateParamCaches(dir)
-      graft.operators.Reconcile.deleteRecursively(dir)
-    }
+    } finally cleanUp(dir)
   }
 
   test("s18 compaction folds with ZERO training/encode jobs and equals s17 exactly") {
@@ -387,27 +386,17 @@ class SimilaritySpec extends SparkSpec {
 
   test("a base REBUILD invalidates delta segments and the compacted generation") {
     // ADVICE r15 (medium): with a persistent metastore, a corpus change
-    // self-heals the BASE index but — before this round — kept serving
+    // self-heals the BASE index but — before round 15 — kept serving
     // delta/compact codes encoded against the dropped codebooks. The
-    // fresh-JVM-with-persistent-catalog scenario: tables exist in the
-    // catalog, in-memory caches are empty, base fingerprint is stale.
+    // persistent-catalog scenario: tables stay registered while the base
+    // fingerprint goes stale.
     val dir = java.nio.file.Files.createTempDirectory("graft_s18_fp").toString
-    def write(seed: Int): Unit =
-      spark.range(0, 60).select(
-        col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(63)),
-          i => sin((col("id") + 1) * (i + lit(seed + 1))).cast("float")).as("embedding"),
-        (col("id") % 2).cast("int").as("label"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     try {
-      write(0)
-      Similarity.invalidateParamCaches(dir)
+      writeVecs(dir, 0)
       assert(Similarity.ensurePqDelta(spark, dir)._1 == "appended")
       assert(Similarity.ensurePqCompact(spark, dir)._1 == "compacted")
-      // corpus regenerated; simulate ONLY a JVM restart — catalog tables
-      // deliberately NOT dropped (the persistent-metastore case)
-      write(7)
-      Similarity.forgetPqMetaForTest(dir)
+      // corpus regenerated; catalog tables deliberately NOT dropped
+      writeVecs(dir, 7)
       val (bm, _) = Similarity.ensurePqIndex(spark, dir)
       assert(bm == "built", s"stale base must rebuild, got $bm")
       // the derived layers must re-derive against the NEW codebooks —
@@ -418,10 +407,7 @@ class SimilaritySpec extends SparkSpec {
       val (cm, _) = Similarity.ensurePqCompact(spark, dir)
       assert(cm == "compacted",
         s"compacted generation must re-fold after a base rebuild, got $cm")
-    } finally {
-      Similarity.invalidateParamCaches(dir)
-      graft.operators.Reconcile.deleteRecursively(dir)
-    }
+    } finally cleanUp(dir)
   }
 
   test("q58 serving: base∪delta visible, candidate read cell-pruned, occupancy bounded") {

@@ -59,4 +59,36 @@ class BucketingSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS bk_p")
     }
   }
+
+  test("ensureIndex decides from disk: built, cached, reregistered, rebuilt on a new fingerprint or a torn spec") {
+    import spark.implicits._
+    val tables = Seq("bk_idx_a" -> Seq("k"), "bk_idx_b" -> Seq("v"))
+    var builds = 0
+    def ensure(fp: String) = Bucketing.ensureIndex(spark, tables, 4, "_SPEC", fp) {
+      builds += 1
+      val df = (1 to 50).map(i => (i.toLong % 7, i.toLong)).toDF("k", "v")
+      Bucketing.IndexBuild(Seq(df, df), spec = "extra line 1\nextra line 2")
+    }
+    try {
+      val built = ensure("fp1")
+      assert((built.mode, builds) == ("built", 1) && built.seconds > 0.0)
+      assert(built.frames.map(_.count()) == Seq(50L, 50L))
+      assert(ensure("fp1").mode == "cached" && builds == 1)
+      // a fresh catalog over completed files: re-declared, bucket spec intact
+      spark.sql("DROP TABLE bk_idx_b")
+      val rereg = ensure("fp1")
+      assert((rereg.mode, rereg.seconds, builds) == ("reregistered", 0.0, 1))
+      assert(rereg.spec == "extra line 1\nextra line 2")
+      assert(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier("bk_idx_b")).bucketSpec.map(_.numBuckets)
+        .contains(4))
+      assert(rereg.frames(1).count() == 50L)
+      // other sources: rebuilt although every table is registered
+      assert(ensure("fp2").mode == "built" && builds == 2)
+      // a spec file cut short of its fingerprint line never validates
+      val spec = java.nio.file.Paths.get(Bucketing.indexLocation(spark, "bk_idx_a"), "_SPEC")
+      Files.writeString(spec, "fp")
+      assert(ensure("fp2").mode == "built" && builds == 3)
+    } finally Bucketing.dropIndex(spark, tables.map(_._1))
+  }
 }
