@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
@@ -12,9 +14,9 @@ import graft.operators.{Dedup, Similarity}
   * from sf0.1, then runs the headline queries at BOTH scales under a
   * constrained driver and asserts:
   *
-  *  - plan shapes are unchanged at 10× (q21/q22 keep the full broadcast
-  *    ladder and never sort-merge the fact; no query grows a cartesian or
-  *    broadcast-nested-loop anywhere),
+  *  - plan shapes are unchanged at 10× (q21/q22 keep one rule-index probe,
+  *    one fact scan and never sort-merge the fact; no query grows a
+  *    cartesian or broadcast-nested-loop anywhere),
   *  - no driver OOM (run this main with SPARK_DRIVER_MEM=4g),
   *  - runtime scales ≲ linearly (t10x ≤ LinearBound × t1x per query —
   *    sublinear in practice since fixed costs amortize; the bound leaves
@@ -1030,7 +1032,7 @@ object ScaleSmoke {
        |  raw ratio alone could bless a several-fold data-time regression
        |  in the floor-dominated regime).
        |- `violations` — ratio bounds, plan shapes (cartesian/BNLJ/lost
-       |  broadcast ladder), pinned-RDD leaks, write-path idempotency,
+       |  rule-index probe), pinned-RDD leaks, write-path idempotency,
        |  LSH occupancy boundedness.
        |
        |Current ratcheted bounds (recorded quiet ratio → bound):
@@ -1165,52 +1167,32 @@ object ScaleSmoke {
     vs.map("\"" + Measure.jsonEscape(_) + "\"").mkString("[", ",", "]")
 
   /** Shape violations in a 10×-scale plan: a cartesian/nested-loop join
-    * anywhere, or (kernel queries) a lost broadcast ladder. Mirrors
+    * anywhere, or (kernel queries) a lost rule-index probe. Mirrors
     * PlanSpec's assertions so the same contract is checked at both scales. */
-  private def planViolations(name: String, plan: String): Seq[String] = {
+  private def planViolations(name: String, plan: SparkPlan): Seq[String] = {
     // q47 resolves through Auto — on the metadata-scale demo dim the pick
-    // MUST be Broadcast, so it owes the same full ladder as q21/q22 (a
-    // flip to Shuffle at scale would trip the ladder assertion: exactly
+    // MUST be Broadcast, so it owes the same rule-index probe as q21/q22 (a
+    // flip to Shuffle at scale would trip the probe assertion: exactly
     // the regression this pin exists to catch)
     val isKernel = name == "q22_kernel_full" || name == "q21_rule_match" ||
       name == "q47_rule_match_auto"
-    // Count DISTINCT BNLJ nodes, not string occurrences (optimization
-    // round 17): the kernel's deduped rule dim is now CACHED (one window
-    // pass shared by all 8 families), and every InMemoryTableScan
-    // reference prints the SAME cached construction plan — its one
-    // dim-construction BNLJ appeared 16× as text while executing ONCE
-    // (vs 8 executions in the pre-cache shape this check was written
-    // for). Normalizing each BNLJ line past its tree-art prefix and
-    // deduplicating counts each distinct node once: the uncached shape's
-    // 8 per-family nodes carry distinct expression ids and still count 8;
-    // a genuinely new (fact-side) BNLJ adds a new distinct line. Kernel
-    // fact-side hazards remain separately pinned by the ladder/SMJ checks
-    // below.
-    val bnlj = plan.linesIterator
-      .filter(_.contains("BroadcastNestedLoopJoin"))
-      .map(_.dropWhile(c => !c.isLetter)).toSet.size
-    // the kernel's demo dim is BUILT with a bounded broadcast cross join
-    // (41 rules × distinct months, both sides driver-memoized metadata) and
-    // that construction is repeated inside each of the 8 family subtrees —
-    // broadcast-ladder families for q21/q22, stacked tall-union families
-    // for q40's shuffle fallback — 8 scale-independent BNLJs by
-    // construction (the fact-scan count, which is what actually scales, is
-    // PlanSpec-pinned at 1). Anything beyond them — or any BNLJ in the
-    // corpus queries — is a real scale hazard. q40 gets the construction
-    // allowance but NOT the kernel ladder requirement: its whole point is
-    // resolving the rules without broadcasting the dim.
-    val dimConstructed = isKernel || name == "q40_rule_match_shuffle"
-    val bnljAllowed = if (dimConstructed) 8 else 0
+    // BNLJ operators counted structurally (PlanShape walks each executed
+    // node once). The kernel's demo dim is BUILT with a bounded broadcast
+    // cross join (41 rules × distinct months, both sides driver-memoized
+    // metadata). The ladder collects the dim into its rule index before
+    // the fact plan exists, so q21/q22/q47 carry no BNLJ; q40's shuffle
+    // fallback plans the dim construction once, in its tall-dim subtree.
+    // Anything beyond that — or any BNLJ in the corpus queries — is a real
+    // scale hazard. q40 gets the construction allowance but NOT the kernel
+    // shape: its whole point is resolving the rules without broadcasting
+    // the dim.
+    val bnlj = PlanShape.count[BroadcastNestedLoopJoinExec](plan)
+    val bnljAllowed = if (name == "q40_rule_match_shuffle") 1 else 0
     val common = Seq(
-      "CartesianProduct" -> plan.contains("CartesianProduct"),
-      s"BroadcastNestedLoopJoin ($bnlj > $bnljAllowed allowed)" -> (bnlj > bnljAllowed))
-    val kernel =
-      if (isKernel) Seq(
-        "broadcast ladder lost (<8 BroadcastHashJoin)" ->
-          ("BroadcastHashJoin".r.findAllIn(plan).size < 8),
-        "fact-side SortMergeJoin" -> plan.contains("SortMergeJoin"))
-      else Nil
-    (common ++ kernel).collect { case (msg, true) => msg }
+      "CartesianProduct" -> (PlanShape.count[CartesianProductExec](plan) > 0),
+      s"BroadcastNestedLoopJoin ($bnlj > $bnljAllowed allowed)" -> (bnlj > bnljAllowed)
+    ).collect { case (msg, true) => msg }
+    common ++ (if (isKernel) PlanShape.kernelViolations(plan) else Nil)
   }
 
   def main(args: Array[String]): Unit = {
@@ -1583,15 +1565,13 @@ object ScaleSmoke {
         // a streaming entry's fn returns the SINK READ-BACK (constructing
         // it runs a whole extra drain) — its batch plan shape is just a
         // parquet scan, so there is nothing for planViolations to audit
-        if (streamingProbes.contains(name)) ""
+        if (streamingProbes.contains(name)) None
         else
-          try fn(spark, dir).queryExecution.executedPlan.toString
-          catch { case _: Throwable => "" }
-      // an empty plan means the query itself failed above — that violation
-      // is already recorded; a phantom "ladder lost" on "" would be noise
-      val pv =
-        if (plan.isEmpty) Nil
-        else planViolations(name, plan).map(v => s"$name: $v")
+          try Some(fn(spark, dir).queryExecution.executedPlan)
+          catch { case _: Throwable => None }
+      // no plan means the query itself failed above — that violation is
+      // already recorded; a phantom "probe lost" would be noise
+      val pv = plan.toSeq.flatMap(p => planViolations(name, p).map(v => s"$name: $v"))
       // publish the raw (un-floored) per-side minima for streaming
       // entries, and detect the floor-swallowed-base case explicitly
       // (ADVICE r10): when floor ≥ raw base the 0.001 clamp would explode

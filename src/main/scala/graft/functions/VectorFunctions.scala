@@ -1,9 +1,12 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftExpectsInputTypes
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -458,6 +461,59 @@ object VectorFunctions {
       copy(left = l, right = r)
   }
 
+  /** The rule ladder's per-row probe: the five match keys of a fact row
+    * (invoice_month, billing_account_id, project_id, service_description,
+    * sku_id, already cast to the index's key types) → the resolved payload
+    * struct, or null when no rule matches. One [[RuleIndex.probe]] call per
+    * row — one hash lookup, then a walk of that (month, account)'s rules.
+    *
+    * Full `doGenCode`, not CodegenFallback (CollapseCodegenStages would cut
+    * the fused fact stage there) and not a ScalaUDF (it converts values on
+    * every row). The index is reached through `references`, read once per
+    * partition into a field: the generated text carries no per-call value,
+    * so every tick reuses one compiled class. */
+  case class RuleIndexProbe(children: Seq[Expression], index: Broadcast[RuleIndex],
+                            dataType: StructType) extends Expression {
+    override def nullable: Boolean = true
+    @transient private lazy val local: RuleIndex = index.value
+    override def eval(input: InternalRow): Any = {
+      val k = children.map(_.eval(input).asInstanceOf[AnyRef])
+      local.probe(k(0), k(1), k(2), k(3), k(4))
+    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val cls = classOf[RuleIndex].getName
+      val bc = ctx.addReferenceObj("ruleIndex", index, classOf[Broadcast[_]].getName)
+      val idx = ctx.addMutableState(cls, "ruleIndex", v => s"$v = ($cls) $bc.value();")
+      val keys = children.map(_.genCode(ctx))
+      val args = children.zip(keys).map { case (c, k) =>
+        val v = if (CodeGenerator.isPrimitiveType(c.dataType))
+          s"${CodeGenerator.boxedType(c.dataType)}.valueOf(${k.value})" else k.value.toString
+        s"${k.isNull} ? null : (Object) $v"
+      }
+      ev.copy(code = code"""
+        |${keys.map(_.code).mkString("\n")}
+        |InternalRow ${ev.value} = $idx.probe(${args.mkString(", ")});
+        |boolean ${ev.isNull} = ${ev.value} == null;""".stripMargin)
+    }
+    override def toString: String = s"rule_index_probe(${children.mkString(", ")})"
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+      copy(children = c)
+  }
+
+  /** One timestamp for every row of a call, bound through `references`
+    * instead of folded into a literal: `current_timestamp()` becomes a new
+    * `…L` constant in the generated code on every call, so each call
+    * compiled its stages afresh. Not foldable, so it stays a reference. */
+  case class BoundTimestamp(micros: Long) extends LeafExpression {
+    override def dataType: DataType = TimestampType
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any = micros
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("micros", java.lang.Long.valueOf(micros), "java.lang.Long")
+      ev.copy(code = code"long ${ev.value} = $ref.longValue();", isNull = FalseLiteral)
+    }
+  }
+
   // Column wrappers (Spark 4 classic: Column ↔ Expression via the bridge)
   import org.apache.spark.sql.GraftColumnBridge.{column, expression}
   def dotF(a: Column, b: Column): Column = column(FloatVecDot(expression(a), expression(b)))
@@ -472,4 +528,83 @@ object VectorFunctions {
   def wordShingles(c: Column, w: Int): Column = column(WordShingles(expression(c), w))
   def creditsPivot(t: Column, a: Column): Column =
     column(CreditsPivot(expression(t), expression(a)))
+  def ruleIndexProbe(keys: Seq[Column], index: Broadcast[RuleIndex], payload: StructType): Column =
+    column(RuleIndexProbe(keys.map(expression), index, payload))
+  /** The current time as one [[BoundTimestamp]]: the same on every row. */
+  def boundNow(): Column = column(BoundTimestamp(
+    org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(java.time.Instant.now())))
+}
+
+/** A broadcastable rule index: the rule dim's deduplicated rows grouped by
+  * (invoice_month, billing_account_id) in an open-addressing table, each
+  * group an array in precedence order (most specific first). Keys and
+  * payloads are Catalyst internal values (`UTF8String`s compare by bytes),
+  * the key values already cast to the types the fact's keys coerce to.
+  * Built by `RuleMatch`; probed by [[VectorFunctions.RuleIndexProbe]]. */
+final class RuleIndex private (months: Array[AnyRef], accounts: Array[AnyRef],
+                               groups: Array[Array[RuleIndex.Rule]]) extends Serializable {
+  private val mask = months.length - 1
+
+  /** The payload of the matching rules, per column the first non-null in
+    * precedence order (the ladder's per-column coalesce); null when no rule
+    * matches. A rule matches when each specializer it has equals the
+    * fact's non-null value; a null month or account never matches. */
+  def probe(month: AnyRef, account: AnyRef, project: AnyRef, service: AnyRef,
+            sku: AnyRef): InternalRow = {
+    if (month == null || account == null) return null
+    var slot = RuleIndex.slot(month, account) & mask
+    while (months(slot) != null &&
+      !(months(slot).equals(month) && accounts(slot).equals(account))) slot = (slot + 1) & mask
+    if (months(slot) == null) return null
+    val group = groups(slot)
+    val n = group(0).payload.length
+    val out = new Array[Any](n)
+    var missing = n
+    var i = 0
+    while (i < group.length && missing > 0) {
+      val r = group(i)
+      if (RuleIndex.matches(r.project, project) && RuleIndex.matches(r.service, service) &&
+        RuleIndex.matches(r.sku, sku)) {
+        var j = 0
+        while (j < n) {
+          if (out(j) == null && r.payload(j) != null) { out(j) = r.payload(j); missing -= 1 }
+          j += 1
+        }
+      }
+      i += 1
+    }
+    if (missing == n) null else new GenericInternalRow(out)
+  }
+}
+
+object RuleIndex {
+  /** One rule: its specializers (`None` = wildcard; `Some(null)` never
+    * matches, like a null equi-join key) and its payload. */
+  final class Rule(val project: Option[AnyRef], val service: Option[AnyRef],
+                   val sku: Option[AnyRef], val payload: Array[AnyRef]) extends Serializable
+
+  private def matches(spec: Option[AnyRef], v: AnyRef): Boolean =
+    spec.isEmpty || (v != null && v.equals(spec.get))
+
+  private def slot(month: AnyRef, account: AnyRef): Int = {
+    val h = month.hashCode * 31 + account.hashCode
+    h ^ (h >>> 16)
+  }
+
+  /** `rules` as ((month, account), rule) in precedence order; rules with a
+    * null month or account are dropped (they match nothing). */
+  def apply(rules: Seq[((AnyRef, AnyRef), Rule)]): RuleIndex = {
+    val grouped = rules.filter { case ((m, a), _) => m != null && a != null }
+      .groupBy(_._1).map { case (k, rs) => k -> rs.map(_._2).toArray }
+    var cap = 4
+    while (cap < 2 * grouped.size) cap <<= 1
+    val (months, accounts) = (new Array[AnyRef](cap), new Array[AnyRef](cap))
+    val groups = new Array[Array[Rule]](cap)
+    grouped.foreach { case ((m, a), rs) =>
+      var s = slot(m, a) & (cap - 1)
+      while (months(s) != null) s = (s + 1) & (cap - 1)
+      months(s) = m; accounts(s) = a; groups(s) = rs
+    }
+    new RuleIndex(months, accounts, groups)
+  }
 }

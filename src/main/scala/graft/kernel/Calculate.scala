@@ -64,8 +64,12 @@ object Conform {
   import BillingSchema._
 
   /** @param etlTime injectable for deterministic tests/oracles
-    *                (SURVEY.md §7.4 risk 5). */
-  def conformToTarget(df: DataFrame, etlTime: Column = current_timestamp()): DataFrame = {
+    *                (SURVEY.md §7.4 risk 5). The default is the time of
+    *                the call, one value on every row, bound by reference
+    *                (`VectorFunctions.boundNow`) rather than folded into a
+    *                literal, so repeated calls reuse one compiled stage. */
+  def conformToTarget(df: DataFrame,
+                      etlTime: Column = graft.functions.VectorFunctions.boundNow()): DataFrame = {
     val present = df.columns.toSet
     val cols: Seq[Column] = TargetColumns.map {
       case "etl_time" =>

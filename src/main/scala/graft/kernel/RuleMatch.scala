@@ -1,15 +1,19 @@
 package graft.kernel
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.EqualTo
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import graft.functions.{RuleIndex, VectorFunctions}
 
 /** J1–J9 — hierarchical most-specific-wins contract-rule lookup
   * (ref: calculate/service.py:102-138; SQL twin calculate/sql_template.py:47-122).
   *
   * The dimension has three OPTIONAL specializer keys (`project_id`,
   * `service_description`, `sku_id`); a null means "wildcard". That yields
-  * 2³ = 8 rule families. Each family left-joins the fact on
+  * 2³ = 8 rule families. A rule of a family matches a fact row on
   * (invoice_month, billing_account_id) + its present specializers, and the
   * winning payload per fact row is resolved per-column by precedence
   *
@@ -23,13 +27,16 @@ import org.apache.spark.sql.functions._
   * (calculate/sql_template.py:93-98).
   *
   * Scale design: the dim is contract metadata — small by construction — so
-  * all 8 joins are `broadcast()` hash joins: the 100 TB fact is never
-  * shuffled, and the 8 joins fuse into one codegen stage.
+  * it is collected once into one broadcast rule index, probed per fact row
+  * by one expression: the 100 TB fact is never shuffled, and scan, probe,
+  * modes and conform fuse into one codegen stage whose generated method
+  * stays under HotSpot's 8,000-byte JIT limit (8 broadcast hash joins and
+  * 6 coalesces made it 10,896 bytes, so it ran interpreted).
   *
   * Defined-away reference quirk (SURVEY.md §2.3): duplicate keys inside one
   * rule family silently misalign rows in pandas. Here each family is
   * deterministically deduplicated (first row under an explicit payload sort)
-  * before joining — documented first-match semantics.
+  * before matching — documented first-match semantics.
   */
 object RuleMatch {
 
@@ -81,9 +88,10 @@ object RuleMatch {
     * Before this change each of the 8 broadcast subtrees (and each of
     * q40's 8 union branches) ran its OWN filter+window+shuffle over the
     * dim — 8 small window jobs per kernel query (~1.4 s of the ~4.7 s
-    * q22 wall at sf0.1). Callers materialize this frame once (the ladder
-    * caches it; the tall fallback consumes it directly — the union-of-8
-    * disappears entirely because the families partition the dim). */
+    * q22 wall at sf0.1). Each caller runs it once (the ladder collects it
+    * into its index; the tall fallback consumes it directly — the
+    * union-of-8 disappears entirely because the families partition the
+    * dim). */
   private[kernel] def allFamiliesDeduped(dim: DataFrame): DataFrame = {
     val fam = lit(1) +
       when(col("project_id").isNotNull, 1).otherwise(0) +
@@ -95,16 +103,6 @@ object RuleMatch {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  /** Family `i`'s rows off the shared deduped frame, reshaped for the
-    * ladder join: present keys + renamed payload. `deduped` must come from
-    * [[allFamiliesDeduped]] (callers cache it so the one window pass is
-    * paid once, not 8×). */
-  private def family(deduped: DataFrame, i: Int): DataFrame = {
-    val keys = keysFor(i)
-    deduped.filter(col("__fam") === i)
-      .select(keys.map(col) ++ PayloadCols.map(c => col(c).as(s"${c}_r$i")): _*)
   }
 
   /** The three optional specializer keys; null in the dim means wildcard. */
@@ -123,20 +121,21 @@ object RuleMatch {
   /** How [[addRuleTag]] joins the rule dim to the fact.
     *
     * [[RuleDimStrategy.Broadcast]] is the domain default (contract metadata
-    * is small by construction): 8 broadcast hash joins, the fact never
-    * shuffles. [[RuleDimStrategy.Shuffle]] is the 100 TB robustness
-    * fallback for a dim that outgrows broadcast size (SURVEY §2.3's
-    * alternative): ONE shuffle equi-join on (invoice_month,
-    * billing_account_id) + specificity scoring, no broadcast required.
+    * is small by construction): one broadcast rule index probed per fact
+    * row, the fact never shuffles. [[RuleDimStrategy.Shuffle]] is the
+    * 100 TB robustness fallback for a dim that outgrows broadcast size
+    * (SURVEY §2.3's alternative): ONE shuffle equi-join on
+    * (invoice_month, billing_account_id) + specificity scoring, no
+    * broadcast required.
     * [[RuleDimStrategy.Auto]] picks by a BYTE estimate of the dim
     * (round-8 verdict #5): broadcastability is a function of bytes, not
     * rows — a dim with wide `credit_fields` payloads can pass any
-    * row-count test and still overflow the executor hash relation. */
+    * row-count test and still overflow the executor-side rule index. */
   sealed trait RuleDimStrategy
   object RuleDimStrategy {
     case object Broadcast extends RuleDimStrategy
     case object Shuffle extends RuleDimStrategy
-    /** `maxBroadcastBytes` ~ an executor-side hash relation that leaves
+    /** `maxBroadcastBytes` ~ an executor-side rule index that leaves
       * comfortable margin under Spark's 8 GB broadcast hard cap. The
       * default 400 MB is the budget the old 4M-row heuristic ASSUMED
       * (~100 B/row) — now measured instead of assumed. `sampleRows`
@@ -205,37 +204,51 @@ object RuleMatch {
         else addRuleTagShuffle(fact, dimRaw)
     }
 
+  /** The ladder as one broadcast [[graft.functions.RuleIndex]] probed per
+    * row by one expression. The one window pass ([[allFamiliesDeduped]])
+    * is collected once per call — the dim is bounded contract metadata,
+    * the same rows the 8 per-family broadcast builds used to collect —
+    * sorted into [[Precedence]] order, grouped by (invoice_month,
+    * billing_account_id) and broadcast once. Nothing is memoized, so a
+    * first call costs what every later one does.
+    *
+    * Keys compare as the 8 equi-joins compared them: both sides are cast
+    * to the type the analyzer coerces the pair to ([[coercedKeyTypes]]),
+    * so a partition-inferred integer `invoice_month` meets the dim's
+    * 'YYYYMM' string exactly as it did in the join. */
   private def addRuleTagBroadcast(fact: DataFrame, dimRaw: DataFrame): DataFrame = {
-    val dim = withInvoiceMonth(dimRaw)
-    // cache the one shared window pass: the 8 broadcast builds below each
-    // materialize their subtree independently, so without this the dedup
-    // would still run 8× (the contract-metadata dim is tiny by
-    // construction, so the cached frame is bounded; the harness clears
-    // caches between measurements, and repeated calls — e.g. streaming
-    // micro-batches over a static dim — re-resolve to the same cache
-    // entry by plan canonicalization instead of accumulating copies).
-    // The count() MATERIALIZES the cache before the ladder consumes it:
-    // the 8 broadcast stages launch concurrently, and concurrent readers
-    // of a cold cache entry each recompute the subtree (measured: q22
-    // intermittently paid the window 8× anyway, 4.9–8.2 s vs q24's 2.5 s
-    // in the same probe run) — one tiny eager dim-only job removes the
-    // race. The dim is bounded metadata, so this is NOT a driver-side
-    // data job (same class as the Auto strategy's dim-only estimate).
-    // coalesce(1) before the cache (optimization round 18): cached plans
-    // bypass AQE partition coalescing (canChangeCachedPlanOutputPartitioning
-    // is off), so the window's 32 post-shuffle partitions persisted as 32
-    // near-empty cached blocks and EACH of the 8 broadcast builds launched a
-    // 32-task scan over them. The dim is bounded contract metadata, so one
-    // partition is the right cached shape at any scale — each build becomes
-    // a 1-task cache scan.
-    val deduped = allFamiliesDeduped(dim).coalesce(1).cache()
-    deduped.count()
-    val joined = (1 to 8).foldLeft(fact) { (acc, i) =>
-      acc.join(broadcast(family(deduped, i)), keysFor(i), "left")
-    }
-    PayloadCols.foldLeft(joined) { (acc, c) =>
-      acc.withColumn(c, coalesce(Precedence.map(i => col(s"${c}_r$i")): _*))
-    }.drop((for (i <- 1 to 8; c <- PayloadCols) yield s"${c}_r$i"): _*)
+    val deduped = allFamiliesDeduped(withInvoiceMonth(dimRaw))
+    val keyTypes = coercedKeyTypes(fact, deduped)
+    val keys = MatchKeys.zip(keyTypes).map { case (c, t) => col(c).cast(t) }
+    val payload = StructType(PayloadCols.map(c => deduped.schema(c).copy(nullable = true)))
+    val toInternal = (keyTypes ++ payload.map(_.dataType))
+      .map(CatalystTypeConverters.createToCatalystConverter)
+    val famAt = MatchKeys.size + PayloadCols.size
+    val rules = deduped.select(keys ++ PayloadCols.map(col) :+ col("__fam"): _*).collect()
+      .sortBy(r => Precedence.indexOf(r.getInt(famAt)))
+      .map { r =>
+        val v = toInternal.zipWithIndex.map { case (f, i) => f(r.get(i)).asInstanceOf[AnyRef] }
+        val (p, s, k) = Presence(r.getInt(famAt))
+        ((v(0), v(1)), new RuleIndex.Rule(Option.when(p)(v(2)), Option.when(s)(v(3)),
+          Option.when(k)(v(4)), v.drop(MatchKeys.size).toArray))
+      }
+    val index = fact.sparkSession.sparkContext.broadcast(RuleIndex(rules.toSeq))
+    val tagged = fact.withColumn("__rule", VectorFunctions.ruleIndexProbe(keys, index, payload))
+    def resolved(c: String) = col("__rule").getField(c).as(c)
+    tagged.select(fact.columns.map(c => if (PayloadCols.contains(c)) resolved(c) else col(c)) ++
+      PayloadCols.filterNot(fact.columns.contains).map(resolved): _*)
+  }
+
+  /** Per match key, the type the analyzer coerces (fact key = dim key) to —
+    * the comparison the ladder's equi-joins made. Analyzed over an empty
+    * relation with both sides' types, so no data is read. */
+  private def coercedKeyTypes(fact: DataFrame, dim: DataFrame): Seq[DataType] = {
+    val sides = StructType(MatchKeys.flatMap(c => Seq(
+      StructField(s"f_$c", fact.schema(c).dataType), StructField(s"d_$c", dim.schema(c).dataType))))
+    fact.sparkSession.createDataFrame(java.util.List.of[Row](), sides)
+      .select(MatchKeys.map(c => col(s"f_$c") === col(s"d_$c")): _*)
+      .queryExecution.analyzed.expressions
+      .map(_.collectFirst { case e: EqualTo => e.left.dataType }.get)
   }
 
   /** The stacked dim for the shuffle fallback: the five [[MatchKeys]]

@@ -282,9 +282,9 @@ object BillingDemo {
   /** Month list for the demo dim, collected ONCE per version of the
     * lineitem table. The fact-month set is bounded metadata (≤ dozens of
     * values at any SF), but leaving it as a subquery embeds a full lineitem
-    * scan+distinct in the dim's plan — which the 8-family rule-match ladder
-    * then re-executes once per broadcast subtree (8 redundant fact scans
-    * per kernel query). */
+    * scan+distinct in the dim's plan — which the rule-match ladder then
+    * re-executes with every dim pass (once per broadcast subtree, 8
+    * redundant fact scans per kernel query, in the old 8-join ladder). */
   private def monthsOf(spark: SparkSession, dir: String): Seq[String] =
     SourceState.memo(dir, "lineitem.parquet", "fact months")(
       Tables.lineitem(spark, dir)

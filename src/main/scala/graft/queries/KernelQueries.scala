@@ -130,7 +130,7 @@ object KernelQueries {
     "invoice_month", "billing_account_id", "usage_day", "project_id",
     "service_description", "sku_id", "cost_type")
 
-  /** q21 — the 8-family rule-match ladder alone (J1–J9): broadcast joins + precedence coalesce; the fact side never shuffles. */
+  /** q21 — the 8-family rule-match ladder alone (J1–J9): one broadcast rule index probed per row, per-column precedence coalesce; the fact side never shuffles. */
   val q21RuleMatch = QueryDef(
     "q21_rule_match",
     s"""$taggedSql
@@ -275,7 +275,7 @@ object KernelQueries {
   /** q24 — the kernel under BOTH SqlTemplate flags (E4,
     * calculate/sql_template.py): extra rate on the mode-1 consumption base
     * instead of internal_cost, and mode-4 `discount_amount` = credit part.
-    * Same plan shape as q22 (single fact scan + 8 broadcast joins; measured:
+    * Same plan shape as q22 (single fact scan + one rule-index probe; measured:
     * executed-plan strings within 3% of each other in size and runtimes at
     * parity on a quiet host — a round-3 bench reading 12× slower was host
     * steal, visible in that run's steal ticks). This pins the variant
@@ -505,10 +505,10 @@ object KernelQueries {
     * #6): the grain-13 aggregation plans with ZERO Exchange because the
     * bucketed scan already reports hash partitioning on (invoice_month,
     * billing_account_id) ⊆ the grouping keys — so the ENTIRE kernel plan
-    * carries no shuffle at all (the ladder broadcasts; PlanSpec pins it).
+    * carries no shuffle at all (the rule index is broadcast; PlanSpec pins it).
     * At 100 TB this is the bucketed-ingest story: pay the ods shuffle once
     * at ingest, and every nightly kernel run afterwards is scan → in-place
-    * agg → broadcast joins → write. Results are identical to q22 (layout
+    * agg → rule-index probe → write. Results are identical to q22 (layout
     * is not semantics), hence q22's oracle verbatim. */
   val q41KernelBucketed = QueryDef(
     "q41_kernel_bucketed",

@@ -171,14 +171,17 @@ object StreamJobs {
     * each conformed batch to the idempotent partitioned sink. `etlTime` is
     * injectable exactly as in the batch path, so a replayed stream is
     * byte-comparable against the batch run (StreamingSpec pins that
-    * parity end-to-end on the sf0.001 fact). */
+    * parity end-to-end on the sf0.001 fact). It is a by-name parameter,
+    * evaluated per micro-batch: the default gives each batch its own time,
+    * bound as in [[Conform.conformToTarget]]. */
   def streamingKernel(
       factStream: DataFrame,
       dim: DataFrame,
       targetPath: String,
       checkpoint: String,
       extraDiscount: Map[String, Double] = Map.empty,
-      etlTime: org.apache.spark.sql.Column = current_timestamp()): DataStreamWriter[org.apache.spark.sql.Row] =
+      etlTime: => org.apache.spark.sql.Column = graft.functions.VectorFunctions.boundNow())
+      : DataStreamWriter[org.apache.spark.sql.Row] =
     factStream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)

@@ -208,4 +208,17 @@ class ConformSpec extends SparkSpec {
     assert(r.getAs[Double]("price") == 0.0)
     assert(r.getAs[String]("credit_fields") == "")
   }
+
+  test("the default etl_time is one value per call, on every row") {
+    import spark.implicits._
+    val df = (1 to 50).map(i => ("202601", s"A$i", java.sql.Date.valueOf("2026-01-15")))
+      .toDF("invoice_month", "billing_account_id", "usage_day").repartition(4)
+    def times(): Set[java.sql.Timestamp] =
+      Conform.conformToTarget(df).select("etl_time").collect().map(_.getTimestamp(0)).toSet
+    val first = times()
+    Thread.sleep(5)
+    val second = times()
+    assert(first.size == 1 && second.size == 1, s"rows of one call differ: $first $second")
+    assert(first != second, "two calls share one etl_time")
+  }
 }

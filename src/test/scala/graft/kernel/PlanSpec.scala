@@ -1,6 +1,11 @@
 package graft.kernel
 
+import graft.PlanShape
 import graft.queries.{BillingDemo, CoreQueries, KernelQueries}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec,
+  CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
 /** Physical-plan assertions — the scale-design contract (SURVEY.md §4).
   * These lock in properties the 100 TB design depends on; a regression that
@@ -26,37 +31,41 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("ReadSchema: struct<l_suppkey:bigint>"))
   }
 
-  test("the 8-way rule-match ladder is pure broadcast joins — the fact side never shuffles") {
-    val plan = planOf(KernelQueries.q22KernelFull.fn(spark, sf))
-    val broadcasts = "BroadcastHashJoin".r.findAllIn(plan).size
-    assert(broadcasts >= 8, s"expected >=8 broadcast joins, got $broadcasts")
-    assert(!plan.contains("SortMergeJoin"), "fact-side shuffle join crept into the kernel")
-    assert(!plan.contains("CartesianProduct"))
-    // the demo dim is a LOCAL relation (months memoized) — the only parquet
-    // scan in the whole kernel is the fact itself. Round 1 regression: the
-    // dim's month-distinct subquery re-scanned lineitem in each of the 8
-    // broadcast subtrees.
-    val scans = "Scan parquet".r.findAllIn(plan).size + "FileScan".r.findAllIn(plan).size
-    assert(scans <= 2, s"kernel should scan the fact once, saw $scans scan nodes:\n" +
-      plan.linesIterator.filter(l => l.contains("Scan")).mkString("\n"))
+  test("the 8-way rule-match ladder is one rule-index probe — the fact side never shuffles") {
+    val plan = KernelQueries.q22KernelFull.fn(spark, sf).queryExecution.executedPlan
+    // one probe, no SortMergeJoin, and the fact is the only scan: the dim
+    // is collected into the rule index before the fact plan exists. Round 1
+    // regression: the dim's month-distinct subquery re-scanned lineitem in
+    // each of the 8 broadcast subtrees.
+    assert(PlanShape.kernelViolations(plan).isEmpty,
+      s"${PlanShape.kernelViolations(plan)}:\n$plan")
+    assert(PlanShape.count[BroadcastHashJoinExec](plan) == 0,
+      s"a join ladder crept back into the kernel:\n$plan")
+    assert(PlanShape.count[CartesianProductExec](plan) == 0)
   }
 
   test("q24's variant flags are expression-only: same plan shape and size as q22") {
     // the E4 SQL-variant differs from q22 in two scalar formulas — the
-    // physical plan must stay the q22 plan (8 broadcasts, the one grain-agg
-    // shuffle) with no codegen blow-up. This encodes the one-off manual
+    // physical plan must stay the q22 plan (one rule-index probe, the one
+    // grain-agg shuffle) with no codegen blow-up. This encodes the one-off manual
     // measurement ("plan strings within 3%") so a regression is caught by
     // CI, not by a noisy bench read.
-    val p22 = planOf(KernelQueries.q22KernelFull.fn(spark, sf))
-    val p24 = planOf(KernelQueries.q24KernelSqlVariant.fn(spark, sf))
-    def ops(plan: String): Map[String, Int] = Map(
-      "BroadcastHashJoin" -> "BroadcastHashJoin".r.findAllIn(plan).size,
-      "Exchange" -> "Exchange hashpartitioning".r.findAllIn(plan).size,
-      "HashAggregate" -> "HashAggregate".r.findAllIn(plan).size,
-      "SortMergeJoin" -> "SortMergeJoin".r.findAllIn(plan).size)
-    assert(ops(p22)("BroadcastHashJoin") == 8 && ops(p22)("SortMergeJoin") == 0)
-    assert(ops(p22) == ops(p24),
-      s"q22/q24 operator multisets diverged: ${ops(p22)} vs ${ops(p24)}")
+    val (d22, d24) = (KernelQueries.q22KernelFull.fn(spark, sf),
+      KernelQueries.q24KernelSqlVariant.fn(spark, sf))
+    val (p22, p24) = (planOf(d22), planOf(d24))
+    def ops(df: org.apache.spark.sql.DataFrame): Map[String, Int] = {
+      val plan = df.queryExecution.executedPlan
+      Map(
+        "probe" -> PlanShape.ruleProbes(plan),
+        "Exchange" -> PlanShape.count[ShuffleExchangeExec](plan),
+        "HashAggregate" -> PlanShape.count[HashAggregateExec](plan),
+        "SortMergeJoin" -> PlanShape.count[SortMergeJoinExec](plan),
+        "BroadcastHashJoin" -> PlanShape.count[BroadcastHashJoinExec](plan))
+    }
+    val (o22, o24) = (ops(d22), ops(d24))
+    assert(o22("probe") == 1 && o22("SortMergeJoin") == 0 && o22("BroadcastHashJoin") == 0, s"$o22")
+    assert(o22 == o24,
+      s"q22/q24 operator multisets diverged: $o22 vs $o24")
     val ratio = p24.length.toDouble / p22.length
     assert(ratio > 1 / 1.1 && ratio < 1.1,
       s"q24 plan size diverged from q22 by ${(ratio - 1) * 100}%")
@@ -422,10 +431,9 @@ class PlanSpec extends SparkSpec {
   }
 
   /** Shuffle exchanges on the DATA path: Exchange nodes reachable without
-    * crossing into a BroadcastExchange subtree. The demo dim legitimately
-    * shuffles inside its broadcast subtrees (41-row window dedup per
-    * family) — scale-independent metadata work; what the 100 TB contract
-    * pins is the FACT side. */
+    * crossing into a BroadcastExchange subtree (a broadcast side is
+    * scale-independent metadata work; what the 100 TB contract pins is the
+    * FACT side). */
   private def dataSideShuffles(p: org.apache.spark.sql.execution.SparkPlan): Int =
     p match {
       case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => 0
@@ -434,21 +442,24 @@ class PlanSpec extends SparkSpec {
       case other => other.children.map(dataSideShuffles).sum
     }
 
+  /** Join operators of every kind but nested-loop. */
+  private def joins(p: org.apache.spark.sql.execution.SparkPlan): Int =
+    PlanShape.count[BroadcastHashJoinExec](p) + PlanShape.count[SortMergeJoinExec](p) +
+      PlanShape.count[ShuffledHashJoinExec](p)
+
   test("q40's shuffle fallback plans ONE stacked-dim join, not the 8-family ladder") {
     // broadcast is no longer FORCED: Catalyst may still broadcast the small
     // demo dim (correct degradation in the small-dim direction), but the
     // 8-family ladder must be gone — the dim meets the fact-key frame once
     // (tall stack) and the resolved payload re-joins once
-    val p = planOf(KernelQueries.q40RuleMatchShuffle.fn(spark, sf))
-    val joins = "BroadcastHashJoin".r.findAllIn(p).size +
-      "SortMergeJoin".r.findAllIn(p).size +
-      "ShuffledHashJoin".r.findAllIn(p).size
-    assert(joins <= 2, s"q40 kept a join ladder ($joins joins):\n$p")
-    assert(!p.contains("CartesianProduct"))
+    val p = KernelQueries.q40RuleMatchShuffle.fn(spark, sf).queryExecution.executedPlan
+    assert(joins(p) <= 2, s"q40 kept a join ladder (${joins(p)} joins):\n$p")
+    assert(PlanShape.count[CartesianProductExec](p) == 0)
+    assert(PlanShape.ruleProbes(p) == 0, s"q40 broadcast the rule index:\n$p")
     // the demo dim is BUILT with a bounded broadcast cross join (41 rules ×
-    // memoized months) — scale-independent BNLJs by construction (same
-    // allowance as ScaleSmoke's kernel check); anything beyond them is real
-    assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 8,
+    // memoized months), planned once in the tall-dim subtree (same
+    // allowance as ScaleSmoke's q40 check); anything beyond it is real
+    assert(PlanShape.count[BroadcastNestedLoopJoinExec](p) <= 1,
       s"q40 grew a non-dim nested-loop join:\n$p")
   }
 
@@ -459,10 +470,10 @@ class PlanSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val df = KernelQueries.q40RuleMatchShuffle.fn(spark, sf)
-      val p = planOf(df)
-      assert(!p.contains("BroadcastHashJoin"),
+      val p = df.queryExecution.executedPlan
+      assert(PlanShape.count[BroadcastHashJoinExec](p) == 0,
         s"q40 still broadcasts with the threshold off:\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+      assert(PlanShape.count[SortMergeJoinExec](p) + PlanShape.count[ShuffledHashJoinExec](p) > 0,
         s"q40 lost its shuffle joins:\n$p")
       // and the regime switch is plan-only: results equal q21's verbatim
       val direct = KernelQueries.q21RuleMatch.fn(spark, sf)
@@ -475,12 +486,12 @@ class PlanSpec extends SparkSpec {
     import graft.kernel.RuleMatch.RuleDimStrategy
     val fact = BillingDemo.fact(spark, sf)
     val dim = BillingDemo.dim(spark, sf)
-    val auto = planOf(RuleMatch.addRuleTag(fact, dim, RuleDimStrategy.Auto()))
-    assert("BroadcastHashJoin".r.findAllIn(auto).size >= 8,
-      s"Auto on a small dim should keep the 8-family ladder:\n$auto")
-    val forced = planOf(RuleMatch.addRuleTag(fact, dim, RuleDimStrategy.Auto(maxBroadcastBytes = 0)))
-    assert("BroadcastHashJoin".r.findAllIn(forced).size +
-      "SortMergeJoin".r.findAllIn(forced).size <= 2,
+    val auto = RuleMatch.addRuleTag(fact, dim, RuleDimStrategy.Auto()).queryExecution.executedPlan
+    assert(PlanShape.kernelViolations(auto).isEmpty,
+      s"Auto on a small dim should keep the rule-index probe:\n$auto")
+    val forced = RuleMatch.addRuleTag(fact, dim, RuleDimStrategy.Auto(maxBroadcastBytes = 0))
+      .queryExecution.executedPlan
+    assert(PlanShape.ruleProbes(forced) == 0 && joins(forced) > 0 && joins(forced) <= 2,
       s"Auto past the cap should pick the single-join fallback:\n$forced")
   }
 
@@ -496,9 +507,8 @@ class PlanSpec extends SparkSpec {
     // the bucketed scan reports hash partitioning on (invoice_month,
     // billing_account_id) ⊆ the grain-13 grouping keys, so the kernel's
     // ONLY fact-side shuffle (the grain aggregation) disappears: partial
-    // and final HashAggregate fuse over the bucketed scan. (The broadcast
-    // dim subtrees keep their scale-independent 41-row window shuffles —
-    // excluded by dataSideShuffles, exactly what q22 also carries.)
+    // and final HashAggregate fuse over the bucketed scan. (The rule dim
+    // is collected into the rule index, so no dim subtree is in the plan.)
     assert(plan.contains("Bucketed: true"), s"q41 lost its bucketed scan:\n$plan")
     assert(dataSideShuffles(df.queryExecution.executedPlan) == 0,
       s"bucketed-ods kernel still shuffles the fact:\n$plan")
@@ -506,8 +516,8 @@ class PlanSpec extends SparkSpec {
     val q22 = KernelQueries.q22KernelFull.fn(spark, sf)
     assert(dataSideShuffles(q22.queryExecution.executedPlan) == 1,
       "q22's fact path no longer shuffles once — the q41 comparison is stale")
-    assert("BroadcastHashJoin".r.findAllIn(plan).size >= 8,
-      s"q41 lost the broadcast ladder:\n$plan")
+    assert(PlanShape.kernelViolations(df.queryExecution.executedPlan).isEmpty,
+      s"q41 lost the kernel shape:\n$plan")
     // layout is not semantics: q41 ≡ q22 row-for-row
     assert(df.exceptAll(q22).isEmpty && q22.exceptAll(df).isEmpty,
       "bucketed-ods kernel diverged from q22")

@@ -215,16 +215,59 @@ class RuleMatchSpec extends SparkSpec {
     assert(RuleMatch.autoPicksBroadcast(narrow, budget),
       "narrow dim of the same row count must keep Broadcast")
     // and the pick is plan-deep, not just the helper: the wide dim's Auto
-    // plan is the tall-union fallback, not the 8-family broadcast ladder
+    // plan is the tall-union fallback, not the broadcast rule index
     // (Catalyst may still broadcast the SMALL side of the fallback's
     // re-join — that degradation is correct and allowed)
     val facts = Seq(fact("A1")).toDF()
-    val plan = RuleMatch.addRuleTag(facts, wide, budget)
-      .queryExecution.executedPlan.toString
-    // the ladder would show 8 BroadcastHashJoins and no aggregate; the
+    val plan = RuleMatch.addRuleTag(facts, wide, budget).queryExecution.executedPlan
+    // the ladder would show one rule-index probe and no aggregate; the
     // fallback's signature is the winner max() aggregate (the tall union
     // itself constant-folds into one LocalTableScan on an in-memory dim)
-    assert("BroadcastHashJoin".r.findAllIn(plan).size < 8 && plan.contains("max("),
-      s"Auto kept the broadcast ladder on a dim its byte estimate rejects:\n$plan")
+    assert(graft.PlanShape.ruleProbes(plan) == 0 &&
+      graft.PlanShape.count[org.apache.spark.sql.execution.aggregate.BaseAggregateExec](plan) > 0,
+      s"Auto kept the rule index on a dim its byte estimate rejects:\n$plan")
+  }
+
+  test("property: the rule index ≡ the Shuffle fallback on random dims") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val outCols = Seq("invoice_month", "billing_account_id", "project_id",
+      "service_description", "sku_id", "mode", "discount", "price", "credit_fields",
+      "customer_id", "contract_id")
+    val dir = java.nio.file.Files.createTempDirectory("graft_rule_index").toString
+    try (1 to 6).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+      def orNull(v: String, p: Double): String = if (rnd.nextDouble() < p) null else v
+      val (accts, projs, svcs, skus) =
+        (Seq("A0", "A1", "A2", "A3"), Seq("p0", "p1", "p2"), Seq("s0", "s1"), Seq("k0", "k1", "k2"))
+      // null fact specializers (and the odd null account) on ~15 % of keys
+      val facts = Seq.fill(40)(Fact("202601", orNull(pick(accts), 0.05), day,
+        orNull(pick(projs), 0.15), orNull(pick(svcs), 0.15), orNull(pick(skus), 0.15)))
+      val drawn = Seq.fill(30) {
+        val (p, s, k) = RuleMatch.Presence(1 + rnd.nextInt(8)) // NULL = wildcard
+        Rule(if (rnd.nextDouble() < 0.15) "2025-12" else "2026-01", pick(accts),
+          Option.when(p)(pick(projs)), Option.when(s)(pick(svcs)), Option.when(k)(pick(skus)),
+          mode = Option.when(rnd.nextDouble() < 0.9)(rnd.nextInt(5)),
+          discount = Option.when(rnd.nextDouble() < 0.8)(rnd.nextDouble()),
+          price = pick(Seq(None, Some(0.0), Some(rnd.nextDouble()))),
+          credit_fields = Option.when(rnd.nextDouble() < 0.7)(pick(Seq("RM", "SUD/CUD", ""))),
+          customer_id = Option.when(rnd.nextDouble() < 0.7)(s"CU${rnd.nextInt(9)}"),
+          contract_id = Some(s"C${rnd.nextInt(1000)}"))
+      }
+      // duplicate keys within a family, with another payload
+      val rules = (drawn ++ drawn.take(6).map(_.copy(mode = Some(9), contract_id = Some("DUP")))).toDF()
+      facts.toDF().write.partitionBy("invoice_month").parquet(s"$dir/$seed")
+      val partitioned = spark.read.parquet(s"$dir/$seed")
+      assert(partitioned.schema("invoice_month").dataType == org.apache.spark.sql.types.IntegerType)
+      Seq("in-memory" -> facts.toDF(), "partitioned" -> partitioned).foreach { case (label, f) =>
+        def go(st: RuleMatch.RuleDimStrategy) =
+          RuleMatch.addRuleTag(f, rules, st).select(outCols.map(col): _*)
+            .collect().toSeq.sortBy(_.toString)
+        val b = go(RuleMatch.RuleDimStrategy.Broadcast)
+        assert(b == go(RuleMatch.RuleDimStrategy.Shuffle), s"seed $seed, $label fact")
+        assert(b.count(_.getAs[Any]("mode") != null) > 0, s"seed $seed matched nothing")
+      }
+    } finally graft.operators.Reconcile.deleteRecursively(dir)
   }
 }
