@@ -561,11 +561,11 @@ object StreamQueries {
         try inc.select(col("doc_id").as("in_id"))
           .join(matches.select("in_id").distinct(), Seq("in_id"), "left_anti")
           .write.mode("append").parquet(s"$run/out")
-        // the batch's survivors are durably in the sink — its two cached
-        // frames are dead weight for the rest of the drain (and the
+        // the batch's survivors are durably in the sink — its cached
+        // shingles are dead weight for the rest of the drain (and the
         // harness-level clearCache between measurements can't reach
         // inside one): release per batch, or a long drain accumulates a
-        // block-manager pair per micro-batch under the 4 GiB gate heap
+        // cached frame per micro-batch under the 4 GiB gate heap
         finally i.release()
       }
       .option("checkpointLocation", s"$run/ckpt")

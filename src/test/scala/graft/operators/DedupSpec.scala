@@ -159,6 +159,82 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, before)
+  }
+
+  /** Per stage that wrote shuffle output while `body` ran: (records
+    * written, map tasks, the most records one map task wrote). */
+  private def shuffleWritesDuring(body: => Unit): Map[Int, (Long, Int, Long)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val perStage = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, Long)]
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val n = Option(e.taskMetrics).map(_.shuffleWriteMetrics.recordsWritten).getOrElse(0L)
+        if (n > 0) perStage.merge(e.stageId, (n, 1, n),
+          (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)))
+      }
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    perStage.asScala.toMap
+  }
+
+  test("keeperSelection / keeperSelectionStar: a map task writes at most one shuffle record per partition") {
+    val partitions = 4
+    Seq(("keeperSelection", keepers _), ("keeperSelectionStar", starKeepers _)).foreach {
+      case (name, fn) =>
+        var m = Map.empty[Long, Long]
+        val stages = withShufflePartitions(partitions) {
+          shuffleWritesDuring { m = fn(pathIds, path) }
+        }
+        assert((1L to 17L).forall(m(_) == 1L) && m(40L) == 40L, s"$name: $m")
+        // one packed record per (map task, reduce partition); a record per
+        // node or message writes more
+        assert(stages.nonEmpty && stages.values.forall(_._3 <= partitions),
+          s"$name: per stage (records, map tasks, most by one task) $stages")
+    }
+  }
+
+  test("keeperSelection / keeperSelectionStar equal union-find on ids across the Long range, at 1, 3 and 8 partitions") {
+    val rnd = new scala.util.Random(11)
+    // negatives, and ids above 2^32, whose high bits feed Long.hashCode
+    val ids = (Seq(Long.MinValue, -1L, 0L, 1L << 32, Long.MaxValue) ++ Seq.fill(45) {
+      rnd.nextInt(3) match {
+        case 0 => -1L - rnd.nextInt(1 << 20)
+        case 1 => (1L << 32) + rnd.nextInt(1 << 20).toLong * (1L << 24)
+        case _ => rnd.nextLong()
+      }
+    }).distinct
+    val links = Seq.fill(35)((ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size))))
+    // a 3-node path: at 8 partitions most partitions hold none of its nodes
+    val sparse = (Seq(-5L, 1L << 40, 7L), Seq((-5L, 1L << 40), (7L, 1L << 40)))
+    Seq((ids, links), sparse).foreach { case (nodeIds, pairs) =>
+      val root = scala.collection.mutable.Map(nodeIds.map(i => i -> i): _*)
+      def find(x: Long): Long = if (root(x) == x) x else find(root(x))
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) root(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val expected = nodeIds.map(i => i -> find(i)).toMap
+      Seq(1, 3, 8).foreach { n =>
+        withShufflePartitions(n) {
+          assert(keepers(nodeIds, pairs) == expected, s"keeperSelection at $n partitions")
+          assert(starKeepers(nodeIds, pairs) == expected, s"keeperSelectionStar at $n partitions")
+        }
+      }
+    }
+  }
+
   test("keeperSelectionStar: long chain and singletons (the deep-graph case it exists for)") {
     val m = starKeepers(pathIds, path)
     assert((1L to 17L).forall(m(_) == 1L))
