@@ -1650,7 +1650,7 @@ object ScaleSmoke {
       def writeOnce(d: String, tgt: String): Double = timed {
         Sink.writePartitioned(
           Jobs.computeMonth(BillingDemo.fact(spark, d), BillingDemo.dim(spark, d), month),
-          tgt, sortCols = Seq("billing_account_id"))
+          tgt)
       }.sec
       val tgtBase = s"$dir/write_base_$month"
       val tgt10 = s"$dir/write_x${Copies}_$month"

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kernel.{Calculate, Conform, Modes}
 
-/** S10/S11 — idempotent partitioned sink.
+/** S10/S11 — idempotent partitioned sink of the billing target.
   *
   * The reference achieves idempotency with ALTER TABLE … DELETE of the
   * partition range plus a tmp-table-then-swap (main.py:172-202,
@@ -19,58 +19,27 @@ object Sink {
 
   val PartitionCols: Seq[String] = Seq("invoice_month", "usage_day")
 
-  /** `sortCols` orders rows WITHIN each written file (no extra shuffle —
-    * `sortWithinPartitions` is a per-task sort). Parquet records per-row-
-    * group min/max stats, so downstream point reads on a sort column skip
-    * whole row groups — at 100 TB, the per-account repair path (E3) reads
-    * 1/thousands of each day partition instead of scanning it. Callers
-    * that know the dominant read predicate pass it (the kernel entry
-    * points sort by billing_account_id); default keeps the layout as-is.
+  /** One layout for every billing write: one file per (invoice_month,
+    * usage_day) partition, its rows ordered by `billing_account_id`.
     *
-    * The task sort is (PartitionCols ++ sortCols), not sortCols alone:
-    * FileFormatWriter REQUIRES rows ordered by the partition columns and
-    * inserts its own per-task sort when the incoming ordering doesn't
-    * satisfy that — a sort that is free to discard the sortCols clustering
-    * once it spills. Prefixing the partition columns makes the incoming
-    * ordering satisfy the writer's requirement (no second sort), so the
-    * account clustering survives within each written partition.
+    * The hash `repartition` on the partition columns puts each partition in
+    * exactly ONE task, so it lands as one well-sized file: without it every
+    * shuffle task holds rows for ~every (month, day) and the writer fans out
+    * |tasks|·|partitions| tiny files (a multi-month drain at sf0.1, 2,499
+    * day partitions × 32 tasks ≈ 80k files, was metadata-bound, ~10× slower
+    * than the write itself).
     *
-    * The write is preceded by a hash `repartition` ON the partition
-    * columns: without it every shuffle task holds rows for ~every (month,
-    * day) and the writer fans out |tasks|·|partitions| tiny files — a
-    * multi-month drain at sf0.1 (2,499 day partitions × 32 tasks ≈ 80k
-    * files) was metadata-bound, ~10× slower than the write itself. With
-    * it each partition lands in exactly ONE task → one well-sized file
-    * per partition dir, |shuffle.partitions| parallel writers. At 100 TB
-    * a single hot day would then be one writer's task — `spreadFiles > 1`
-    * salts the repartition key so a hot partition splits across that many
-    * files/writers (the skew knob, same trade as Skew.saltedJoin).
-    *
-    * The salt is `pmod(spark_partition_id(), n)`, which ASSUMES the hot
-    * partition's rows arrive spread over ≥ n upstream tasks — true for
-    * any scan/shuffle-fed frame of real size (upstream task count ≫ n),
-    * but a hot partition concentrated in fewer upstream tasks than n
-    * yields fewer salts, degrading toward the unsalted single file
-    * (best-effort, never wrong). PipelineSpec pins the spread on a
-    * multi-task hot partition. */
-  def writePartitioned(df: DataFrame, path: String,
-                       sortCols: Seq[String] = Nil,
-                       spreadFiles: Int = 1): Unit = {
+    * The per-task sort is (partition columns, billing_account_id): parquet
+    * records per-row-group min/max stats, so a point read on an account
+    * (the E3 repair, per-account reporting) skips whole row groups. The
+    * partition columns lead because FileFormatWriter requires rows ordered
+    * by them and otherwise inserts its own sort, which is free to discard
+    * the account clustering once it spills. */
+  def writePartitioned(df: DataFrame, path: String): Unit = {
     df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // the salted path pins an EXPLICIT partition count: a repartition by
-    // columns alone is AQE-coalescible, and coalescing two salted buckets
-    // of the same hot partition back into one task un-splits the file
-    // (the salt is a repartition key, not a partition value — one task
-    // writes one file per partition dir)
-    val spread =
-      if (spreadFiles <= 1) df.repartition(PartitionCols.map(col): _*)
-      else df.repartition(
-        df.sparkSession.sessionState.conf.numShufflePartitions,
-        PartitionCols.map(col) :+ pmod(spark_partition_id(), lit(spreadFiles)): _*)
-    val sorted =
-      if (sortCols.isEmpty) spread
-      else spread.sortWithinPartitions((PartitionCols ++ sortCols).map(col): _*)
-    sorted.write
+    df.repartition(PartitionCols.map(col): _*)
+      .sortWithinPartitions((PartitionCols :+ "billing_account_id").map(col): _*)
+      .write
       .mode("overwrite")
       .partitionBy(PartitionCols: _*)
       .parquet(path)
@@ -78,11 +47,13 @@ object Sink {
 }
 
 /** E1–E3 — the reference's three entry points are one parameterized job:
-  * they differ only in partition-filter parameters (SURVEY.md §3).
+  * they differ only in the slice they recompute (SURVEY.md §3), and all three
+  * run through [[IsolatedRun.runDays]]:
   *
-  *  - E1 daily cron:   runMonth(... dayRange = Some(lookbackWindow(today)))
-  *  - E2 month backfill: runMonth(month, dayRange = None)
-  *  - E3 account repair: runMonth(... accounts = Some(ids))
+  *  - E1 daily cron:     dayRange = Some(lookbackWindow(today))
+  *  - E2 month backfill: dayRange = None (every usage_day of the month)
+  *  - E3 account repair: accounts = Some(ids), the rows of every other
+  *    account in the rewritten partitions are kept as they are
   *
   * The reference's per-day loop, 10k-row cursor chunks, tmp table and double
   * DELETE (main.py:164-203) disappear: predicates prune partitions at the
@@ -98,6 +69,21 @@ object Jobs {
     (if (start.isBefore(monthStart)) monthStart else start, today.plusDays(1))
   }
 
+  /** The rows of `df` (fact or target) in the invoice month, the day range
+    * [from, until) and the accounts, where given. */
+  private[pipeline] def slice(
+      df: DataFrame,
+      invoiceMonth: String,
+      dayRange: Option[(LocalDate, LocalDate)],
+      accounts: Option[Seq[String]]): DataFrame =
+    Seq(
+      Some((df: DataFrame) => df.filter(col("invoice_month") === invoiceMonth)),
+      dayRange.map(r => (df: DataFrame) => df.filter(
+        col("usage_day") >= lit(java.sql.Date.valueOf(r._1)) &&
+          col("usage_day") < lit(java.sql.Date.valueOf(r._2)))),
+      accounts.map(as => (df: DataFrame) => df.filter(col("billing_account_id").isin(as: _*)))
+    ).flatten.foldLeft(df)((df, f) => f(df))
+
   /** The whole pipeline: filter fact to the requested slice → kernel →
     * conform. Pure (no I/O) so every launcher and test shares it. */
   def computeMonth(
@@ -106,20 +92,12 @@ object Jobs {
       invoiceMonth: String,
       dayRange: Option[(LocalDate, LocalDate)] = None,
       accounts: Option[Seq[String]] = None,
-      extraDiscount: Map[String, Double] = Map.empty): DataFrame = {
-    val sliced = Seq(
-      Some((df: DataFrame) => df.filter(col("invoice_month") === invoiceMonth)),
-      dayRange.map(r => (df: DataFrame) => df.filter(
-        col("usage_day") >= lit(java.sql.Date.valueOf(r._1)) &&
-          col("usage_day") < lit(java.sql.Date.valueOf(r._2)))),
-      accounts.map(as => (df: DataFrame) => df.filter(col("billing_account_id").isin(as: _*)))
-    ).flatten.foldLeft(fact)((df, f) => f(df))
-    Conform.conformToTarget(Calculate.calculateWithCredits(sliced, dim, extraDiscount))
-  }
+      extraDiscount: Map[String, Double] = Map.empty): DataFrame =
+    Conform.conformToTarget(Calculate.calculateWithCredits(
+      slice(fact, invoiceMonth, dayRange, accounts), dim, extraDiscount))
 
-  /** Read → compute → idempotent write. `odsPath`/`dimPath` are parquet
-    * roots; filters push down to the scan (partition pruning when the lake
-    * is partitioned by invoice_month/usage_day). */
+  /** [[IsolatedRun.runDays]] over the parquet lake at `odsPath`/`dimPath`,
+    * with the default failure log and alert sink. Returns the failed days. */
   def runMonth(
       spark: SparkSession,
       odsPath: String,
@@ -128,13 +106,7 @@ object Jobs {
       invoiceMonth: String,
       dayRange: Option[(LocalDate, LocalDate)] = None,
       accounts: Option[Seq[String]] = None,
-      extraDiscount: Map[String, Double] = Map.empty): Unit = {
-    val fact = spark.read.parquet(odsPath)
-    val dim = spark.read.parquet(dimPath)
-    val out = computeMonth(fact, dim, invoiceMonth, dayRange, accounts, extraDiscount)
-    // kernel output: dominant downstream point predicate is the account
-    // (E3 repair, per-account reporting) — lay files out for its row-group
-    // skipping
-    Sink.writePartitioned(out, targetPath, sortCols = Seq("billing_account_id"))
-  }
+      extraDiscount: Map[String, Double] = Map.empty): Seq[LocalDate] =
+    IsolatedRun.runDays(spark, spark.read.parquet(odsPath), spark.read.parquet(dimPath),
+      targetPath, invoiceMonth, dayRange, accounts, extraDiscount = extraDiscount)
 }

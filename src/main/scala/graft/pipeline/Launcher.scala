@@ -5,17 +5,18 @@ import java.time.{Duration, LocalDate, LocalDateTime, LocalTime}
 
 import org.apache.spark.sql.SparkSession
 
-/** E1 — the daily entry point (ref: main.py:164-215: a scheduler fires
-  * `daily_cron_work` at 05:00, which computes the 4-day lookback window
-  * clamped to the month start and recomputes those partitions).
+/** E1–E3 — the CLI of the reference's three entry points (ref:
+  * main.py:164-215: a scheduler fires `daily_cron_work` at 05:00, which
+  * computes the 4-day lookback window clamped to the month start and
+  * recomputes those partitions; excute_month_task.py: the month backfill;
+  * main.py:64-135: the per-account repair).
   *
-  * One tick = [[runDaily]]: lookback window → one window job, per-day
-  * isolation on failure ([[IsolatedRun.runDays]]) → idempotent partition
-  * overwrite → completion/failure alerts. The reference's per-day loop of
-  * tmp-table/double-DELETE swaps collapses into ONE
-  * [[Sink.writePartitioned]] atomic dynamic-partition overwrite of the
-  * window's day partitions; the days are retried one by one only when
-  * that write fails.
+  * All three read the lake and hand one slice to [[IsolatedRun.runDays]]:
+  * one [[Sink.writePartitioned]] atomic dynamic-partition overwrite of the
+  * slice's day partitions, the days retried one by one only when that write
+  * fails, each failed day logged to the failure CSV and alerted, and a
+  * "complete" alert on a clean run. A repair keeps every other account's
+  * rows in the partitions it rewrites. Any failed day makes the exit code 1.
   *
   * The `main` runs one tick by default (cron owns scheduling in a real
   * deployment — one process per tick is the operable shape); `--daemon
@@ -33,17 +34,20 @@ object Launcher {
 
   /** One E1 tick for `today`: returns the failed days (empty = clean run). */
   def runDaily(spark: SparkSession, config: Config,
-               today: LocalDate = LocalDate.now()): Seq[LocalDate] = {
-    val (start, endExclusive) = Jobs.lookbackWindow(today)
-    val invoiceMonth = today.format(DateTimeFormatter.ofPattern("yyyyMM"))
-    val days = Iterator.iterate(start)(_.plusDays(1))
-      .takeWhile(_.isBefore(endExclusive)).toSeq
-    val fact = spark.read.parquet(config.odsPath)
-    val dim = spark.read.parquet(config.dimPath)
+               today: LocalDate = LocalDate.now()): Seq[LocalDate] =
+    runSlice(spark, config, today.format(MonthFormat), Some(Jobs.lookbackWindow(today)), None)
+
+  /** Reads the lake of `config` and runs [[IsolatedRun.runDays]] over one
+    * slice: returns the failed days. */
+  private def runSlice(spark: SparkSession, config: Config, invoiceMonth: String,
+                       dayRange: Option[(LocalDate, LocalDate)],
+                       accounts: Option[Seq[String]]): Seq[LocalDate] =
     IsolatedRun.runDays(
-      spark, fact, dim, config.targetPath, invoiceMonth, days,
+      spark, spark.read.parquet(config.odsPath), spark.read.parquet(config.dimPath),
+      config.targetPath, invoiceMonth, dayRange, accounts,
       config.failureCsv, config.alerter, config.extraDiscount)
-  }
+
+  private val MonthFormat = DateTimeFormatter.ofPattern("yyyyMM")
 
   /** Next daily fire time strictly after `now`: today at `at` if that is
     * still ahead, else tomorrow at `at`. Pure — the daemon loop's only
@@ -76,18 +80,22 @@ object Launcher {
     *    `--window N` restricts to the N-day lookback ending today
     *    (the reference's repair windows, main.py:86-104)
     *
-    * Returns a process exit code (0 = clean). */
-  def run(spark: SparkSession, args: Array[String]): Int = {
+    * Returns a process exit code: 1 when any day failed, else 0. */
+  def run(spark: SparkSession, args: Array[String]): Int =
+    run(spark, args, Config("", "", ""))
+
+  /** [[run]] with the failure CSV and alert sink of `defaults` (a
+    * `--webhook` replaces the alert sink); its paths are ignored. */
+  private[pipeline] def run(spark: SparkSession, args: Array[String], defaults: Config): Int = {
     require(args.length >= 3,
       "usage: Launcher <odsPath> <dimPath> <targetPath> [--today yyyy-MM-dd] " +
         "[--daemon HH:mm] [--webhook url] [--backfill yyyyMM] " +
         "[--accounts a,b,c [--month yyyyMM] [--window N]]")
     def flag(name: String): Option[String] =
       args.sliding(2).collectFirst { case Array(`name`, v) => v }
-    val alerter = flag("--webhook").map(new HttpAlerter(_)).getOrElse(LogAlerter)
-    val config = Config(args(0), args(1), args(2), alerter = alerter)
+    val config = defaults.copy(odsPath = args(0), dimPath = args(1), targetPath = args(2),
+      alerter = flag("--webhook").map(new HttpAlerter(_)).getOrElse(defaults.alerter))
     val today = flag("--today").map(LocalDate.parse).getOrElse(LocalDate.now())
-    val monthFmt = DateTimeFormatter.ofPattern("yyyyMM")
 
     // reject contradictory flag combinations instead of silently dropping
     // one side and alerting "complete" on work that never ran
@@ -103,36 +111,26 @@ object Launcher {
     // like --today/--daemon already do via LocalDate/LocalTime.parse
     for (m <- flag("--backfill") ++ flag("--month"))
       require(
-        try { java.time.YearMonth.parse(m, monthFmt); true }
+        try { java.time.YearMonth.parse(m, MonthFormat); true }
         catch { case _: java.time.format.DateTimeParseException => false },
         s"month '$m' does not parse as yyyyMM")
     require(flag("--window").isEmpty || flag("--accounts").isDefined,
       "--window only applies to the --accounts repair path (E1 uses the fixed lookback)")
     for (w <- flag("--window"); m <- flag("--month"))
-      require(m == today.format(monthFmt),
+      require(m == today.format(MonthFormat),
         s"--window is anchored to --today ($today), which is not in month $m — " +
           "drop --window for a whole-month repair or set --today inside the month")
 
-    (flag("--backfill"), flag("--accounts"), flag("--daemon")) match {
-      case (Some(month), _, _) => // E2: whole named month, no day filter
-        Jobs.runMonth(spark, config.odsPath, config.dimPath, config.targetPath,
-          month, dayRange = None, accounts = None,
-          extraDiscount = config.extraDiscount)
-        alerter.send(s"backfill $month complete")
-        0
-      case (None, Some(accountsCsv), _) => // E3: repair named accounts
-        val month = flag("--month").getOrElse(today.format(monthFmt))
-        val dayRange = flag("--window").map(n => Jobs.lookbackWindow(today, n.toInt))
-        Jobs.runMonth(spark, config.odsPath, config.dimPath, config.targetPath,
-          month, dayRange, accounts = Some(accountsCsv.split(',').toSeq),
-          extraDiscount = config.extraDiscount)
-        alerter.send(s"repair $month accounts=$accountsCsv complete")
-        0
-      case (None, None, Some(t)) =>
-        daemon(spark, config, LocalTime.parse(t))
-      case (None, None, None) => // E1: one daily tick
-        if (runDaily(spark, config, today).nonEmpty) 1 else 0
+    val accounts = flag("--accounts").map(_.split(',').toSeq)
+    val failed = (flag("--backfill"), accounts, flag("--daemon")) match {
+      case (None, None, Some(t)) => daemon(spark, config, LocalTime.parse(t))
+      case (None, None, None) => runDaily(spark, config, today) // E1: one daily tick
+      case (backfill, _, _) => // E2: the whole named month; E3: the named accounts
+        runSlice(spark, config,
+          backfill.orElse(flag("--month")).getOrElse(today.format(MonthFormat)),
+          flag("--window").map(n => Jobs.lookbackWindow(today, n.toInt)), accounts)
     }
+    if (failed.nonEmpty) 1 else 0
   }
 
   /** args: see [[run]]. Default: one E1 tick for the current date. */

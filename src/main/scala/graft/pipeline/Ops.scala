@@ -7,6 +7,7 @@ import java.time.LocalDate
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 /** S7 — append-only CSV failure log with header-on-create
   * (ref: main.py:15-32; duplicated at billing_calculation_service.py:19-34
@@ -82,53 +83,76 @@ final class HttpAlerter(
     }
 }
 
-/** E1's window job with the reference's per-day failure isolation (ref:
+/** The one billing run from lake to target, behind E1, E2 and E3 (ref:
   * billing_calculation_service.py:464-468: log + CSV + alert, continue with
-  * the next day). One window job, per-day isolation on failure: the whole
-  * day range is computed and written as ONE dynamic-partition overwrite;
-  * only if that throws — a failed overwrite commits no partition — is each
-  * day retried as its own job, so one bad day neither blocks nor corrupts
-  * the others (its partition simply isn't overwritten).
+  * the next day). The whole slice is computed and written as ONE
+  * dynamic-partition overwrite; only if that throws (a failed overwrite
+  * commits no partition) is each day retried as its own job, so one bad day
+  * neither blocks nor corrupts the others: its partition simply isn't
+  * overwritten.
+  *
+  * An account repair (E3) rewrites whole (invoice_month, usage_day)
+  * partitions, so each one it writes is the named accounts' recomputed rows
+  * plus the target's rows of every other account, carried over unchanged
+  * (their `etl_time` included).
   */
 object IsolatedRun {
 
-  /** Writes `compute(days.head, days.last + 1)` in one overwrite; if that
-    * fails, writes `compute(day, day + 1)` for each day independently,
-    * logging and alerting each failed day. Returns the failed days. `days`
-    * must be consecutive. The default compute is the kernel slice for the
-    * range ([[Jobs.computeMonth]]). */
+  /** Writes the slice of `invoiceMonth` in [from, until) of `dayRange`
+    * (None: every usage_day of the month) and of `accounts` (None: all) in
+    * one overwrite; if that fails, writes each day of the slice
+    * independently, logging and alerting each failed day. A whole-month run
+    * lists the slice's days only after its overwrite has failed. Returns the
+    * failed days. `computeRange` replaces the kernel slice for a range
+    * ([[Jobs.computeMonth]]); the tests inject failures through it. */
   def runDays(
       spark: SparkSession,
       fact: DataFrame,
       dim: DataFrame,
       targetPath: String,
       invoiceMonth: String,
-      days: Seq[LocalDate],
+      dayRange: Option[(LocalDate, LocalDate)],
+      accounts: Option[Seq[String]] = None,
       failureCsv: String = "failures.csv",
       alerter: Alerter = LogAlerter,
       extraDiscount: Map[String, Double] = Map.empty,
-      computeRange: Option[(LocalDate, LocalDate) => DataFrame] = None): Seq[LocalDate] = {
-    require(days.zip(days.drop(1)).forall { case (a, b) => b == a.plusDays(1) },
-      s"days must be consecutive: $days")
-    val compute = computeRange.getOrElse((from: LocalDate, until: LocalDate) =>
-      Jobs.computeMonth(
-        fact, dim, invoiceMonth, dayRange = Some((from, until)),
-        extraDiscount = extraDiscount))
-    def write(from: LocalDate, until: LocalDate): Unit =
-      Sink.writePartitioned(compute(from, until), targetPath,
-        sortCols = Seq("billing_account_id"))
-    val windowFailed = days.nonEmpty && (
-      try { write(days.head, days.last.plusDays(1)); false }
+      computeRange: Option[Option[(LocalDate, LocalDate)] => DataFrame] = None): Seq[LocalDate] = {
+    val compute = computeRange.getOrElse((range: Option[(LocalDate, LocalDate)]) =>
+      Jobs.computeMonth(fact, dim, invoiceMonth, range, accounts, extraDiscount))
+    def targetExists = {
+      val p = new org.apache.hadoop.fs.Path(targetPath)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    }
+    // a repair adds the target's rows of every other account in the slice,
+    // read with the kernel's schema (partition inference would read
+    // invoice_month back as an integer)
+    def write(range: Option[(LocalDate, LocalDate)]): Unit = {
+      val out = compute(range)
+      val kept = accounts.filter(_ => targetExists).map(as =>
+        Jobs.slice(spark.read.schema(out.schema).parquet(targetPath), invoiceMonth, range, None)
+          .filter(!coalesce(col("billing_account_id").isin(as: _*), lit(false))))
+      Sink.writePartitioned(kept.fold(out)(out.unionByName), targetPath)
+    }
+    // the retried days: the range's, or every usage_day of the month's slice
+    // (late usage invoiced a month later included)
+    def days: Seq[LocalDate] = dayRange.fold(
+      Jobs.slice(fact, invoiceMonth, None, accounts).select("usage_day").distinct()
+        .where(col("usage_day").isNotNull).orderBy("usage_day")
+        .collect().map(_.getDate(0).toLocalDate).toSeq)(r =>
+      Iterator.iterate(r._1)(_.plusDays(1)).takeWhile(_.isBefore(r._2)).toSeq)
+    val scope = dayRange.fold("all days")(r => s"${r._1}..${r._2.minusDays(1)}") +
+      accounts.fold("")(as => s", accounts ${as.mkString(",")}")
+    val windowFailed =
+      try { write(dayRange); false }
       catch {
         case NonFatal(e) =>
           System.err.println(
-            s"[isolated-run] window ${days.head}..${days.last} of $invoiceMonth failed " +
-              s"(${errorText(e)}); retrying day by day")
+            s"[isolated-run] $invoiceMonth ($scope) failed (${errorText(e)}); retrying day by day")
           true
-      })
+      }
     val failed = if (!windowFailed) Nil else days.filter { day =>
       try {
-        write(day, day.plusDays(1))
+        write(Some((day, day.plusDays(1))))
         false
       } catch {
         case NonFatal(e) =>
@@ -139,7 +163,7 @@ object IsolatedRun {
           true
       }
     }
-    if (failed.isEmpty) alerter.send(s"billing month $invoiceMonth complete (${days.size} days)")
+    if (failed.isEmpty) alerter.send(s"billing month $invoiceMonth complete ($scope)")
     failed
   }
 

@@ -100,6 +100,115 @@ class LauncherSpec extends SparkSpec {
       Set("2026-01-14"))
   }
 
+  test("--accounts keeps every other account's rows in the partitions it rewrites (E3)") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft-repair-keep").toString
+    val days = Seq("2026-01-10", "2026-01-15").map(java.sql.Date.valueOf)
+    val facts = for (d <- days; a <- Seq("A", "B", "C")) yield fact(a).copy(usage_day = d)
+    def rules(priceA: Double) = Seq(
+      Rule("2026-01", "A", mode = Some(2), price = Some(priceA)),
+      Rule("2026-01", "B", mode = Some(2), price = Some(3.0)),
+      Rule("2026-01", "C", mode = Some(2), price = Some(4.0)))
+    facts.toDF().write.parquet(s"$dir/ods")
+    rules(2.0).toDF().write.parquet(s"$dir/dim")
+    def launch(args: String*): Int =
+      Launcher.run(spark, Array(s"$dir/ods", s"$dir/dim", s"$dir/out") ++ args)
+    def out = spark.read.parquet(s"$dir/out")
+    def external(account: String): Map[String, Double] = out
+      .filter(col("billing_account_id") === account)
+      .select(col("usage_day").cast("string"), col("external_consumption"))
+      .as[(String, Double)].collect().toMap
+    val keys = graft.kernel.BillingSchema.Grain13
+    val compared = graft.kernel.BillingSchema.TargetColumns.filterNot(keys.contains)
+    assert(compared.contains("etl_time"))
+
+    assert(launch("--backfill", "202601") == 0)
+    out.filter(col("billing_account_id") === "C").write.parquet(s"$dir/c_before")
+    def cUnchanged(): Unit = {
+      val diff = graft.operators.Reconcile.snapshotDiff(spark.read.parquet(s"$dir/c_before"),
+        out.filter(col("billing_account_id") === "C"), keys, compared)
+      assert(diff.isEmpty, s"C's rows changed:\n${diff.collect().mkString("\n")}")
+    }
+
+    // A's rule changes; the repair of A and B recomputes both days of both
+    rules(5.0).toDF().write.mode("overwrite").parquet(s"$dir/dim")
+    assert(launch("--accounts", "A,B", "--month", "202601") == 0)
+    assert(out.count() == facts.size)
+    cUnchanged()
+    assert(external("A") == Map("2026-01-10" -> 50.0, "2026-01-15" -> 50.0))
+    assert(external("B") == Map("2026-01-10" -> 30.0, "2026-01-15" -> 30.0))
+
+    // a windowed repair rewrites only 2026-01-15, still keeping C
+    rules(7.0).toDF().write.mode("overwrite").parquet(s"$dir/dim")
+    assert(launch("--accounts", "A,B", "--month", "202601",
+      "--window", "2", "--today", "2026-01-15") == 0)
+    assert(out.count() == facts.size)
+    cUnchanged()
+    assert(external("A") == Map("2026-01-10" -> 50.0, "2026-01-15" -> 70.0))
+
+    // a first repair into a missing target writes the named accounts only
+    assert(Launcher.run(spark, Array(s"$dir/ods", s"$dir/dim", s"$dir/fresh",
+      "--accounts", "A", "--month", "202601")) == 0)
+    assert(spark.read.parquet(s"$dir/fresh").select("billing_account_id").as[String]
+      .collect().toSeq == Seq("A", "A"))
+  }
+
+  test("a failing --backfill day is logged and alerted, the other days land, exit code 1") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-backfill-fail").toString
+    // 2025-12-31 is late usage invoiced in 202601
+    val days = Seq("2025-12-31", "2026-01-10", "2026-01-11", "2026-01-12")
+    days.map(d => fact("A").copy(usage_day = java.sql.Date.valueOf(d))).toDF()
+      .write.partitionBy("invoice_month", "usage_day").parquet(s"$dir/ods")
+    Seq(Rule("2026-01", "A", mode = Some(2), price = Some(2.0))).toDF()
+      .write.parquet(s"$dir/dim")
+    // poison 2026-01-11: zero its data pages, keep its footer, so the lake
+    // lists and plans but any task reading that day fails
+    val bad = java.nio.file.Paths.get(s"$dir/ods/invoice_month=202601/usage_day=2026-01-11")
+    val file = Files.list(bad).filter(_.toString.endsWith(".parquet")).findFirst().get
+    val bytes = Files.readAllBytes(file)
+    val footerLen = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, 4, bytes.length - 8 - footerLen, 0.toByte)
+    Files.write(file, bytes)
+    Files.delete(file.resolveSibling(s".${file.getFileName}.crc")) // else a checksum error
+    val alerts = scala.collection.mutable.ArrayBuffer[String]()
+    val alerter = new Alerter { def send(m: String): Unit = alerts += m }
+    val failCsv = s"$dir/failures.csv"
+
+    val code = Launcher.run(spark,
+      Array(s"$dir/ods", s"$dir/dim", s"$dir/out", "--backfill", "202601"),
+      Launcher.Config("", "", "", failureCsv = failCsv, alerter = alerter))
+
+    assert(code == 1)
+    val csv = new String(Files.readAllBytes(java.nio.file.Paths.get(failCsv))).linesIterator.toSeq
+    assert(csv.size == 2 && csv.head == "invoice_month,usage_day,error")
+    assert(csv(1).startsWith("\"202601\",\"2026-01-11\","))
+    assert(alerts.toSeq.map(_.contains("2026-01-11")) == Seq(true), alerts)
+    assert(spark.read.parquet(s"$dir/out").select("usage_day").as[java.sql.Date]
+      .collect().map(_.toString).toSet == Set("2025-12-31", "2026-01-10", "2026-01-12"))
+  }
+
+  test("--backfill writes late usage whose usage_day lies before its invoice_month") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-backfill-late").toString
+    val facts = Seq(
+      fact("A").copy(invoice_month = "202602", usage_day = java.sql.Date.valueOf("2026-01-30")),
+      fact("A").copy(invoice_month = "202602", usage_day = java.sql.Date.valueOf("2026-02-03")),
+      fact("A").copy(usage_day = java.sql.Date.valueOf("2026-01-30"))) // 202601: excluded
+    Seq(Rule("2026-02", "A", mode = Some(2), price = Some(2.0))).toDF().write.parquet(s"$dir/dim")
+    facts.toDF().write.parquet(s"$dir/ods")
+
+    assert(Launcher.run(spark,
+      Array(s"$dir/ods", s"$dir/dim", s"$dir/out", "--backfill", "202602")) == 0)
+
+    val out = spark.read.parquet(s"$dir/out")
+    assert(out.select($"invoice_month".cast("string"), $"usage_day".cast("string"))
+      .as[(String, String)].collect().toSet ==
+      Set(("202602", "2026-01-30"), ("202602", "2026-02-03")))
+  }
+
   test("contradictory CLI flags are rejected, not silently dropped") {
     // each of these used to drop one flag and alert "complete" on work
     // that never ran

@@ -28,13 +28,13 @@ class OpsSpec extends SparkSpec {
     val f = facts.toDF(); val r = rules.toDF()
     val failed = IsolatedRun.runDays(
       spark, f, r, s"$dir/out", "202601",
-      Seq(LocalDate.parse("2026-01-10"), LocalDate.parse("2026-01-11")),
+      Some((LocalDate.parse("2026-01-10"), LocalDate.parse("2026-01-12"))),
       failureCsv = failCsv, alerter = alerter, extraDiscount = Map.empty,
-      computeRange = Some { (from, until) =>
+      computeRange = Some { range =>
         val bad = LocalDate.parse("2026-01-11")
-        if (!bad.isBefore(from) && bad.isBefore(until)) throw error
-        Jobs.computeMonth(f, r, "202601",
-          dayRange = Some((from, until)), extraDiscount = Map.empty)
+        if (range.exists { case (from, until) => !bad.isBefore(from) && bad.isBefore(until) })
+          throw error
+        Jobs.computeMonth(f, r, "202601", dayRange = range, extraDiscount = Map.empty)
       })
     (failed, s"$dir/out", failCsv, alerts.toSeq)
   }
@@ -94,6 +94,7 @@ class OpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     val dir = Files.createTempDirectory("graft-window").toString
     val days = Seq("2026-01-10", "2026-01-11", "2026-01-12").map(LocalDate.parse)
+    val window = Some((days.head, days.last.plusDays(1)))
     val bad = days(1)
     val f = days.map(d => fact("A").copy(usage_day = java.sql.Date.valueOf(d))).toDF()
     val r = Seq(Rule("2026-01", "A", mode = Some(2), price = Some(2.0))).toDF()
@@ -102,7 +103,7 @@ class OpsSpec extends SparkSpec {
       .collect().toMap
 
     val clean = fileWrites {
-      assert(IsolatedRun.runDays(spark, f, r, s"$dir/out", "202601", days,
+      assert(IsolatedRun.runDays(spark, f, r, s"$dir/out", "202601", window,
         failureCsv = s"$dir/failures.csv").isEmpty)
     }
     assert(clean == Seq(true))
@@ -112,10 +113,10 @@ class OpsSpec extends SparkSpec {
     // execution time — inside the window's overwrite, after it started
     val f2 = f.withColumn("cost", lit(200.0))
     val failing = fileWrites {
-      val failed = IsolatedRun.runDays(spark, f2, r, s"$dir/out", "202601", days,
+      val failed = IsolatedRun.runDays(spark, f2, r, s"$dir/out", "202601", window,
         failureCsv = s"$dir/failures.csv",
-        computeRange = Some { (from, until) =>
-          Jobs.computeMonth(f2, r, "202601", dayRange = Some((from, until)))
+        computeRange = Some { range =>
+          Jobs.computeMonth(f2, r, "202601", dayRange = range)
             .withColumn("cost", when(col("usage_day") === lit(java.sql.Date.valueOf(bad)),
               raise_error(lit("boom"))).otherwise(col("cost")))
         })
@@ -165,10 +166,12 @@ class OpsSpec extends SparkSpec {
     val dim = spark.read.parquet(s"$dir/dim")
     val perDay = fileWrites {
       assert(IsolatedRun.runDays(spark, ods, dim, s"$dir/days", "202601",
-        days.map(_.toLocalDate), failureCsv = s"$dir/failures.csv",
-        computeRange = Some { (from, until) =>
-          require(until == from.plusDays(1), "window refused")
-          Jobs.computeMonth(ods, dim, "202601", dayRange = Some((from, until)),
+        Some((days.head.toLocalDate, days.last.toLocalDate.plusDays(1))),
+        failureCsv = s"$dir/failures.csv",
+        computeRange = Some { range =>
+          require(range.exists { case (from, until) => until == from.plusDays(1) },
+            "window refused")
+          Jobs.computeMonth(ods, dim, "202601", dayRange = range,
             extraDiscount = extra)
         }).isEmpty)
     }

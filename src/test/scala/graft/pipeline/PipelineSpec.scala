@@ -39,52 +39,45 @@ class PipelineSpec extends SparkSpec {
     assert(out.select("external_consumption").as[Double].collect().toSet == Set(20.0))
   }
 
-  test("spreadFiles>1 splits a hot partition across multiple files (ADVICE r8)") {
-    import spark.implicits._
-    // one HOT (month, day) partition with many rows, arriving spread over
-    // several upstream tasks (the documented assumption: upstream task
-    // count ≥ spreadFiles — here 8 ≥ 2); plus a small cold partition
-    val hot = (1 to 2000).map(i => ("202601", java.sql.Date.valueOf("2026-01-10"), i))
-    val cold = Seq(("202601", java.sql.Date.valueOf("2026-01-11"), 0))
-    val df = (hot ++ cold).toDF("invoice_month", "usage_day", "v").repartition(8)
-    def filesIn(dir: String, day: String): Int =
-      new java.io.File(s"$dir/invoice_month=202601/usage_day=$day")
-        .listFiles().count(f => f.getName.endsWith(".parquet"))
-    // baseline: spreadFiles=1 → exactly ONE file per partition (the
-    // anti-fanout contract the repartition exists for)
-    val dir1 = Files.createTempDirectory("graft-spread1").toString
-    Sink.writePartitioned(df, dir1)
-    assert(filesIn(dir1, "2026-01-10") == 1)
-    // the skew knob: spreadFiles=2 → the hot partition lands in >1 file,
-    // and the data is byte-identical to the unsalted write
-    val dir2 = Files.createTempDirectory("graft-spread2").toString
-    Sink.writePartitioned(df, dir2, spreadFiles = 2)
-    assert(filesIn(dir2, "2026-01-10") > 1,
-      "hot partition did not split across writers under spreadFiles=2")
-    val a = spark.read.parquet(dir1); val b = spark.read.parquet(dir2)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
   test("partitioned write is idempotent and only overwrites incoming partitions") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-sink").toString
-    val f = facts.toDF(); val r = rules.toDF()
+    // three more accounts on 2026-01-20, in descending order
+    val f = (facts ++ Seq("E", "D", "C").map(a =>
+      fact(a).copy(usage_day = java.sql.Date.valueOf("2026-01-20")))).toDF()
+    val r = rules.toDF()
+    // each month's rows arrive spread over 3 upstream tasks
+    def month(m: String) = Jobs.computeMonth(f, r, m).repartition(3)
 
     // write both months
-    Sink.writePartitioned(Jobs.computeMonth(f, r, "202601"), dir)
-    Sink.writePartitioned(Jobs.computeMonth(f, r, "202602"), dir)
+    Sink.writePartitioned(month("202601"), dir)
+    Sink.writePartitioned(month("202602"), dir)
     val full = spark.read.parquet(dir)
-    assert(full.count() == 4)
+    assert(full.count() == 7)
 
     // re-run January only — February survives, January is replaced not duped
-    Sink.writePartitioned(Jobs.computeMonth(f, r, "202601"), dir)
+    Sink.writePartitioned(month("202601"), dir)
     val again = spark.read.parquet(dir)
-    assert(again.count() == 4)
+    assert(again.count() == 7)
     assert(again.filter($"invoice_month" === "202602").count() == 1)
 
     // partition layout on disk
-    val months = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("invoice_month="))
-    assert(months.toSet == Set("invoice_month=202601", "invoice_month=202602"))
+    val months = new java.io.File(dir).listFiles().filter(_.getName.startsWith("invoice_month="))
+    assert(months.map(_.getName).toSet == Set("invoice_month=202601", "invoice_month=202602"))
+
+    // exactly ONE file per written partition (the anti-fan-out contract the
+    // sink's repartition exists for), its rows ordered by billing_account_id
+    val partitions = months.flatMap(_.listFiles().filter(_.isDirectory))
+    assert(partitions.length == 3)
+    partitions.foreach { p =>
+      val files = p.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"$p holds ${files.length} files")
+      val ids = spark.read.parquet(files.head.getPath)
+        .select("billing_account_id").as[String].collect().toSeq
+      assert(ids == ids.sorted, s"$p: $ids")
+    }
+    assert(spark.read.parquet(s"$dir/invoice_month=202601/usage_day=2026-01-20")
+      .count() == 5)
   }
 
   test("restatement audit: runMonth twice, then snapshotDiff of the writes is EMPTY") {
