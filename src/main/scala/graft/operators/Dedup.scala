@@ -1536,8 +1536,6 @@ object Dedup {
     NearDupSide(sh, bands, Seq(sh))
   }
 
-  private[operators] def pathKey(d: String): String =
-    d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
   private val NdidxBuckets = 32
   private val NdidxSpecFile = "_GRAFT_NDIDX_SPEC"
 
@@ -1545,7 +1543,7 @@ object Dedup {
     * keys: band rows on the candidate join's key, shingle sets on the
     * Jaccard verify's. */
   private def nearDupTables(d: String, bp: BandParams): Seq[(String, Seq[String])] = {
-    val key = pathKey(d) + s"_r${bp.bandSize}b${bp.nBands}"
+    val key = graft.pipeline.Bucketing.pathKey(d) + s"_r${bp.bandSize}b${bp.nBands}"
     Seq(s"graft_ndidx_bands_$key" -> Seq("band"), s"graft_ndidx_sh_$key" -> Seq("doc_id"))
   }
 

@@ -1117,7 +1117,7 @@ object Similarity {
       .flatMap { case (_, meta) => parsePqMeta(meta) }
 
   private def pqCodesTable(d: String): String =
-    s"graft_pqidx_codes_${Dedup.pathKey(d)}"
+    s"graft_pqidx_codes_${graft.pipeline.Bucketing.pathKey(d)}"
 
   /** Every persisted layer of `d`'s vector index, base first: codes, both
     * delta segments, the compacted generation. */
@@ -1360,8 +1360,8 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), normCol(col("embedding")).as("nrm"))
 
   private def pqDeltaTable(d: String, dd: PqDeltaDef): String =
-    if (dd.seg == 1) s"graft_pqidx_delta_${Dedup.pathKey(d)}"
-    else s"graft_pqidx_delta${dd.seg}_${Dedup.pathKey(d)}"
+    if (dd.seg == 1) s"graft_pqidx_delta_${graft.pipeline.Bucketing.pathKey(d)}"
+    else s"graft_pqidx_delta${dd.seg}_${graft.pipeline.Bucketing.pathKey(d)}"
 
   /** Incremental APPEND to the persisted vector index (round-14 verdict
     * #1 — the index's one missing lifecycle step: any corpus change
@@ -1421,7 +1421,7 @@ object Similarity {
   // ---------- s18: segment COMPACTION into a new base generation ----------
 
   private def pqCompactTable(d: String): String =
-    s"graft_pqidx_compact_${Dedup.pathKey(d)}"
+    s"graft_pqidx_compact_${graft.pipeline.Bucketing.pathKey(d)}"
 
   /** COMPACTION — the LSM fold that completes the index lifecycle
     * (round-15 verdict #3: build → append → ??? had no third step; a

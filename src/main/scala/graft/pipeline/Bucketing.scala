@@ -88,7 +88,46 @@ object Bucketing {
   /** Drop index tables: their catalog entries and their files. */
   def dropIndex(s: SparkSession, tables: Seq[String]): Unit = tables.foreach { t =>
     s.sql(s"DROP TABLE IF EXISTS $t")
-    graft.operators.Reconcile.deleteRecursively(indexLocation(s, t))
+    deleteRecursively(indexLocation(s, t))
+  }
+
+  /** Delete `path` and everything under it; a missing path is a no-op. */
+  def deleteRecursively(path: String): Unit = {
+    val p = java.nio.file.Paths.get(path)
+    if (java.nio.file.Files.exists(p)) {
+      val it = java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+      try it.forEach(f => java.nio.file.Files.deleteIfExists(f))
+      finally it.close()
+    }
+  }
+
+  /** The name key of data dir `d` in its persisted artifacts' table names. */
+  def pathKey(d: String): String =
+    d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
+
+  /** The spec check of every persisted artifact, decided from disk: the
+    * recorded (schema DDL, extra text) of each of `tables` when every spec
+    * file records `fingerprint`; otherwise None, after dropping every
+    * table, so the caller rebuilds them and records each with [[writeSpec]]
+    * once its files are written. */
+  private def checkSpecs(s: SparkSession, tables: Seq[String], specFile: String,
+      fingerprint: String): Option[Seq[(String, String)]] = {
+    val specs = tables.map(validSpec(s, _, specFile, fingerprint))
+    if (specs.forall(_.isDefined)) Some(specs.flatten)
+    else { dropIndex(s, tables); None }
+  }
+
+  /** Record table `t` as built from `fingerprint`: written whole or not at
+    * all, so a torn spec never validates. */
+  private def writeSpec(s: SparkSession, t: String, specFile: String,
+      fingerprint: String, ddl: String, extra: String): Unit = {
+    val p = java.nio.file.Paths.get(indexLocation(s, t), specFile)
+    val tmp = p.resolveSibling(specFile + ".tmp")
+    java.nio.file.Files.writeString(tmp,
+      fingerprint + "\n" + ddl + (if (extra.isEmpty) "" else "\n" + extra))
+    java.nio.file.Files.move(tmp, p,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** The one lifecycle of a persisted bucketed index: external tables
@@ -111,37 +150,42 @@ object Bucketing {
       builtAs: String = "built")(build: => IndexBuild): Ensured = {
     def read(spec: String, mode: String, seconds: Double) =
       Ensured(tables.map { case (t, _) => readBucketed(s, t) }, spec, mode, seconds)
-    val specs = tables.map { case (t, _) => validSpec(s, t, specFile, fingerprint) }
-    if (specs.forall(_.isDefined)) {
-      val missing = tables.zip(specs.flatten)
-        .filterNot { case ((t, _), _) => s.catalog.tableExists(t) }
-      missing.foreach { case ((t, keys), (ddl, _)) =>
-        val cluster = keys.mkString(", ")
-        s.sql(s"""CREATE TABLE $t ($ddl) USING parquet
-                 |CLUSTERED BY ($cluster) SORTED BY ($cluster)
-                 |INTO $numBuckets BUCKETS
-                 |LOCATION '${indexLocation(s, t)}'""".stripMargin)
-      }
-      read(specs.head.get._2, if (missing.isEmpty) "cached" else "reregistered", 0.0)
-    } else {
-      val t0 = System.nanoTime()
-      dropIndex(s, tables.map(_._1))
-      val b = build
-      try {
-        tables.zip(b.frames).foreach { case ((t, keys), df) =>
-          writeBucketed(df, t, keys, numBuckets, Some(indexLocation(s, t)))
-          val text = fingerprint + "\n" + df.schema.toDDL +
-            (if (b.spec.isEmpty) "" else "\n" + b.spec)
-          // written whole or not at all: a torn spec never validates
-          val p = java.nio.file.Paths.get(indexLocation(s, t), specFile)
-          val tmp = p.resolveSibling(specFile + ".tmp")
-          java.nio.file.Files.writeString(tmp, text)
-          java.nio.file.Files.move(tmp, p,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val t0 = System.nanoTime()
+    checkSpecs(s, tables.map(_._1), specFile, fingerprint) match {
+      case Some(specs) =>
+        val missing = tables.zip(specs)
+          .filterNot { case ((t, _), _) => s.catalog.tableExists(t) }
+        missing.foreach { case ((t, keys), (ddl, _)) =>
+          val cluster = keys.mkString(", ")
+          s.sql(s"""CREATE TABLE $t ($ddl) USING parquet
+                   |CLUSTERED BY ($cluster) SORTED BY ($cluster)
+                   |INTO $numBuckets BUCKETS
+                   |LOCATION '${indexLocation(s, t)}'""".stripMargin)
         }
-      } finally b.release()
-      read(b.spec, builtAs, (System.nanoTime() - t0) / 1e9)
+        read(specs.head._2, if (missing.isEmpty) "cached" else "reregistered", 0.0)
+      case None =>
+        val b = build
+        try tables.zip(b.frames).foreach { case ((t, keys), df) =>
+          writeBucketed(df, t, keys, numBuckets, Some(indexLocation(s, t)))
+          writeSpec(s, t, specFile, fingerprint, df.schema.toDDL, b.spec)
+        } finally b.release()
+        read(b.spec, builtAs, (System.nanoTime() - t0) / 1e9)
     }
+  }
+
+  /** A one-file parquet source `t` under [[indexLocation]], written from
+    * `df` through [[ensureIndex]]'s spec check: rewritten when its spec
+    * does not record `fingerprint` (a first call, a rewritten source),
+    * reused otherwise. One file, so an `AvailableNow` drain reads it as
+    * one micro-batch. Returns its path. */
+  def stageFile(s: SparkSession, t: String, fingerprint: String)(
+      df: => DataFrame): String = {
+    val specFile = "_GRAFT_STAGE_SPEC"
+    if (checkSpecs(s, Seq(t), specFile, fingerprint).isEmpty) {
+      val frame = df
+      frame.coalesce(1).write.mode("overwrite").parquet(indexLocation(s, t))
+      writeSpec(s, t, specFile, fingerprint, frame.schema.toDDL, "")
+    }
+    indexLocation(s, t)
   }
 }

@@ -16,10 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Two-phase aggregation for a skewed groupBy: group on (keys + salt)
-    * first — hot keys spread across `salt` partial groups — then merge.
-    * `aggs` must be algebraic (sum/count/min/max style) for the merge to be
-    * exact; pass the merge expression per output column. */
   /** Row-content salt: deterministic for a given row regardless of partition
     * layout — `monotonically_increasing_id`/`rand` are seeded per partition,
     * so a repartitioned retry could re-salt rows mid-stage (non-deterministic
@@ -34,6 +30,10 @@ object Skew {
   private[pipeline] def contentSalt(df: DataFrame, salt: Int): Column =
     pmod(hash(df.columns.toIndexedSeq.map(col): _*), lit(salt))
 
+  /** Two-phase aggregation for a skewed groupBy: group on (keys + salt)
+    * first — hot keys spread across `salt` partial groups — then merge.
+    * Both phases sum each of `sumCols`; the merge is exact because a sum
+    * is algebraic. */
   def saltedSum(df: DataFrame, keys: Seq[String], salt: Int,
                 sumCols: Seq[String]): DataFrame = {
     require(salt > 0, "salt must be positive")

@@ -329,57 +329,14 @@ object KernelQueries {
 
   // ---------- q39: the streaming kernel, drained and read back ----------
 
-  /** Per-(JVM, data dir, variant) staged fact parquet for the streaming
-    * source — written once; ONE file so `AvailableNow` drains it as a
-    * single micro-batch (the dynamic-overwrite sink then cannot overwrite
-    * an earlier batch's partitions — StreamingSpec's staging note). Run
-    * dirs (out + checkpoint) are FRESH per invocation, so every timed run
-    * re-executes the full drain; the checkpoint half is deleted as soon as
-    * the drain finishes (ADVICE r8: run-scoped temp dirs must not
-    * accumulate until shutdown), the out half stays for the lazy read-back
-    * and is cleaned by the shutdown hook.
-    *
-    * The staging WRITE runs OUTSIDE the monitor (ADVICE r8): the shutdown
-    * hook synchronizes on the same lock, so a write under it would block
-    * JVM exit for the full Spark job. Write to a private temp root first,
-    * publish the path under the lock; a racing thread that loses the
-    * publish deletes its own root and uses the winner's. */
-  private val q39Staged = scala.collection.mutable.Map.empty[String, String]
-  private val q39Roots = scala.collection.mutable.Set.empty[String]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val roots = q39Staged.synchronized(q39Roots.toList)
-      roots.foreach { r =>
-        try graft.operators.Reconcile.deleteRecursively(r)
-        catch { case _: Exception => () }
-      }
-    }))
-  }
-
-  private def ensureStaged(s: org.apache.spark.sql.SparkSession, key: String,
-      write: String => Unit): String =
-    q39Staged.synchronized(q39Staged.get(key)) match {
-      case Some(p) => p
-      case None =>
-        val root = java.nio.file.Files.createTempDirectory("graft_q39_staged").toString
-        write(s"$root/staged")
-        q39Staged.synchronized {
-          q39Staged.get(key) match {
-            case Some(winner) => // lost the publish race — ours is redundant
-              try graft.operators.Reconcile.deleteRecursively(root)
-              catch { case _: Exception => () }
-              winner
-            case None =>
-              q39Roots += root
-              q39Staged(key) = s"$root/staged"
-              s"$root/staged"
-          }
-        }
-    }
-
-  private def ensureStagedFact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    ensureStaged(s, d, p =>
-      BillingDemo.fact(s, d).coalesce(1).write.mode("overwrite").parquet(p))
+  /** q39's staged fact: one file, so `AvailableNow` drains it as a single
+    * micro-batch (the dynamic-overwrite sink then cannot overwrite an
+    * earlier batch's partitions — StreamingSpec's staging note), rewritten
+    * whenever lineitem.parquet changes
+    * ([[graft.streaming.StreamQueries.stagedFrom]]). */
+  private def stagedFact(s: org.apache.spark.sql.SparkSession, d: String,
+      name: String)(fact: => org.apache.spark.sql.DataFrame): String =
+    graft.streaming.StreamQueries.stagedFrom(s, d, "lineitem.parquet", name)(fact)
 
   /** q39 — the STREAMING kernel as an oracle-checked entry (round-7 verdict
     * item #4): the same pure kernel q22 declares, executed through
@@ -393,21 +350,16 @@ object KernelQueries {
   private def drainStreamingKernel(
       s: org.apache.spark.sql.SparkSession, d: String,
       staged: String): org.apache.spark.sql.DataFrame = {
-    val run = java.nio.file.Files.createTempDirectory("graft_q39_run").toString
-    q39Staged.synchronized { q39Roots += run }
     val fact = BillingDemo.fact(s, d)
     val dim = BillingDemo.dim(s, d)
     val etl = lit(etlLiteral).cast("timestamp")
-    val stream = s.readStream.schema(fact.schema).parquet(staged)
-    val q = graft.streaming.StreamJobs.streamingKernel(
-      stream, dim, s"$run/out", s"$run/ckpt",
-      BillingDemo.demoExtraDiscount, etlTime = etl).start()
-    require(q.awaitTermination(600000), "q39: streaming drain did not finish within 600s")
-    // the checkpoint is run-scoped and dead once the drain committed —
-    // delete it NOW (ADVICE r8), not at shutdown; the out dir must stay
-    // for the lazily-read result below (shutdown hook owns it)
-    try graft.operators.Reconcile.deleteRecursively(s"$run/ckpt")
-    catch { case _: Exception => () }
+    // a fresh run dir per invocation, so every timed run re-executes the
+    // full drain; its out dir stays for the lazily-read result below
+    val run = graft.streaming.StreamQueries.drain(s, "q39", staged) { (run, source) =>
+      graft.streaming.StreamJobs.streamingKernel(
+        source(), dim, s"$run/out", s"$run/ckpt",
+        BillingDemo.demoExtraDiscount, etlTime = etl)
+    }
     // partition columns return from the directory layout with inferred
     // types — realign every column to the conform schema (derived from a
     // 0-row pass through the batch kernel: plan-only, no job), then round
@@ -429,7 +381,7 @@ object KernelQueries {
   val q39KernelStreaming = QueryDef(
     "q39_kernel_streaming",
     taggedSql + kernelSuffixSql()) { (s, d) =>
-    drainStreamingKernel(s, d, ensureStagedFact(s, d))
+    drainStreamingKernel(s, d, stagedFact(s, d, "fact")(BillingDemo.fact(s, d)))
   }
 
   /** Bench-only machinery calibration for q39 (round-8 verdict #1): the
@@ -442,63 +394,39 @@ object KernelQueries {
     * is published as `queries_machinery_cal`. */
   val q39MachineryProbe: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
     (s, d) => drainStreamingKernel(s, d,
-      ensureStaged(s, s"$d#probe", p =>
-        BillingDemo.fact(s, d).limit(1).coalesce(1).write.mode("overwrite").parquet(p)))
+      stagedFact(s, d, "fact_probe")(BillingDemo.fact(s, d).limit(1)))
 
   // ---------- q41: the kernel over a PRE-BUCKETED ods (zero-Exchange path) ----------
 
-  /** Per-(JVM, data dir) bucketed ods table: the raw fact (arrays dropped)
-    * written ONCE bucketed on (invoice_month, billing_account_id) — the
-    * ingest-time layout that lets the kernel's only shuffle (the grain-13
-    * aggregation) disappear, because a hash partitioning on a SUBSET of
-    * the grouping keys already satisfies the aggregation's clustering
-    * requirement. Fresh token per (re)creation, old roots never deleted or
-    * reused mid-JVM (same hazard class as q36 — ADVICE r7); in-memory
-    * catalog assumed. */
-  private val q41Written = scala.collection.mutable.Map.empty[String, String]
-  private val q41Roots = scala.collection.mutable.Set.empty[String]
-  private val q41Token = new java.util.concurrent.atomic.AtomicInteger(0)
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val roots = q41Written.synchronized(q41Roots.toList)
-      roots.foreach { r =>
-        try graft.operators.Reconcile.deleteRecursively(r)
-        catch { case _: Exception => () }
-      }
-    }))
-  }
-
-  private def ensureBucketedOds(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    // the WRITE runs outside the monitor (the shutdown hook synchronizes on
-    // it — ADVICE r8's lock-scope hazard class); fresh token per attempt,
-    // losers of the publish race keep their root registered for cleanup
-    val cached = q41Written.synchronized(q41Written.get(d)).filter(s.catalog.tableExists)
-    cached.getOrElse {
-      val token = s"${d.replaceAll("[^A-Za-z0-9]+", "_")}_" +
-        s"${ProcessHandle.current.pid}_${q41Token.incrementAndGet()}"
-      val tbl = s"graft_q41_ods_$token"
-      val root = s"${sys.props("java.io.tmpdir")}/graft_q41_$token"
-      graft.operators.Reconcile.deleteRecursively(root) // pid-reuse stale files only
-      // bucket count scales with the session's parallelism (optimization
-      // round 18): the zero-Exchange property means the bucket count IS the
-      // kernel's parallelism — every downstream stage (agg, ladder joins,
-      // modes, conform) runs one task per bucket, so a constant 16 halved
-      // the whole kernel on 32 cores (the round-17 q41 regression: 30 s of
-      // task time in 16 tasks = 2.2 s wall vs q22's 1.0 s at 32). At ingest
-      // scale the count would be sized to the cluster the same way; the
-      // 16 floor keeps the 8-core bench comparable (two waves of 8).
-      graft.pipeline.Bucketing.writeBucketed(
-        BillingDemo.rawFact(s, d).drop("credits_type", "credits_amount"),
-        tbl, Seq("invoice_month", "billing_account_id"),
-        math.max(16, s.sparkContext.defaultParallelism), Some(root))
-      q41Written.synchronized {
-        q41Roots += root
-        q41Written.get(d).filter(s.catalog.tableExists) match {
-          case Some(winner) => winner // lost the race; ours is swept at shutdown
-          case None => q41Written(d) = tbl; tbl
-        }
-      }
-    }
+  /** q41's bucketed ods for data dir `d`: the raw fact (arrays dropped)
+    * bucketed on (invoice_month, billing_account_id) — the ingest-time
+    * layout that lets the kernel's only shuffle (the grain-13 aggregation)
+    * disappear, because a hash partitioning on a SUBSET of the grouping
+    * keys already satisfies the aggregation's clustering requirement.
+    * Written through [[graft.pipeline.Bucketing.ensureIndex]], checked
+    * against lineitem.parquet's fingerprint on every call: written once
+    * per source version and bucket count.
+    *
+    * The bucket count scales with the session's parallelism (optimization
+    * round 18): the zero-Exchange property means the bucket count IS the
+    * kernel's parallelism — every downstream stage (agg, ladder joins,
+    * modes, conform) runs one task per bucket, so a constant 16 halved the
+    * whole kernel on 32 cores (the round-17 q41 regression: 30 s of task
+    * time in 16 tasks = 2.2 s wall vs q22's 1.0 s at 32). At ingest scale
+    * the count would be sized to the cluster the same way; the 16 floor
+    * keeps the 8-core bench comparable (two waves of 8). The count is part
+    * of the table name, so sessions of different widths keep their own. */
+  private def bucketedOds(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    import graft.pipeline.Bucketing
+    val n = math.max(16, s.sparkContext.defaultParallelism)
+    Bucketing.ensureIndex(s,
+        Seq(s"graft_q41_ods_${Bucketing.pathKey(d)}_b$n" ->
+          Seq("invoice_month", "billing_account_id")),
+        n, "_GRAFT_Q41_SPEC", graft.tables.SourceState.fingerprint(d, "lineitem.parquet")) {
+      Bucketing.IndexBuild(Seq(
+        BillingDemo.rawFact(s, d).drop("credits_type", "credits_amount")))
+    }.frames.head
   }
 
   /** q41 — E1's kernel reading a PRE-BUCKETED ods (round-7 verdict item
@@ -513,7 +441,7 @@ object KernelQueries {
   val q41KernelBucketed = QueryDef(
     "q41_kernel_bucketed",
     taggedSql + kernelSuffixSql()) { (s, d) =>
-    val fact = graft.pipeline.Bucketing.readBucketed(s, ensureBucketedOds(s, d))
+    val fact = bucketedOds(s, d)
       .groupBy(BillingDemo.grain13.map(col): _*)
       .agg(BillingDemo.measures.map(m => sum(m).as(m)).head,
         BillingDemo.measures.tail.map(m => sum(m).as(m)): _*)

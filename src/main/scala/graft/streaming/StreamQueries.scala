@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import graft.pipeline.Bucketing
 import graft.queries.{QueryDef, Stable}
-import graft.tables.Tables
+import graft.tables.{SourceState, Tables}
 
 /** Streaming queries declared as ORACLE-CHECKED entries (SURVEY §2.8).
   *
@@ -27,75 +28,82 @@ import graft.tables.Tables
   * that: the same `date_trunc` aggregation restricted to windows whose end
   * precedes the final watermark (max event time − the delay). Together
   * they pin both halves: q44 the window values, q46 the emission contract.
+  *
+  * Lifecycle: each entry's source is staged as one parquet file under the
+  * warehouse dir ([[graft.pipeline.Bucketing.stageFile]]), rewritten when
+  * the table it is derived from changes, so the drain is one micro-batch
+  * over current data. Each drain goes through [[drain]], which stops its
+  * query and deletes its checkpoint however it ends. The only state kept
+  * in the JVM is the drains' run dirs, which the result frames read lazily.
   */
 object StreamQueries {
 
-  /** Per-(JVM, data dir, variant) staged events parquet — written once
-    * (ONE file so the drain is one micro-batch, the q39 staging pattern).
-    * The staging WRITE runs OUTSIDE the monitor (ADVICE r8: the shutdown
-    * hook synchronizes on the same lock, so a write under it would block
-    * JVM exit for the length of a Spark job): write to a private temp
-    * root, publish under the lock, losers delete their root. Run-scoped
-    * checkpoints are deleted as soon as their drain finishes (ADVICE r8 —
-    * they used to accumulate one per invocation until shutdown); the hook
-    * sweeps whatever a crash leaves behind. */
-  private val staged = scala.collection.mutable.Map.empty[String, String]
-  private val roots = scala.collection.mutable.Set.empty[String]
-  private val token = new java.util.concurrent.atomic.AtomicInteger(0)
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val rs = staged.synchronized(roots.toList)
-      rs.foreach { r =>
-        try graft.operators.Reconcile.deleteRecursively(r)
-        catch { case _: Exception => () }
-      }
-    }))
+  /** `d`'s one-file staged source `name`, derived from `d`/`table` by
+    * `df` through [[graft.pipeline.Bucketing.stageFile]]: rewritten when
+    * the table's fingerprint changes, reused otherwise. */
+  private[graft] def stagedFrom(s: SparkSession, d: String, table: String,
+      name: String)(df: => DataFrame): String =
+    Bucketing.stageFile(s, s"graft_stage_${name}_${Bucketing.pathKey(d)}",
+      SourceState.fingerprint(d, table))(df)
+
+  private def stagedEvents(s: SparkSession, d: String): String =
+    stagedFrom(s, d, "events.parquet", "events")(Tables.events(s, d))
+
+  /** The one-file staged source `name` of a machinery probe's literal
+    * `rows`, which are also its fingerprint. */
+  private def stagedRows[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      s: SparkSession, name: String, rows: Seq[T], cols: String*): String = {
+    import s.implicits._
+    Bucketing.stageFile(s, s"graft_stage_$name", rows.mkString)(rows.toDF(cols: _*))
   }
-
-  private def ensureStaged(key: String, write: String => Unit): String =
-    staged.synchronized(staged.get(key)) match {
-      case Some(p) => p
-      case None =>
-        val root = java.nio.file.Files.createTempDirectory("graft_q44_staged").toString
-        write(s"$root/staged")
-        staged.synchronized {
-          staged.get(key) match {
-            case Some(winner) => // lost the publish race — ours is redundant
-              try graft.operators.Reconcile.deleteRecursively(root)
-              catch { case _: Exception => () }
-              winner
-            case None =>
-              roots += root
-              staged(key) = s"$root/staged"
-              s"$root/staged"
-          }
-        }
-    }
-
-  private def ensureStagedEvents(s: SparkSession, d: String): String =
-    ensureStaged(d, p =>
-      Tables.events(s, d).coalesce(1).write.mode("overwrite").parquet(p))
 
   /** Staged 2-row source for the APPEND-sink machinery probes: the rows
     * are 4 days apart so the final watermark CLOSES the first day-window /
     * first session — a 1-row probe (q44's) would emit nothing in append
     * mode and the read-back would die on an empty sink's missing schema. */
-  private def ensureProbeEvents(s: SparkSession, d: String): String =
-    ensureStaged(s"$d#append-probe", p => {
-      import s.implicits._
-      Seq(
-        (java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "probe", 1.0, 1L),
-        (java.sql.Timestamp.valueOf("2024-01-05 00:00:00"), "probe", 1.0, 1L))
-        .toDF("ts", "event_type", "value", "user_id")
-        .coalesce(1).write.mode("overwrite").parquet(p)
-    })
+  private def stagedAppendProbe(s: SparkSession): String =
+    stagedRows(s, "append_probe", Seq(
+      (java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "probe", 1.0, 1L),
+      (java.sql.Timestamp.valueOf("2024-01-05 00:00:00"), "probe", 1.0, 1L)),
+      "ts", "event_type", "value", "user_id")
 
-  /** A run-scoped temp dir registered for crash-time sweep; normal paths
-    * delete it explicitly the moment it is no longer needed. */
-  private def runDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix).toString
-    staged.synchronized { roots += p }
-    p
+  /** The run dirs of the drains. A file sink's result frame reads its run
+    * dir's `out` lazily, so the dirs live until JVM exit: the one in-JVM
+    * state of the streaming entries, swept by the one shutdown hook. */
+  private val runs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  locally {
+    Runtime.getRuntime.addShutdownHook(new Thread(() => runs.forEach { r =>
+      try Bucketing.deleteRecursively(r) catch { case _: Exception => () }
+    }))
+  }
+
+  /** The one `AvailableNow` drain behind q39 and q44–q59 and their
+    * machinery probes. It makes a fresh run dir, reads `staged`'s schema
+    * and hands `writer` the run dir and a stream source over `staged`,
+    * then starts `writer`'s sink with the run's checkpoint and the
+    * AvailableNow trigger and awaits it up to 600 s. On every exit path —
+    * drained, a failed batch, a timeout — it stops the query and then
+    * deletes the checkpoint (and the run dir when nothing else is in it, as
+    * after a memory sink). Returns the run dir. */
+  private[graft] def drain(s: SparkSession, name: String, staged: String)(
+      writer: (String, () => DataFrame) => DataStreamWriter[_]): String = {
+    val run = java.nio.file.Files.createTempDirectory(s"graft_${name}_run").toString
+    runs.add(run)
+    val schema = s.read.parquet(staged).schema
+    try {
+      val q = writer(run, () => s.readStream.schema(schema).parquet(staged))
+        .option("checkpointLocation", s"$run/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      // a drained query has already terminated; stopping it again only
+      // logs a failed job-group cancel
+      try require(q.awaitTermination(600000), s"$name: streaming drain did not finish within 600s")
+      finally if (q.isActive) q.stop()
+      run
+    } finally {
+      try Bucketing.deleteRecursively(s"$run/ckpt") catch { case _: Exception => () }
+      if (new java.io.File(run).delete()) runs.remove(run)
+    }
   }
 
   /** q50/q51's batch-join oracles are valid ONLY under the documented
@@ -111,41 +119,31 @@ object StreamQueries {
         "the single-micro-batch contract behind the batch-join oracle is broken")
   }
 
-  private def dropDir(p: String): Unit = {
-    try graft.operators.Reconcile.deleteRecursively(p)
-    catch { case _: Exception => () }
-    staged.synchronized { roots -= p }
-  }
-
   private val WindowLength = "1 day"
   private val WatermarkDelay = "1 hour"
   private val WatermarkDelayUs = 3600000000L
   private val WindowLengthUs = 86400000000L
   private val SessionGapUs = 3600000000L
 
-  /** The drain behind q44: complete-mode memory sink, fresh checkpoint per
-    * run (deleted right after the drain), result read from the driver-side
-    * memory table. */
+  /** Numbers the memory-sink tables of q44's and q55's runs. */
+  private val token = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The drain behind q44: complete-mode memory sink, result read from the
+    * driver-side memory table. */
   private def drainWindowedComplete(s: SparkSession, stagedPath: String): DataFrame = {
-    val ckpt = runDir("graft_q44_run")
-    val schema = s.read.parquet(stagedPath).schema
-    val stream = s.readStream.schema(schema).parquet(stagedPath)
     val n = token.incrementAndGet()
     val table = s"graft_q44_out_$n"
     // a long-lived JVM (Bench's round-robin) would otherwise accumulate one
     // driver-resident memory-sink table per run — drop the PREVIOUS run's
     // view (its rows die with it); the current result stays readable
     s.catalog.dropTempView(s"graft_q44_out_${n - 1}")
-    val q = StreamJobs.windowedEventCounts(stream, WindowLength)
-      .writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(table)
-      .option("checkpointLocation", s"$ckpt/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(600000), "q44: streaming drain did not finish within 600s")
-    finally dropDir(ckpt)
+    drain(s, "q44", stagedPath) { (_, source) =>
+      StreamJobs.windowedEventCounts(source(), WindowLength)
+        .writeStream
+        .outputMode(OutputMode.Complete)
+        .format("memory")
+        .queryName(table)
+    }
     s.table(table)
       .select(unix_micros(col("window_start")).as("window_us"), col("event_type"),
         col("n_events"), Stable.r4(col("sum_value")).as("sum_value"))
@@ -162,7 +160,7 @@ object StreamQueries {
        |  count(*) AS n_events,
        |  ${Stable.sqlR4("sum(value)")} AS sum_value
        |FROM events GROUP BY window_us, event_type""".stripMargin) { (s, d) =>
-    drainWindowedComplete(s, ensureStagedEvents(s, d))
+    drainWindowedComplete(s, stagedEvents(s, d))
   }
 
   /** Bench-only machinery calibration for q44 (round-8 verdict #1): the
@@ -172,8 +170,7 @@ object StreamQueries {
     * q44's timed runs; see [[graft.Bench]]. */
   val q44MachineryProbe: (SparkSession, String) => DataFrame =
     (s, d) => drainWindowedComplete(s,
-      ensureStaged(s"$d#probe", p =>
-        Tables.events(s, d).limit(1).coalesce(1).write.mode("overwrite").parquet(p)))
+      stagedFrom(s, d, "events.parquet", "events_probe")(Tables.events(s, d).limit(1)))
 
   /** q46 — the PRODUCTION streaming sink shape, oracle-checked (round-8
     * verdict #4): the same tumbling-window aggregation in APPEND mode with
@@ -198,28 +195,19 @@ object StreamQueries {
        |HAVING window_us + $WindowLengthUs <=
        |  (SELECT (epoch_us(max(ts)) // 1000 * 1000) - $WatermarkDelayUs FROM events)"""
       .stripMargin) { (s, d) =>
-    drainWindowedAppend(s, ensureStagedEvents(s, d))
+    drainWindowedAppend(s, stagedEvents(s, d))
   }
 
   /** The drain behind q46 (and its machinery probe): append-mode windowed
-    * aggregation into a parquet sink, read back. The checkpoint is dead
-    * once the drain committed; the out dir stays for the lazy read-back
-    * (shutdown hook owns it). */
+    * aggregation into a parquet sink, read back. */
   private def drainWindowedAppend(s: SparkSession, stagedPath: String): DataFrame = {
-    val run = runDir("graft_q46_run")
-    val schema = s.read.parquet(stagedPath).schema
-    val stream = s.readStream.schema(schema).parquet(stagedPath)
-    val q = StreamJobs.windowedEventCounts(stream, WindowLength, WatermarkDelay)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", s"$run/out")
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(600000), "q46: streaming drain did not finish within 600s")
-    try graft.operators.Reconcile.deleteRecursively(s"$run/ckpt")
-    catch { case _: Exception => () }
+    val run = drain(s, "q46", stagedPath) { (run, source) =>
+      StreamJobs.windowedEventCounts(source(), WindowLength, WatermarkDelay)
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("parquet")
+        .option("path", s"$run/out")
+    }
     s.read.parquet(s"$run/out")
       .select(unix_micros(col("window_start")).as("window_us"), col("event_type"),
         col("n_events"), Stable.r4(col("sum_value")).as("sum_value"))
@@ -230,7 +218,7 @@ object StreamQueries {
     * window and the sink is non-empty) — fixed streaming machinery plus
     * two rows of work; Bench subtracts its minimum from q46's timed runs. */
   val q46MachineryProbe: (SparkSession, String) => DataFrame =
-    (s, d) => drainWindowedAppend(s, ensureProbeEvents(s, d))
+    (s, _) => drainWindowedAppend(s, stagedAppendProbe(s))
 
   /** q48 — CUSTOM-STATE streaming sessionization, oracle-checked: the
     * `flatMapGroupsWithState` operator ([[StreamJobs.sessionizeStream]],
@@ -285,30 +273,24 @@ object StreamQueries {
        |   OR last_us // 1000 + ${SessionGapUs / 1000} <
        |      (SELECT epoch_us(max(ts)) // 1000 - ${WatermarkDelayUs / 1000} FROM events)"""
       .stripMargin) { (s, d) =>
-    drainSessionAppend(s, ensureStagedEvents(s, d))
+    drainSessionAppend(s, stagedEvents(s, d))
   }
 
   /** The drain behind q48 (and its machinery probe). */
   private def drainSessionAppend(s: SparkSession, stagedPath: String): DataFrame = {
-    val run = runDir("graft_q48_run")
-    val schema = s.read.parquet(stagedPath).schema
     import s.implicits._
-    val stream = s.readStream.schema(schema).parquet(stagedPath)
-      .select(col("user_id"), col("ts"), col("value"))
-      .as[StreamJobs.SessionEvent]
-    val q = StreamJobs
-      .sessionizeStream(stream,
-        gap = java.time.Duration.ofHours(1), watermark = WatermarkDelay)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", s"$run/out")
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(600000), "q48: streaming drain did not finish within 600s")
-    try graft.operators.Reconcile.deleteRecursively(s"$run/ckpt")
-    catch { case _: Exception => () }
+    val run = drain(s, "q48", stagedPath) { (run, source) =>
+      val stream = source()
+        .select(col("user_id"), col("ts"), col("value"))
+        .as[StreamJobs.SessionEvent]
+      StreamJobs
+        .sessionizeStream(stream,
+          gap = java.time.Duration.ofHours(1), watermark = WatermarkDelay)
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("parquet")
+        .option("path", s"$run/out")
+    }
     s.read.parquet(s"$run/out")
       .select(col("user_id"), col("first_us"), col("last_us"),
         col("n_events"), Stable.r4(col("sum_value")).as("sum_value"))
@@ -318,7 +300,7 @@ object StreamQueries {
     * drain over the staged 2-row source (the 4-day gap closes one session
     * in-batch, so the sink is non-empty). */
   val q48MachineryProbe: (SparkSession, String) => DataFrame =
-    (s, d) => drainSessionAppend(s, ensureProbeEvents(s, d))
+    (s, _) => drainSessionAppend(s, stagedAppendProbe(s))
 
   private val JoinWithin = "6 hours"
 
@@ -331,29 +313,22 @@ object StreamQueries {
     * emits ALL of them — no watermark-eviction restriction is needed in
     * the oracle (state eviction only happens between batches). */
   private def drainIntervalJoin(s: SparkSession, stagedPath: String): DataFrame = {
-    val run = runDir("graft_q50_run")
     requireSingleBatchStaging(stagedPath, "q50")
-    val schema = s.read.parquet(stagedPath).schema
-    def side(tpe: String) = s.readStream.schema(schema).parquet(stagedPath)
-      .filter(col("event_type") === tpe)
-    val views = side("view")
-      .select(col("user_id"), col("ts").as("v_ts"), col("event_id").as("view_id"))
-    val purchases = side("purchase")
-      .select(col("user_id"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"), col("value"))
-    val q = StreamJobs
-      .intervalJoinStream(views, purchases, key = "user_id",
-        leftTs = "v_ts", rightTs = "p_ts", within = JoinWithin)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", s"$run/out")
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(600000), "q50: streaming drain did not finish within 600s")
-    try graft.operators.Reconcile.deleteRecursively(s"$run/ckpt")
-    catch { case _: Exception => () }
+    val run = drain(s, "q50", stagedPath) { (run, source) =>
+      def side(tpe: String) = source().filter(col("event_type") === tpe)
+      val views = side("view")
+        .select(col("user_id"), col("ts").as("v_ts"), col("event_id").as("view_id"))
+      val purchases = side("purchase")
+        .select(col("user_id"), col("ts").as("p_ts"),
+          col("event_id").as("purchase_id"), col("value"))
+      StreamJobs
+        .intervalJoinStream(views, purchases, key = "user_id",
+          leftTs = "v_ts", rightTs = "p_ts", within = JoinWithin)
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("parquet")
+        .option("path", s"$run/out")
+    }
     s.read.parquet(s"$run/out")
       .select(col("user_id"), col("view_id"), col("r_purchase_id").as("purchase_id"),
         unix_micros(col("v_ts")).as("view_us"), unix_micros(col("p_ts")).as("purchase_us"),
@@ -379,52 +354,39 @@ object StreamQueries {
        |  ON v.user_id = p.user_id
        | AND v.event_type = 'view' AND p.event_type = 'purchase'
        | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 6 HOUR""".stripMargin) { (s, d) =>
-    drainIntervalJoin(s, ensureStagedEvents(s, d))
+    drainIntervalJoin(s, stagedEvents(s, d))
   }
 
   /** Bench-only machinery calibration for q50: the identical two-stream
     * join drain over a staged 2-row source holding one view and one
     * purchase a minute apart — one pair emits, so the sink is non-empty. */
   val q50MachineryProbe: (SparkSession, String) => DataFrame =
-    (s, d) => drainIntervalJoin(s,
-      ensureStaged(s"$d#join-probe", p => {
-        import s.implicits._
-        Seq(
-          (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 7L, "view", 1.0, "{}"),
-          (2L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 7L, "purchase", 2.0, "{}"))
-          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-          .coalesce(1).write.mode("overwrite").parquet(p)
-      }))
+    (s, _) => drainIntervalJoin(s, stagedRows(s, "join_probe", Seq(
+      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 7L, "view", 1.0, "{}"),
+      (2L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 7L, "purchase", 2.0, "{}")),
+      "event_id", "ts", "user_id", "event_type", "value", "props"))
 
   /** Staged documents with a synthesized deterministic arrival time
     * (`2024-01-01 + doc_id seconds`) — the dedup-at-the-door stream needs
     * an event-time column and the batch table has none. One file, one
     * micro-batch. */
-  private def ensureStagedDocs(s: SparkSession, d: String): String =
-    ensureStaged(s"$d#docs", p =>
+  private def stagedDocs(s: SparkSession, d: String): String =
+    stagedFrom(s, d, "documents.parquet", "docs")(
       Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
-          timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"))
-        .coalesce(1).write.mode("overwrite").parquet(p))
+          timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts")))
 
   /** The drain behind q51 (and its probe). */
   private def drainDedupStream(s: SparkSession, stagedPath: String): DataFrame = {
-    val run = runDir("graft_q51_run")
     requireSingleBatchStaging(stagedPath, "q51")
-    val schema = s.read.parquet(stagedPath).schema
-    val stream = s.readStream.schema(schema).parquet(stagedPath)
-    val q = StreamJobs.dedupStream(stream, textCol = "text", tsCol = "ts")
-      .select(md5(col("text").cast("binary")).as("text_md5"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", s"$run/out")
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(600000), "q51: streaming drain did not finish within 600s")
-    try graft.operators.Reconcile.deleteRecursively(s"$run/ckpt")
-    catch { case _: Exception => () }
+    val run = drain(s, "q51", stagedPath) { (run, source) =>
+      StreamJobs.dedupStream(source(), textCol = "text", tsCol = "ts")
+        .select(md5(col("text").cast("binary")).as("text_md5"))
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .format("parquet")
+        .option("path", s"$run/out")
+    }
     s.read.parquet(s"$run/out")
   }
 
@@ -442,20 +404,15 @@ object StreamQueries {
   val q51DedupStream = QueryDef(
     "q51_dedup_stream",
     "SELECT DISTINCT md5(text) AS text_md5 FROM documents") { (s, d) =>
-    drainDedupStream(s, ensureStagedDocs(s, d))
+    drainDedupStream(s, stagedDocs(s, d))
   }
 
   /** Bench-only machinery calibration for q51: the identical dedup drain
     * over a staged 1-row corpus. */
   val q51MachineryProbe: (SparkSession, String) => DataFrame =
-    (s, d) => drainDedupStream(s,
-      ensureStaged(s"$d#docs-probe", p => {
-        import s.implicits._
-        Seq((1L, "probe text",
-          java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-          .toDF("doc_id", "text", "ts")
-          .coalesce(1).write.mode("overwrite").parquet(p)
-      }))
+    (s, _) => drainDedupStream(s, stagedRows(s, "docs_probe",
+      Seq((1L, "probe text", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))),
+      "doc_id", "text", "ts"))
 
   /** The drain behind q55: stream-STATIC equi-join (the streaming
     * enrichment shape — a batch dimension joined into a stream without
@@ -465,27 +422,22 @@ object StreamQueries {
     * how a 1000-executor cluster enriches an event firehose against a
     * dimension table. */
   private def drainStaticEnrich(s: SparkSession, d: String, stagedPath: String): DataFrame = {
-    val ckpt = runDir("graft_q55_run")
-    val schema = s.read.parquet(stagedPath).schema
-    val stream = s.readStream.schema(schema).parquet(stagedPath)
     val dim = broadcast(
       Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")))
     val n = token.incrementAndGet()
     val table = s"graft_q55_out_$n"
     s.catalog.dropTempView(s"graft_q55_out_${n - 1}")
-    val q = stream
-      .join(dim, stream("user_id") === dim("c_custkey"))
-      .groupBy(col("c_mktsegment"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(table)
-      .option("checkpointLocation", s"$ckpt/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(600000), "q55: streaming drain did not finish within 600s")
-    finally dropDir(ckpt)
+    drain(s, "q55", stagedPath) { (_, source) =>
+      val stream = source()
+      stream
+        .join(dim, stream("user_id") === dim("c_custkey"))
+        .groupBy(col("c_mktsegment"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
+        .writeStream
+        .outputMode(OutputMode.Complete)
+        .format("memory")
+        .queryName(table)
+    }
     s.table(table)
       .select(col("c_mktsegment"), col("event_type"),
         col("n_events"), Stable.r4(col("sum_value")).as("sum_value"))
@@ -505,33 +457,28 @@ object StreamQueries {
        |  ${Stable.sqlR4("sum(e.value)")} AS sum_value
        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
        |GROUP BY c.c_mktsegment, e.event_type""".stripMargin) { (s, d) =>
-    drainStaticEnrich(s, d, ensureStagedEvents(s, d))
+    drainStaticEnrich(s, d, stagedEvents(s, d))
   }
 
   /** Bench-only machinery calibration for q55: the identical
     * stream-static drain over a staged 1-row events source (user 0 exists
     * in every customer fixture, so the joined sink is non-empty). */
   val q55MachineryProbe: (SparkSession, String) => DataFrame =
-    (s, d) => drainStaticEnrich(s, d,
-      ensureStaged(s"$d#enrich-probe", p => {
-        import s.implicits._
-        Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 0L, "view", 1.0, "{}"))
-          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-          .coalesce(1).write.mode("overwrite").parquet(p)
-      }))
+    (s, d) => drainStaticEnrich(s, d, stagedRows(s, "enrich_probe",
+      Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 0L, "view", 1.0, "{}")),
+      "event_id", "ts", "user_id", "event_type", "value", "props"))
 
   /** Staged incoming batch for q57: d16's deterministic twins (id+100000,
     * first 14 chars cut, pre-normalized to `t`) with a synthesized arrival
     * time. One file, one micro-batch. */
-  private def ensureStagedTwins(s: SparkSession, d: String): String =
-    ensureStaged(s"$d#twins", p => {
+  private def stagedTwins(s: SparkSession, d: String): String =
+    stagedFrom(s, d, "documents.parquet", "twins") {
       val t0 = lower(trim(col("text")))
       Tables.documents(s, d)
         .select((col("doc_id") + 100000).as("doc_id"),
           t0.substr(lit(15), length(t0)).as("t"),
           timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"))
-        .coalesce(1).write.mode("overwrite").parquet(p)
-    })
+    }
 
   /** The drain behind q57 (and its probe): each micro-batch runs the d16
     * machinery against the PERSISTED history index — batch shingles +
@@ -549,33 +496,26 @@ object StreamQueries {
       h: graft.operators.Dedup.NearDupSide,
       bp: graft.operators.Dedup.BandParams): DataFrame = {
     import graft.operators.Dedup
-    val run = runDir("graft_q57_run")
     requireSingleBatchStaging(stagedPath, "q57")
-    val schema = s.read.parquet(stagedPath).schema
-    val stream = s.readStream.schema(schema).parquet(stagedPath)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val inc = batch.select(col("doc_id"), col("t"))
-        val i = Dedup.nearDupPipeline(inc, bp)
-        val matches = Dedup.nearDupMatches(h.sh, h.bands, i.sh, i.bands)
-        try inc.select(col("doc_id").as("in_id"))
-          .join(matches.select("in_id").distinct(), Seq("in_id"), "left_anti")
-          .write.mode("append").parquet(s"$run/out")
-        // the batch's survivors are durably in the sink — its cached
-        // shingles are dead weight for the rest of the drain (and the
-        // harness-level clearCache between measurements can't reach
-        // inside one): release per batch, or a long drain accumulates a
-        // cached frame per micro-batch under the 4 GiB gate heap
-        finally i.release()
-      }
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(600000), "q57: streaming drain did not finish within 600s")
+    val run = try drain(s, "q57", stagedPath) { (run, source) =>
+      source().writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val inc = batch.select(col("doc_id"), col("t"))
+          val i = Dedup.nearDupPipeline(inc, bp)
+          val matches = Dedup.nearDupMatches(h.sh, h.bands, i.sh, i.bands)
+          try inc.select(col("doc_id").as("in_id"))
+            .join(matches.select("in_id").distinct(), Seq("in_id"), "left_anti")
+            .write.mode("append").parquet(s"$run/out")
+          // the batch's survivors are durably in the sink — its cached
+          // shingles are dead weight for the rest of the drain (and the
+          // harness-level clearCache between measurements can't reach
+          // inside one): release per batch, or a long drain accumulates a
+          // cached frame per micro-batch under the 4 GiB gate heap
+          finally i.release()
+        }
+    }
     // same for the drain-scoped history side once the drain is over
     finally h.release()
-    try graft.operators.Reconcile.deleteRecursively(s"$run/ckpt")
-    catch { case _: Exception => () }
     s.read.parquet(s"$run/out")
   }
 
@@ -599,7 +539,7 @@ object StreamQueries {
        |WHERE v.in_id IS NULL""".stripMargin) { (s, d) =>
     import graft.operators.Dedup
     val bp = Dedup.bandParamsFor(Dedup.corpusDocsFor(s, d))
-    drainNearDupGate(s, ensureStagedTwins(s, d),
+    drainNearDupGate(s, stagedTwins(s, d),
       Dedup.nearDupStoredIndex(s, d, bp), bp)
   }
 
@@ -613,12 +553,10 @@ object StreamQueries {
       val hist = Seq((1L, "zulu yankee xray whiskey victor uniform tango sierra"))
         .toDF("doc_id", "t")
       drainNearDupGate(s,
-        ensureStaged(s"$d#twins-probe", p => {
+        stagedRows(s, "twins_probe",
           Seq((100001L, "alpha bravo charlie delta echo foxtrot golf hotel",
-            java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-            .toDF("doc_id", "t", "ts")
-            .coalesce(1).write.mode("overwrite").parquet(p)
-        }),
+            java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))),
+          "doc_id", "t", "ts"),
         graft.operators.Dedup.nearDupPipeline(hist, bp), bp)
     }
 
@@ -629,12 +567,11 @@ object StreamQueries {
     * made oracle-checkable: an online path still reading the base-only
     * index ranks them against a corpus that excludes their own segment
     * and hash-mismatches s17's oracle. */
-  private def ensureStagedProbeVecs(s: SparkSession, d: String): String =
-    ensureStaged(s"$d#vecprobes-union", p =>
+  private def stagedProbeVecs(s: SparkSession, d: String): String =
+    stagedFrom(s, d, "embeddings.parquet", "vecprobes")(
       graft.operators.Similarity.unionProbeVecs(s, d)
         .select(col("vec_id"), col("embedding"),
-          timestamp_seconds(lit(1704067200L) + col("vec_id")).as("ts"))
-        .coalesce(1).write.mode("overwrite").parquet(p))
+          timestamp_seconds(lit(1704067200L) + col("vec_id")).as("ts")))
 
   /** The drain behind q58 (and its probe): each micro-batch's vectors are
     * ANN-enriched against the PERSISTED vector index
@@ -646,24 +583,15 @@ object StreamQueries {
       s: SparkSession, d: String, stagedPath: String,
       langFilter: Option[String] = None): DataFrame = {
     val tag = if (langFilter.isEmpty) "q58" else "q59"
-    val run = runDir(s"graft_${tag}_run")
     requireSingleBatchStaging(stagedPath, tag)
-    val schema = s.read.parquet(stagedPath).schema
-    val stream = s.readStream.schema(schema).parquet(stagedPath)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity
-          .annEnrichBatch(s, d, batch.select(col("vec_id"), col("embedding")),
-            langFilter = langFilter)
-          .write.mode("append").parquet(s"$run/out")
-      }
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(600000), s"$tag: streaming drain did not finish within 600s")
-    finally {
-      try graft.operators.Reconcile.deleteRecursively(s"$run/ckpt")
-      catch { case _: Exception => () }
+    val run = drain(s, tag, stagedPath) { (run, source) =>
+      source().writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          graft.operators.Similarity
+            .annEnrichBatch(s, d, batch.select(col("vec_id"), col("embedding")),
+              langFilter = langFilter)
+            .write.mode("append").parquet(s"$run/out")
+        }
     }
     s.read.parquet(s"$run/out")
   }
@@ -686,7 +614,7 @@ object StreamQueries {
   val q58AnnStreamEnrich = QueryDef(
     "q58_ann_stream_enrich",
     graft.operators.Similarity.s17IvfPqAppend.oracle.get) { (s, d) =>
-    drainAnnEnrich(s, d, ensureStagedProbeVecs(s, d))
+    drainAnnEnrich(s, d, stagedProbeVecs(s, d))
   }
 
   /** q59 — q58's online serving × s20's metadata predicate: each arriving
@@ -708,7 +636,7 @@ object StreamQueries {
     "q59_ann_stream_filtered",
     graft.operators.Similarity.ivfPqAppendOracleSql(
       Some(graft.operators.Similarity.FilterLang))) { (s, d) =>
-    drainAnnEnrich(s, d, ensureStagedProbeVecs(s, d),
+    drainAnnEnrich(s, d, stagedProbeVecs(s, d),
       Some(graft.operators.Similarity.FilterLang))
   }
 
@@ -718,23 +646,24 @@ object StreamQueries {
     * one cellr ring, so the measured floor is drain machinery, not
     * candidate work. */
   val q58MachineryProbe: (SparkSession, String) => DataFrame =
-    (s, d) => drainAnnEnrich(s, d, ensureStagedOneProbe(s, d))
+    (s, d) => drainAnnEnrich(s, d, stagedOneProbe(s))
 
   /** q59's twin probe: the identical 1-row drain WITH the predicate —
     * same machinery floor, so the calibrated q59 reading isolates the
     * filtered candidate work exactly like q58's isolates the unfiltered. */
   val q59MachineryProbe: (SparkSession, String) => DataFrame =
-    (s, d) => drainAnnEnrich(s, d, ensureStagedOneProbe(s, d),
+    (s, d) => drainAnnEnrich(s, d, stagedOneProbe(s),
       Some(graft.operators.Similarity.FilterLang))
 
-  private def ensureStagedOneProbe(s: SparkSession, d: String): String =
-    ensureStaged(s"$d#vecprobes-probe", p =>
+  /** One probe: vec_id 0, embedding (i/64 for i in 1..64) — which is also
+    * its fingerprint. */
+  private def stagedOneProbe(s: SparkSession): String =
+    Bucketing.stageFile(s, "graft_stage_vec_probe", "vec_id 0, embedding i/64 for i in 1..64")(
       s.range(1).select(
         lit(0L).as("vec_id"),
         transform(sequence(lit(1), lit(64)),
           i => (i.cast("double") / lit(64.0)).cast("float")).as("embedding"),
-        lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"))
-        .coalesce(1).write.mode("overwrite").parquet(p))
+        lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts")))
 
   val all: Seq[QueryDef] = Seq(q44WindowedStreaming, q46WindowedAppendSink,
     q48SessionizeAppendSink, q50IntervalJoinStream, q51DedupStream,

@@ -42,7 +42,7 @@ class CodegenSpec extends SparkSpec {
           mode = Some(4), credit_fields = Some("RM"))).toDF()
         .write.parquet(s"$dir/dim")
       body(s"$dir/ods", s"$dir/dim", s"$dir/target")
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("E1's fused fact stage compiles under HotSpot's 8,000-byte JIT limit") {

@@ -397,7 +397,7 @@ class PlanSpec extends SparkSpec {
       "bucketed reconcile diverged from the direct q33 diff")
   }
 
-  test("q36's snapshot pair is written once per JVM and reused (read-only re-runs)") {
+  test("q36's snapshot pair is written once per source version; re-runs only read") {
     import graft.operators.Reconcile
     // first call (above or here) wrote the pair; subsequent calls must
     // NEITHER grow the catalog NOR drop tables a concurrent caller's lazy

@@ -268,6 +268,6 @@ class RuleMatchSpec extends SparkSpec {
         assert(b == go(RuleMatch.RuleDimStrategy.Shuffle), s"seed $seed, $label fact")
         assert(b.count(_.getAs[Any]("mode") != null) > 0, s"seed $seed matched nothing")
       }
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 }

@@ -526,7 +526,7 @@ class DedupSpec extends SparkSpec {
       // but twins share those too. The sharp assert: windows counts match
       // n_tokens - 7 per doc (22 tokens → 15 windows, all distinct here)
       assert(m(1L)._1 == 15L, s"doc 1 span count: ${m(1L)}")
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("d16 incremental near-dup: twins match their origin, degenerate batch rows report 0") {
@@ -557,7 +557,7 @@ class DedupSpec extends SparkSpec {
         s"twin of 2 must best-match history doc 2: ${m(100002L)}")
       assert(m(100003L) == ((0L, -1L)),
         s"degenerate twin must report no matches: ${m(100003L)}")
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("d17 stored-index variant returns exactly d16's rows") {
@@ -595,7 +595,7 @@ class DedupSpec extends SparkSpec {
   /** Drop every index table built over `dir`: catalog entry and files. */
   private def dropIndexesOf(dir: String): Unit =
     graft.pipeline.Bucketing.dropIndex(spark, spark.catalog.listTables().collect()
-      .map(_.name).filter(_.contains(Dedup.pathKey(dir))).toSeq)
+      .map(_.name).filter(_.contains(graft.pipeline.Bucketing.pathKey(dir))).toSeq)
 
   private def writeDocs(dir: String, texts: Seq[(Long, String)]): Unit = {
     import spark.implicits._
@@ -641,7 +641,7 @@ class DedupSpec extends SparkSpec {
         s"a changed corpus fingerprint must force a rebuild, got $m2")
     } finally {
       dropIndexesOf(dir)
-      graft.operators.Reconcile.deleteRecursively(dir)
+      graft.pipeline.Bucketing.deleteRecursively(dir)
     }
   }
 
@@ -653,9 +653,9 @@ class DedupSpec extends SparkSpec {
       // a persistent metastore keeps the tables registered while their
       // warehouse directories are removed underneath
       val tables = spark.catalog.listTables().collect().map(_.name)
-        .filter(_.contains(Dedup.pathKey(dir)))
+        .filter(_.contains(graft.pipeline.Bucketing.pathKey(dir)))
       assert(tables.length == 2, s"expected the two index tables, saw: ${tables.toSeq}")
-      tables.foreach(t => graft.operators.Reconcile.deleteRecursively(
+      tables.foreach(t => graft.pipeline.Bucketing.deleteRecursively(
         graft.pipeline.Bucketing.indexLocation(spark, t)))
       val (mode, _) = Dedup.ensureNearDupIndex(spark, dir)
       assert(mode == "built", s"an index with no files must rebuild, got $mode")
@@ -664,7 +664,7 @@ class DedupSpec extends SparkSpec {
       assert(rowsOf(Dedup.d17NearDupIndexed, dir) == d16)
     } finally {
       dropIndexesOf(dir)
-      graft.operators.Reconcile.deleteRecursively(dir)
+      graft.pipeline.Bucketing.deleteRecursively(dir)
     }
   }
 
@@ -688,6 +688,6 @@ class DedupSpec extends SparkSpec {
         (p._1 % 100000 == 3) || (p._2 % 100000 == 3))
       assert(with3.forall(p => p._1 % 100000 == 3 && p._2 % 100000 == 3),
         s"unrelated doc 3 paired outside its own twin: $with3")
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 }

@@ -32,7 +32,7 @@ class SimilaritySpec extends SparkSpec {
   /** Drop every layer of `dir`'s vector index and then `dir` itself. */
   private def cleanUp(dir: String): Unit = {
     graft.pipeline.Bucketing.dropIndex(spark, Similarity.pqTables(dir))
-    graft.operators.Reconcile.deleteRecursively(dir)
+    graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("s09 ADC top-k recalls the exact-in-cell ranking well above the naive-PQ floor") {

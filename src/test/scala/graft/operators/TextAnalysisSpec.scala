@@ -119,7 +119,7 @@ class TextAnalysisSpec extends SparkSpec {
       val real = TextAnalysis.t15LmScore.fn(spark, sf)
       assert(real.filter(col("lm_score") < 0 || col("lm_score") > 1000000L).count() == 0)
       assert(real.count() > 0)
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("t24 learns exactly the greedy BPE merge table (brute-force equality)") {
@@ -187,7 +187,7 @@ class TextAnalysisSpec extends SparkSpec {
       assert(real.map(_.getInt(0)).sorted.toSeq == (1 to 8),
         "real corpus must sustain all 8 merge rounds")
       assert(real.forall(_.getLong(4) > 0))
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("t25 encodes with exactly the learned merges (brute-force equality)") {
@@ -246,7 +246,7 @@ class TextAnalysisSpec extends SparkSpec {
         assert(real.filter(col("n_bpe_tokens") < col("n_base_units")).count() > 0,
           "no document compressed on the real corpus — merges never applied")
       } finally real.unpersist()
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("t20: a verbatim re-crawl scores novelty 0, the original 1, a remix in between") {
@@ -270,7 +270,7 @@ class TextAnalysisSpec extends SparkSpec {
       val real = TextAnalysis.t20Novelty.fn(spark, sf)
       assert(real.filter(col("novelty") < 0 || col("novelty") > 1).count() == 0)
       assert(real.count() > 0)
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("t21: repetition is penalized and the fixture split is non-vacuous") {
@@ -294,7 +294,7 @@ class TextAnalysisSpec extends SparkSpec {
         .groupBy("keep").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(real.getOrElse(0L, 0L) > 0 && real.getOrElse(1L, 0L) > 0,
         s"decision must split the corpus: $real")
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("t22: weighted blocklist hits sum per-term severities; clean doc passes") {
@@ -310,7 +310,7 @@ class TextAnalysisSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getBoolean(3)))).toMap
       assert(m(1L) == ((3L, 0.8, true)), s"weighted hits wrong: ${m(1L)}")
       assert(m(2L) == ((0L, 0.0, false)), s"clean doc flagged: ${m(2L)}")
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("t23 DSIR: an all-target corpus gives every doc the identity ratio (10000/token)") {
@@ -337,7 +337,7 @@ class TextAnalysisSpec extends SparkSpec {
         .collect().map(r => r.getBoolean(0) -> r.getDouble(1)).toMap
       assert(real(true) > real(false),
         s"en slice must score above non-en on en-trained weights: $real")
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   test("t26 drops every synthesized boilerplate line and keeps body prose") {

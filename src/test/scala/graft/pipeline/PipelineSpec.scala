@@ -138,6 +138,6 @@ class MultimodalSpec extends SparkSpec {
       assert(pairs.contains((2L, 100002L)), s"twin of 2 must pair with its origin: $pairs")
       val cross = pairs.filter { case (a, b) => a % 100000 != b % 100000 }
       assert(cross.isEmpty, s"byte-disjoint payloads must not pair: $cross")
-    } finally graft.operators.Reconcile.deleteRecursively(dir)
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 }

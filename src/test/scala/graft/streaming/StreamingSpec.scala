@@ -282,6 +282,27 @@ class StreamingSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.sources.partitionColumnTypeInference.enabled")
   }
 
+  test("a drain whose batch fails stops its query and removes its checkpoint") {
+    val staged = Files.createTempDirectory("graft-failing-drain").toString + "/src"
+    spark.range(3).coalesce(1).write.parquet(staged)
+    var run = ""
+    try {
+      val e = intercept[Exception] {
+        StreamQueries.drain(spark, "failing", staged) { (r, source) =>
+          run = r
+          source().writeStream.foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            throw new IllegalStateException("injected batch failure")
+          }
+        }
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[IllegalStateException]), s"unexpected failure: $e")
+      assert(spark.streams.active.isEmpty, "the failed drain left its query running")
+      assert(run.nonEmpty && !Files.exists(java.nio.file.Paths.get(run, "ckpt")),
+        s"the failed drain left its checkpoint at $run/ckpt")
+    } finally graft.pipeline.Bucketing.deleteRecursively(new java.io.File(staged).getParent)
+  }
+
   test("q39 (the DECLARED streaming-kernel query) equals q22 row-for-row") {
     import graft.queries.KernelQueries
     // the oracle-checked entry (round-7 verdict #4): its fn stages, drains

@@ -12,7 +12,7 @@ class SourceStateSpec extends SparkSpec {
 
   private def withDir(body: String => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_source_state").toString
-    try body(dir) finally graft.operators.Reconcile.deleteRecursively(dir)
+    try body(dir) finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
   private def writeDocs(dir: String, n: Int): Unit =
