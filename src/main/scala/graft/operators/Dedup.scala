@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.reflect.ClassTag
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.queries.{QueryDef, Stable}
@@ -102,9 +102,39 @@ object Dedup {
     s"""SELECT doc_id, ${shinglesSql(tokensSql("t"))} AS sh
        |FROM (${corpusSql.replace("\n", " ")})""".stripMargin
 
+  /** Each doc's distinct shingle hashes, over [[shingled]]'s `sh`. */
+  private def distinctHashes: Column = array_distinct(transform(col("sh"), sg => polyHash(sg)))
+
+  /** (doc_id, hh): each doc's set of distinct shingle hashes. */
+  private def hashSets(s: SparkSession, d: String): DataFrame =
+    shingled(s, d).select(col("doc_id"), distinctHashes.as("hh"))
+
+  /** (doc_id, s): one row per doc and distinct shingle hash — the
+    * postings of the shingle inverted index. */
+  private def hashRows(s: SparkSession, d: String): DataFrame =
+    shingled(s, d).select(col("doc_id"), explode(distinctHashes).as("s"))
+
   // ---------- d02: exact n-gram Jaccard via shingle inverted index ----------
 
   private val JaccardThreshold = 0.5
+
+  /** The inverted-index Jaccard of d02 and d08: the postings `ex`
+    * (doc_id, s) self-joined on the shingle hash give each co-occurring
+    * pair's intersection size i, and with both docs' set sizes n from
+    * `cnt` (doc_id, n) a pair is kept iff i / (n_a + n_b − i) ≥
+    * [[JaccardThreshold]]. Returns (id_a < id_b, jaccard r4). */
+  private def invertedJaccard(ex: DataFrame, cnt: DataFrame): DataFrame = {
+    val a = ex.as("a"); val b = ex.as("b")
+    val inter = a.join(b, col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .agg(count(lit(1)).as("i"))
+    val j = col("i").cast("double") / (col("ca.n") + col("cb.n") - col("i"))
+    inter
+      .join(cnt.as("ca"), col("ca.doc_id") === col("id_a"))
+      .join(cnt.as("cb"), col("cb.doc_id") === col("id_b"))
+      .filter(j >= JaccardThreshold)
+      .select(col("id_a"), col("id_b"), Stable.r4(j).as("jaccard"))
+  }
 
   /** Joins on the 64-bit shingle HASH rather than the shingle string —
     * far smaller shuffle keys; hash collisions (~1e-9/pair) shift a Jaccard
@@ -126,21 +156,9 @@ object Dedup {
          |JOIN cnt cb ON cb.doc_id = id_b
          |WHERE CAST(i AS DOUBLE) / (ca.n + cb.n - i) >= $JaccardThreshold""".stripMargin
     }) { (s, d) =>
-    val sh = materialized(shingled(s, d)
-      .select(col("doc_id"),
-        array_distinct(transform(col("sh"), sg => polyHash(sg))).as("hh")))
-    val cnt = sh.select(col("doc_id"), size(col("hh")).cast("long").as("n"))
-    val ex = sh.select(col("doc_id"), explode(col("hh")).as("s"))
-    val a = ex.as("a"); val b = ex.as("b")
-    val inter = a.join(b, col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("i"))
-    val j = col("i").cast("double") / (col("ca.n") + col("cb.n") - col("i"))
-    inter
-      .join(cnt.as("ca"), col("ca.doc_id") === col("id_a"))
-      .join(cnt.as("cb"), col("cb.doc_id") === col("id_b"))
-      .filter(j >= JaccardThreshold)
-      .select(col("id_a"), col("id_b"), Stable.r4(j).as("jaccard"))
+    val sh = materialized(hashSets(s, d))
+    invertedJaccard(sh.select(col("doc_id"), explode(col("hh")).as("s")),
+      sh.select(col("doc_id"), size(col("hh")).cast("long").as("n")))
   }
 
   // ---------- d03: MinHash + LSH banding ----------
@@ -206,26 +224,78 @@ object Dedup {
       s"list_min(list_transform(hh, h -> (${permA(j)} * h + ${permB(j)}) % $HashMod)) AS mh$j"
     }
 
-  /** Band key k over the signature ARRAY: one xxhash64 of (k, the band's r
-    * signature values) — a single LONG join key. The oracle's band key is
-    * a `concat_ws` string of the same values; candidate SETS agree unless
-    * xxhash64 collides (2⁻⁶⁴ per bucket pair — immaterial), and the hashed
-    * key shuffles 8 bytes instead of a 20–80-char string and needs no
-    * per-permutation column materialization (the r9 shape projected
-    * `numHashes` element_at columns and concat'd them — at the ×100
-    * corpus-scaled 96 permutations that alone dominated the band stage). */
-  private def bandKeyCol(sig: Column, k: Int, bandSize: Int): Column =
-    xxhash64(lit(k), slice(sig, k * bandSize + 1, bandSize))
-
-  /** One row per band of the signature: `explode` over the b band keys,
-    * so every consumer scans the signature once instead of once a band
-    * (the b-way `unionAll` of `select`s this replaces scanned it b times a
-    * join side, which is why its callers cached it). */
-  private def bandRows(sig: Column, bp: BandParams): Column =
-    explode(array((0 until bp.nBands).map(k => bandKeyCol(sig, k, bp.bandSize)): _*))
+  /** MinHash band rows: one (doc_id, band) row per band of each doc's
+    * signature over the hash-set column `hh` of `hashed` (doc_id, hh).
+    * The signature ARRAY is materialized once per row (recomputing
+    * MinHashSig per band would be b× work), and one `explode` over the b
+    * band keys scans it once. Band key k is one xxhash64 of (k, the band's
+    * r signature values) — a single LONG join key. The oracle's band key
+    * is a `concat_ws` string of the same values; candidate SETS agree
+    * unless xxhash64 collides (2⁻⁶⁴ per bucket pair — immaterial), and the
+    * hashed key shuffles 8 bytes instead of a 20–80-char string and needs
+    * no per-permutation column. */
+  private def minHashBands(hashed: DataFrame, bp: BandParams): DataFrame = {
+    val sig = col("sig")
+    hashed
+      .select(col("doc_id"),
+        graft.functions.VectorFunctions.minHashSig(col("hh"), bp.numHashes).as("sig"))
+      .select(col("doc_id"), explode(array((0 until bp.nBands).map(k =>
+        xxhash64(lit(k), slice(sig, k * bp.bandSize + 1, bp.bandSize))): _*)).as("band"))
+  }
 
   private def bandSql(k: Int): String =
     s"concat_ws('-', ${(0 until BandSize).map(r => s"mh${k * BandSize + r}").mkString(", ")})"
+
+  /** One side of a MinHash near-dup join: its set frame (doc_id, set
+    * column), its band rows (doc_id, band), and the frames it cached, so
+    * DRAIN-style callers (q57 — a long-running loop inside ONE
+    * measurement, which the harness-level clearCache between measurements
+    * never reaches) can release them the moment the side's output is
+    * durably written. d03/d16 return lazy plans that still reference the
+    * cache, so they leave release to the harness convention
+    * (Bench/ScaleSmoke clearCache + unpersist-all before every
+    * measurement). */
+  private[graft] final case class NearDupSide(
+      sets: DataFrame, bands: DataFrame, cached: Seq[DataFrame]) {
+    def release(): Unit = cached.foreach(df =>
+      try df.unpersist(blocking = false) catch { case _: Exception => () })
+  }
+
+  /** The near-dup side of a (doc_id, t) frame of normalized text: distinct
+    * shingles `sh` (cached — referenced by both the signature build and
+    * the Jaccard verify) → their hashes → [[minHashBands]]. Shared by d03,
+    * d16 (both sides), the d17 index build and q57 (each streaming
+    * micro-batch against the persisted history side). */
+  private[graft] def nearDupPipeline(src: DataFrame, bp: BandParams): NearDupSide = {
+    val sh = src.select(col("doc_id"), shingles(col("t")).as("sh")).cache()
+    val bands = minHashBands(
+      sh.select(col("doc_id"), transform(col("sh"), sg => polyHash(sg)).as("hh")), bp)
+    NearDupSide(sh, bands, Seq(sh))
+  }
+
+  /** Band-candidate join plus exact-Jaccard verify: every pair of an `a`
+    * doc and a `b` doc sharing a band, kept iff the Jaccard of their
+    * `set` columns is ≥ [[JaccardThreshold]]. The self form (d03, d09;
+    * `a` and `b` are one side) keeps each pair once, as (id_a < id_b);
+    * the cross form (d16/d17/q57; `a` incoming, `b` history) keeps every
+    * (in_id, hist_id). Returns the two ids and the jaccard r4. */
+  private[graft] def nearDupMatches(
+      a: NearDupSide, b: NearDupSide, set: String, self: Boolean): DataFrame = {
+    val (ia, ib) = if (self) ("id_a", "id_b") else ("in_id", "hist_id")
+    val sameBand = col("a.band") === col("b.band")
+    val cand = a.bands.as("a")
+      .join(b.bands.as("b"), if (self) sameBand && col("a.doc_id") < col("b.doc_id") else sameBand)
+      .select(col("a.doc_id").as(ia), col("b.doc_id").as(ib))
+      .distinct()
+    val (sa, sb) = (col(s"sa.$set"), col(s"sb.$set"))
+    val interSize = size(array_intersect(sa, sb)).cast("double")
+    val j = interSize / (size(sa) + size(sb) - interSize)
+    cand
+      .join(a.sets.as("sa"), col("sa.doc_id") === col(ia))
+      .join(b.sets.as("sb"), col("sb.doc_id") === col(ib))
+      .filter(j >= JaccardThreshold)
+      .select(col(ia), col(ib), Stable.r4(j).as("jaccard"))
+  }
 
   /** d03 — MinHash+LSH near-dup: banded-signature buckets generate candidates via equi-join, exact Jaccard verifies — never all-pairs. */
   val d03MinHashLsh = QueryDef(
@@ -254,26 +324,8 @@ object Dedup {
          |      >= $JaccardThreshold""".stripMargin
     }) { (s, d) =>
     val bp = bandParamsFor(corpusDocsFor(s, d))
-    val sh = shingled(s, d).cache()
-    val sig = sh
-      // materialize the signature array ONCE per row; the band keys hash
-      // slices of it — recomputing MinHashSig per band would be b× work
-      .select(col("doc_id"), transform(col("sh"), sg => polyHash(sg)).as("hh"))
-      .select(col("doc_id"),
-        graft.functions.VectorFunctions.minHashSig(col("hh"), bp.numHashes).as("sig"))
-    val bands = sig.select(col("doc_id"), bandRows(col("sig"), bp).as("band"))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val interSize = size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("double")
-    val j = interSize / (size(col("sa.sh")) + size(col("sb.sh")) - interSize)
-    cand
-      .join(sh.as("sa"), col("sa.doc_id") === col("id_a"))
-      .join(sh.as("sb"), col("sb.doc_id") === col("id_b"))
-      .filter(j >= JaccardThreshold)
-      .select(col("id_a"), col("id_b"), Stable.r4(j).as("jaccard"))
+    val side = nearDupPipeline(corpus(s, d), bp)
+    nearDupMatches(side, side, "sh", self = true)
   }
 
   // ---------- d04: SimHash with pigeonhole block join ----------
@@ -502,57 +554,43 @@ object Dedup {
          |JOIN cnt cb ON cb.doc_id = id_b
          |WHERE CAST(i AS DOUBLE) / (ca.n + cb.n - i) >= $JaccardThreshold""".stripMargin
     }) { (s, d) =>
-    val ex = shingled(s, d)
-      .select(col("doc_id"),
-        explode(array_distinct(transform(col("sh"), sg => polyHash(sg)))).as("s"))
-      .cache()
+    val kept = stopListedRows(s, d).cache()
+    invertedJaccard(kept, kept.groupBy("doc_id").agg(count(lit(1)).as("n")))
+  }
+
+  /** The shingle stop list: [[hashRows]] minus every shingle whose
+    * document frequency exceeds [[MaxShingleDf]]. The df table is tiny
+    * after the cutoff ⇒ broadcast anti-join. Behind d08 and
+    * [[stopListedHashSets]]. */
+  private def stopListedRows(s: SparkSession, d: String): DataFrame = {
+    // ex feeds the df count AND the anti-join (2 refs) — cache
+    val ex = hashRows(s, d).cache()
     val hot = ex.groupBy("s").agg(count(lit(1)).as("dfreq"))
       .filter(col("dfreq") > MaxShingleDf)
       .select("s")
-    val kept = ex.join(broadcast(hot), Seq("s"), "left_anti").cache()
-    val cnt = kept.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = kept.as("a"); val b = kept.as("b")
-    val inter = a.join(b, col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("i"))
-    val j = col("i").cast("double") / (col("ca.n") + col("cb.n") - col("i"))
-    inter
-      .join(cnt.as("ca"), col("ca.doc_id") === col("id_a"))
-      .join(cnt.as("cb"), col("cb.doc_id") === col("id_b"))
-      .filter(j >= JaccardThreshold)
-      .select(col("id_a"), col("id_b"), Stable.r4(j).as("jaccard"))
+    ex.join(broadcast(hot), Seq("s"), "left_anti")
   }
 
   // ---------- d09: MinHash + LSH over the stop-listed shingle space ----------
 
-  /** Shared stop-listed shingle-hash sets: per-doc DISTINCT shingle hashes
-    * with hot shingles (document frequency > maxDf) removed — d08's cutoff
+  /** Shared stop-listed shingle-hash sets (doc_id, hh): per-doc DISTINCT
+    * shingle hashes with d08's hot shingles removed — the stop list
     * lifted to a reusable pre-step so SIGNATURE schemes (MinHash banding,
     * SimHash) can also exclude boilerplate. On real web data the band/block
     * keys inherit boilerplate skew exactly like the d02 inverted index does;
     * filtering before signing fixes the skew at its source. Opt-in (d03/d04
     * keep the unfiltered space and their oracles unchanged). */
-  private def stopListedHashSets(s: SparkSession, d: String, maxDf: Int): DataFrame = {
-    // ex feeds the df count AND the anti-join (2 refs) — cache, as in d08
-    val ex = shingled(s, d)
-      .select(col("doc_id"),
-        explode(array_distinct(transform(col("sh"), sg => polyHash(sg)))).as("s"))
-      .cache()
-    val hot = ex.groupBy("s").agg(count(lit(1)).as("dfreq"))
-      .filter(col("dfreq") > maxDf)
-      .select("s")
-    ex.join(broadcast(hot), Seq("s"), "left_anti")
-      .groupBy("doc_id").agg(collect_list(col("s")).as("hh"))
-  }
+  private def stopListedHashSets(s: SparkSession, d: String): DataFrame =
+    stopListedRows(s, d).groupBy("doc_id").agg(collect_list(col("s")).as("hh"))
 
-  private def stopListedHashSetsSql(maxDf: Int): String =
+  private def stopListedHashSetsSql: String =
     s"""SELECT doc_id, list(s) AS hh FROM (
        |  SELECT ex.doc_id, ex.s
        |  FROM (SELECT doc_id, unnest(list_distinct(list_transform(sh, sg -> ${polyHashSql("sg")}))) AS s
        |        FROM (${shingledSql.replace("\n", " ")})) ex
        |  ANTI JOIN (SELECT s FROM (SELECT doc_id, unnest(list_distinct(list_transform(sh, sg -> ${polyHashSql("sg")}))) AS s
        |             FROM (${shingledSql.replace("\n", " ")}))
-       |             GROUP BY s HAVING count(*) > $maxDf) hot USING (s))
+       |             GROUP BY s HAVING count(*) > $MaxShingleDf) hot USING (s))
        |GROUP BY doc_id""".stripMargin
 
   /** d09 — d03's MinHash+LSH banding computed over the stop-listed shingle
@@ -568,7 +606,7 @@ object Dedup {
       val bandRows = (0 until nBands)
         .map(k => s"SELECT doc_id, $k AS band_k, ${bandSql(k)} AS band FROM sig")
         .mkString("\nUNION ALL\n")
-      s"""WITH sets AS (${stopListedHashSetsSql(MaxShingleDf).replace("\n", "\n  ")}),
+      s"""WITH sets AS (${stopListedHashSetsSql.replace("\n", "\n  ")}),
          |sig AS (SELECT doc_id, ${minhashSqlCols.mkString(",\n  ")} FROM sets),
          |bands AS (
          |$bandRows),
@@ -588,23 +626,9 @@ object Dedup {
     }) { (s, d) =>
     val bp = bandParamsFor(corpusDocsFor(s, d))
     // sets feeds the signature AND both verify sides (3 refs) — cache
-    val sets = stopListedHashSets(s, d, MaxShingleDf).cache()
-    val bands = sets
-      .select(col("doc_id"),
-        graft.functions.VectorFunctions.minHashSig(col("hh"), bp.numHashes).as("sig"))
-      .select(col("doc_id"), bandRows(col("sig"), bp).as("band"))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val interSize = size(array_intersect(col("sa.hh"), col("sb.hh"))).cast("double")
-    val j = interSize / (size(col("sa.hh")) + size(col("sb.hh")) - interSize)
-    cand
-      .join(sets.as("sa"), col("sa.doc_id") === col("id_a"))
-      .join(sets.as("sb"), col("sb.doc_id") === col("id_b"))
-      .filter(j >= JaccardThreshold)
-      .select(col("id_a"), col("id_b"), Stable.r4(j).as("jaccard"))
+    val sets = stopListedHashSets(s, d).cache()
+    val side = NearDupSide(sets, minHashBands(sets, bp), Seq(sets))
+    nearDupMatches(side, side, "hh", self = true)
   }
 
   /** d10 — d04's SimHash pigeonhole dedup over the stop-listed shingle
@@ -616,7 +640,7 @@ object Dedup {
       val blockRows = (0 until NumBlocks)
         .map(k => s"SELECT doc_id, simhash, $k AS blk_k, (simhash >> ${k * BlockBits}) & ${(1 << BlockBits) - 1} AS blk FROM sig")
         .mkString("\nUNION ALL\n")
-      s"""WITH sets AS (${stopListedHashSetsSql(MaxShingleDf).replace("\n", "\n  ")}),
+      s"""WITH sets AS (${stopListedHashSetsSql.replace("\n", "\n  ")}),
          |sig AS (SELECT doc_id, $simhashSql AS simhash
          |        FROM (SELECT doc_id, hh AS th FROM sets)),
          |blocks AS (
@@ -632,7 +656,7 @@ object Dedup {
     }) { (s, d) =>
     val bb = blockBitsFor(corpusDocsFor(s, d))
     simhashBlockPairs(
-      stopListedHashSets(s, d, MaxShingleDf).select(col("doc_id"), col("hh").as("th")),
+      stopListedHashSets(s, d).select(col("doc_id"), col("hh").as("th")),
       bb, MaxHamming)
   }
 
@@ -1054,6 +1078,18 @@ object Dedup {
       when(col("node") === col("cluster"), 1L).otherwise(0L).as("is_keeper"))
   }
 
+  /** Σ C(n,2) over the group sizes n of `groups`: the candidate pairs a
+    * self equi-join on the grouping keys would produce, in one aggregate,
+    * the join never runs. Returns (the mass of every group, the mass of
+    * the groups of at most `maxDf` rows). */
+  private[operators] def pairMass(groups: RelationalGroupedDataset, maxDf: Long): (Long, Long) = {
+    val pairs = (col("n") * (col("n") - lit(1)) / lit(2)).cast("long")
+    val r = groups.agg(count(lit(1)).as("n"))
+      .agg(coalesce(sum(pairs), lit(0L)), coalesce(sum(when(col("n") <= maxDf, pairs)), lit(0L)))
+      .collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
+
   /** Naive vs stop-listed span-window pair mass (Σ_wh df·(df−1)/2) — the
     * [[candidatePairStats]] pattern at d14's span granularity (round-11
     * verdict #6): the mass any pair-join consumer of the window index
@@ -1065,15 +1101,9 @@ object Dedup {
   private[graft] def spanPairMassStats(s: SparkSession, d: String): (Long, Long, Long) = {
     val th = corpus(s, d).select(col("doc_id"),
       transform(tokens(col("t")), tk => polyHash(tk)).as("hh"))
-    val dfreq = th
-      .select(col("doc_id"), explode(spanWindows(col("hh"))).as("wh"))
-      .groupBy("wh").agg(count(lit(1)).as("df"))
-    val pairs = (col("df") * (col("df") - lit(1)) / lit(2)).cast("long")
-    val r = dfreq.agg(
-      sum(pairs).as("naive"),
-      sum(when(col("df") <= SpanMaxDf, pairs).otherwise(lit(0L))).as("stopped"))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1), corpusDocsFor(s, d))
+    val (naive, stopped) = pairMass(
+      th.select(col("doc_id"), explode(spanWindows(col("hh"))).as("wh")).groupBy("wh"), SpanMaxDf)
+    (naive, stopped, corpusDocsFor(s, d))
   }
 
   /** Candidate-pair mass of the d02 inverted-index join vs d08's
@@ -1086,16 +1116,8 @@ object Dedup {
     * gate records both and asserts the stop-listed path stays linear in
     * the doc count. Returns (naivePairs, stopListedPairs, corpusDocs). */
   private[graft] def candidatePairStats(s: SparkSession, d: String): (Long, Long, Long) = {
-    val dfreq = shingled(s, d)
-      .select(col("doc_id"),
-        explode(array_distinct(transform(col("sh"), sg => polyHash(sg)))).as("s"))
-      .groupBy("s").agg(count(lit(1)).as("dfreq"))
-    val pairs = (col("dfreq") * (col("dfreq") - lit(1)) / lit(2)).cast("long")
-    val r = dfreq.agg(
-      sum(pairs).as("naive"),
-      sum(when(col("dfreq") <= MaxShingleDf, pairs).otherwise(lit(0L))).as("stopped"))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1), corpus(s, d).count())
+    val (naive, stopped) = pairMass(hashRows(s, d).groupBy("s"), MaxShingleDf)
+    (naive, stopped, corpus(s, d).count())
   }
 
   /** Band-bucket candidate mass of d03's LSH join vs d09's stop-listed
@@ -1108,23 +1130,12 @@ object Dedup {
     * (d03BandPairs, d09BandPairs). */
   private[graft] def bandCandidateStats(s: SparkSession, d: String): (Long, Long) = {
     val bp = bandParamsFor(corpusDocsFor(s, d))
-    def toSig(sets: DataFrame): DataFrame = sets
-      .select(col("doc_id"),
-        graft.functions.VectorFunctions.minHashSig(col("hh"), bp.numHashes).as("sig"))
-    val naiveSets = shingled(s, d).select(col("doc_id"),
-      array_distinct(transform(col("sh"), sg => polyHash(sg))).as("hh"))
-    (bandMass(toSig(naiveSets), bp), bandMass(toSig(stopListedHashSets(s, d, MaxShingleDf)), bp))
+    (bandMass(hashSets(s, d), bp), bandMass(stopListedHashSets(s, d), bp))
   }
 
-  /** Σ C(n_b, 2) over band-bucket sizes — the band equi-join's candidate
-    * mass, one groupBy, the join never runs. */
-  private def bandMass(sig: DataFrame, bp: BandParams): Long = {
-    val bands = sig.select(bandRows(col("sig"), bp).as("band"))
-    val agg = bands.groupBy("band").agg(count(lit(1)).as("n"))
-      .agg(sum((col("n") * (col("n") - lit(1)) / lit(2)).cast("long")).as("pairs"))
-      .collect()(0)
-    if (agg.isNullAt(0)) 0L else agg.getLong(0)
-  }
+  /** The band equi-join's candidate mass over (doc_id, hh) hash sets. */
+  private def bandMass(sets: DataFrame, bp: BandParams): Long =
+    pairMass(minHashBands(sets, bp).groupBy("band"), Long.MaxValue)._1
 
   /** d03's band-join candidate mass PER DOC under the directory's own
     * (corpus-scaled) banding — the MinHash analog of the gate's
@@ -1133,11 +1144,7 @@ object Dedup {
     * it with the corpus. */
   private[graft] def bandCandidatesPerDoc(s: SparkSession, d: String): Double = {
     val bp = bandParamsFor(corpusDocsFor(s, d))
-    val sig = shingled(s, d)
-      .select(col("doc_id"), transform(col("sh"), sg => polyHash(sg)).as("hh"))
-      .select(col("doc_id"),
-        graft.functions.VectorFunctions.minHashSig(col("hh"), bp.numHashes).as("sig"))
-    bandMass(sig, bp).toDouble / math.max(1L, corpusDocsFor(s, d))
+    bandMass(hashSets(s, d), bp).toDouble / math.max(1L, corpusDocsFor(s, d))
   }
 
   /** d04's block-join candidate mass per doc under the directory's own
@@ -1148,11 +1155,8 @@ object Dedup {
       shingled(s, d)
         .select(col("doc_id"), transform(col("sh"), sg => polyHash(sg)).as("th")),
       bb, cache = false)
-    val agg = blocks.groupBy("blk_k", "blk").agg(count(lit(1)).as("n"))
-      .agg(sum((col("n") * (col("n") - lit(1)) / lit(2)).cast("long")).as("pairs"))
-      .collect()(0)
-    val mass = if (agg.isNullAt(0)) 0L else agg.getLong(0)
-    mass.toDouble / math.max(1L, corpusDocsFor(s, d))
+    pairMass(blocks.groupBy("blk_k", "blk"), Long.MaxValue)._1.toDouble /
+      math.max(1L, corpusDocsFor(s, d))
   }
 
   /** d12 — [[keeperSelectionStar]] as a DECLARED query on an adversarially
@@ -1420,13 +1424,8 @@ object Dedup {
   private[graft] def fuzzyCandidatesPerDoc(s: SparkSession, d: String): Double = {
     val pfx = corpus(s, d)
       .select(col("doc_id"), col("t").substr(1, FuzzyPrefixLen).as("p"))
-    val agg = fuzzyGramRows(pfx)
-      .groupBy("g").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= FuzzyMaxGramDf)
-      .agg(sum((col("df") * (col("df") - lit(1)) / 2).cast("long")).as("pairs"))
-      .collect()(0)
-    val mass = if (agg.isNullAt(0)) 0L else agg.getLong(0)
-    mass.toDouble / math.max(1L, corpusDocsFor(s, d))
+    pairMass(fuzzyGramRows(pfx).groupBy("g"), FuzzyMaxGramDf)._2.toDouble /
+      math.max(1L, corpusDocsFor(s, d))
   }
 
   /** d15 — fuzzy-match join (entity-resolution shape): candidate pairs
@@ -1507,35 +1506,6 @@ object Dedup {
 
   // ---------- d16: incremental NEAR-dup dedup (new batch vs history) ----------
 
-  /** One side of the incremental near-dup machinery: shingles + band rows
-    * plus the handle of its cached shingle frame, so DRAIN-style callers
-    * (q57 — a long-running loop inside ONE measurement, which the
-    * harness-level clearCache between measurements never reaches) can
-    * release it the moment the side's output is durably written. d16
-    * returns a lazy plan that still references the cache, so it leaves
-    * release to the harness convention (Bench/ScaleSmoke clearCache +
-    * unpersist-all before every measurement). */
-  private[graft] final case class NearDupSide(
-      sh: DataFrame, bands: DataFrame, cached: Seq[DataFrame]) {
-    def release(): Unit = cached.foreach(df =>
-      try df.unpersist(blocking = false) catch { case _: Exception => () })
-  }
-
-  /** One side of the incremental near-dup machinery: normalized text →
-    * distinct shingles (cached — referenced by both the signature build
-    * and the Jaccard verify) → MinHash signature → one (doc_id, band) row
-    * per band. `src` must carry (doc_id, t). Shared by d16 (batch) and
-    * q57 (each streaming micro-batch against the persisted history side). */
-  private[graft] def nearDupPipeline(src: DataFrame, bp: BandParams): NearDupSide = {
-    val sh = src.select(col("doc_id"), shingles(col("t")).as("sh")).cache()
-    val bands = sh
-      .select(col("doc_id"), transform(col("sh"), sg => polyHash(sg)).as("hh"))
-      .select(col("doc_id"),
-        graft.functions.VectorFunctions.minHashSig(col("hh"), bp.numHashes).as("sig"))
-      .select(col("doc_id"), bandRows(col("sig"), bp).as("band"))
-    NearDupSide(sh, bands, Seq(sh))
-  }
-
   private val NdidxBuckets = 32
   private val NdidxSpecFile = "_GRAFT_NDIDX_SPEC"
 
@@ -1567,15 +1537,15 @@ object Dedup {
         NdidxSpecFile, SourceState.fingerprint(d, "documents.parquet")) {
       val side = nearDupPipeline(Tables.documents(s, d)
         .select(col("doc_id"), lower(trim(col("text"))).as("t")), bp)
-      graft.pipeline.Bucketing.IndexBuild(Seq(side.bands, side.sh),
+      graft.pipeline.Bucketing.IndexBuild(Seq(side.bands, side.sets),
         release = () => side.release())
     }
 
   /** The persisted history side for `d` (see [[nearDupIndex]]). */
   private[graft] def nearDupStoredIndex(
       s: SparkSession, d: String, bp: BandParams): NearDupSide = {
-    val Seq(bands, sh) = nearDupIndex(s, d, bp).frames
-    NearDupSide(sh, bands, Nil)
+    val Seq(bands, sets) = nearDupIndex(s, d, bp).frames
+    NearDupSide(sets, bands, Nil)
   }
 
   /** Force-or-ensure the persisted index for `d` exists, returning what
@@ -1592,42 +1562,6 @@ object Dedup {
     (e.mode, e.seconds)
   }
 
-  /** Band equi-join candidates + exact-Jaccard verification: every
-    * (incoming, history) pair sharing a band, kept iff verified ≥
-    * [[JaccardThreshold]]. Returns (in_id, hist_id, jaccard r4). */
-  private[graft] def nearDupMatches(
-      histSh: DataFrame, histBands: DataFrame,
-      incSh: DataFrame, incBands: DataFrame): DataFrame = {
-    val cand = incBands.as("i")
-      .join(histBands.as("h"), col("i.band") === col("h.band"))
-      .select(col("i.doc_id").as("in_id"), col("h.doc_id").as("hist_id"))
-      .distinct()
-    val interSize = size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("double")
-    val j = interSize / (size(col("sa.sh")) + size(col("sb.sh")) - interSize)
-    cand
-      .join(incSh.as("sa"), col("sa.doc_id") === col("in_id"))
-      .join(histSh.as("sb"), col("sb.doc_id") === col("hist_id"))
-      .filter(j >= JaccardThreshold)
-      .select(col("in_id"), col("hist_id"), Stable.r4(j).as("jaccard"))
-  }
-
-  /** d16 — incremental near-duplicate dedup: the daily-ingest twin of d11
-    * (which is exact-hash only) — each INCOMING document is checked for
-    * near-duplicates against the HISTORICAL corpus via MinHash band keys,
-    * with exact-Jaccard verification and a deterministic best-match pick
-    * (highest rounded Jaccard, ties to the lowest history id). History =
-    * the base documents; incoming = the deterministically mutated twins
-    * (j≈0.8 against their origins — real positives, reproducible), so
-    * every incoming row reports `n_matches`, its best match, and the
-    * verified similarity, dup or not.
-    *
-    * 100 TB shape: the history side's shingles/signatures/bands are
-    * computed once and in production PERSISTED as the dedup index — the
-    * daily cost is the incoming batch's signature build plus a band
-    * equi-join of batch-bands against the index (delta × ≤bucket-size
-    * work, never history × history), then Jaccard verification of the
-    * candidates only. Band parameters corpus-scale via [[bandParamsFor]]
-    * exactly like d03 — at the oracle fixtures they ARE (4, 4). */
   /** The d16/q57-shared oracle CTE chain, from the raw table through the
     * verified (in_id, hist_id, jaccard) match set `ver` (also exposes
     * `hist` and `inc`). d16 appends its best-match pick; q57's survivor
@@ -1662,6 +1596,23 @@ object Dedup {
        |  WHERE $jac >= $JaccardThreshold)""".stripMargin
   }
 
+  /** d16 — incremental near-duplicate dedup: the daily-ingest twin of d11
+    * (which is exact-hash only) — each INCOMING document is checked for
+    * near-duplicates against the HISTORICAL corpus via MinHash band keys,
+    * with exact-Jaccard verification and a deterministic best-match pick
+    * (highest rounded Jaccard, ties to the lowest history id). History =
+    * the base documents; incoming = the deterministically mutated twins
+    * (j≈0.8 against their origins — real positives, reproducible), so
+    * every incoming row reports `n_matches`, its best match, and the
+    * verified similarity, dup or not.
+    *
+    * 100 TB shape: the history side's shingles/signatures/bands are
+    * computed once and in production PERSISTED as the dedup index — the
+    * daily cost is the incoming batch's signature build plus a band
+    * equi-join of batch-bands against the index (delta × ≤bucket-size
+    * work, never history × history), then Jaccard verification of the
+    * candidates only. Band parameters corpus-scale via [[bandParamsFor]]
+    * exactly like d03 — at the oracle fixtures they ARE (4, 4). */
   val d16IncrementalNearDup = QueryDef(
     "d16_incremental_neardup", {
       s"""WITH $nearDupVerCtes,
@@ -1695,7 +1646,7 @@ object Dedup {
     val bp = bandParamsFor(corpusDocsFor(s, d))
     val h = if (storedIndex) nearDupStoredIndex(s, d, bp) else nearDupPipeline(hist, bp)
     val i = nearDupPipeline(inc, bp)
-    val ver = nearDupMatches(h.sh, h.bands, i.sh, i.bands)
+    val ver = nearDupMatches(i, h, "sh", self = false)
     val wAll = Window.partitionBy("in_id")
     val wRank = Window.partitionBy("in_id").orderBy(col("jaccard").desc, col("hist_id"))
     val best = ver

@@ -502,7 +502,7 @@ object StreamQueries {
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val inc = batch.select(col("doc_id"), col("t"))
           val i = Dedup.nearDupPipeline(inc, bp)
-          val matches = Dedup.nearDupMatches(h.sh, h.bands, i.sh, i.bands)
+          val matches = Dedup.nearDupMatches(i, h, "sh", self = false)
           try inc.select(col("doc_id").as("in_id"))
             .join(matches.select("in_id").distinct(), Seq("in_id"), "left_anti")
             .write.mode("append").parquet(s"$run/out")
