@@ -233,14 +233,20 @@ object Dedup {
     * is a `concat_ws` string of the same values; candidate SETS agree
     * unless xxhash64 collides (2⁻⁶⁴ per bucket pair — immaterial), and the
     * hashed key shuffles 8 bytes instead of a 20–80-char string and needs
-    * no per-permutation column. */
+    * no per-permutation column.
+    *
+    * A doc with no shingle (fewer than 3 tokens) has a null signature and
+    * gets no band row. Otherwise every such doc would share every band
+    * key (`xxhash64(k, null)` is `xxhash64(k)`), and the verify's Jaccard
+    * of two of them would be 0/0, which ANSI mode raises as an error; the
+    * oracle's 0/0 is NULL, so it pairs none of them either. */
   private def minHashBands(hashed: DataFrame, bp: BandParams): DataFrame = {
     val sig = col("sig")
     hashed
       .select(col("doc_id"),
         graft.functions.VectorFunctions.minHashSig(col("hh"), bp.numHashes).as("sig"))
-      .select(col("doc_id"), explode(array((0 until bp.nBands).map(k =>
-        xxhash64(lit(k), slice(sig, k * bp.bandSize + 1, bp.bandSize))): _*)).as("band"))
+      .select(col("doc_id"), explode(when(sig.isNotNull, array((0 until bp.nBands).map(k =>
+        xxhash64(lit(k), slice(sig, k * bp.bandSize + 1, bp.bandSize))): _*))).as("band"))
   }
 
   private def bandSql(k: Int): String =

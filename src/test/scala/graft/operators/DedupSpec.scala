@@ -541,7 +541,10 @@ class DedupSpec extends SparkSpec {
         "catorce quince dieciseis diecisiete dieciocho diecinueve veinte treinta " +
         "cuarenta cincuenta sesenta setenta ochenta noventa cien"),
       // tiny doc: the 14-char cut leaves its twin without a full 3-shingle → no match
-      (3L, "aa bb cc dd"))
+      (3L, "aa bb cc dd"),
+      // history doc with no 3-shingle at all, as its twin: two shingle-less
+      // docs must not meet as candidates (their Jaccard would be 0/0)
+      (4L, "x y"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     try {
@@ -550,13 +553,38 @@ class DedupSpec extends SparkSpec {
         .map(r => r.getLong(0) ->
           ((r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2))))
         .toMap
-      assert(m.keySet == Set(100001L, 100002L, 100003L), s"one row per incoming doc: $m")
+      assert(m.keySet == Set(100001L, 100002L, 100003L, 100004L), s"one row per incoming doc: $m")
+      assert(m(100004L) == ((0L, -1L)), s"shingle-less twin must report no matches: ${m(100004L)}")
       assert(m(100001L)._1 >= 1 && m(100001L)._2 == 1L,
         s"twin of 1 must best-match history doc 1: ${m(100001L)}")
       assert(m(100002L)._1 >= 1 && m(100002L)._2 == 2L,
         s"twin of 2 must best-match history doc 2: ${m(100002L)}")
       assert(m(100003L) == ((0L, -1L)),
         s"degenerate twin must report no matches: ${m(100003L)}")
+    } finally graft.pipeline.Bucketing.deleteRecursively(dir)
+  }
+
+  test("d03 / d07: documents with no 3-shingle run without error and pair with nothing") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_short_docs").toString
+    Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi " +
+        "omicron pi rho sigma tau upsilon phi chi psi omega aleph beth gimel daleth"),
+      // under 3 tokens, and so are their twins: no shingle, a null signature
+      (2L, "aa bb"),
+      (3L, "cc dd"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    try {
+      val short = Set(2L, 3L, 100002L, 100003L)
+      val pairs = Dedup.d03MinHashLsh.fn(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs.contains((1L, 100001L)), s"the long doc's twin pair is missing: $pairs")
+      assert(pairs.forall(p => !short(p._1) && !short(p._2)), s"short docs paired: $pairs")
+      val keepers = Dedup.d07DedupKeeper.fn(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(keepers.size == 6, s"one row per corpus doc: $keepers")
+      short.foreach(id => assert(keepers(id) == id, s"short doc $id joined a cluster: $keepers"))
     } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
