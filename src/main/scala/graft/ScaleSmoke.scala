@@ -23,9 +23,7 @@ import graft.operators.{Dedup, Similarity}
   *    headroom for host steal, which is recorded per run for diagnosis).
   *
   * Usage: SPARK_DRIVER_MEM=4g sbt "runMain graft.ScaleSmoke" — writes
-  * SCALE_SMOKE.json and exits nonzero on any violation. Bench also runs
-  * the gate queries once at 10× per bench round (no assertions there) so
-  * the numbers land in BENCH_r{N}.json.
+  * SCALE_SMOKE.json and exits nonzero on any violation.
   *
   * Reading ×100 numbers: they are SINGLE runs under deliberate memory
   * pressure, and a query that caches an intermediate (d03's signature

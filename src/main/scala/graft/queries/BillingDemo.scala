@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.kernel.BillingSchema.Measures
 import graft.tables.{SourceState, Tables}
 
 /** Deterministic billing-shaped fact/dim derived from the TPC-H testdata, so
@@ -111,14 +112,8 @@ object BillingDemo {
     "sku_description", "usage_pricing_unit", "currency",
     "currency_conversion_rate", "cost_type")
 
-  val measures: Seq[String] = Seq(
-    "usage_amount_in_pricing_units", "cost", "cost_at_list",
-    "c_cud", "c_cud_db", "c_discount", "c_free_tier", "c_promotion",
-    "c_rm", "c_sub_benefit", "c_sud",
-    "internal_credits_cost", "internal_credits_consumption")
-
   val factSql: String = {
-    val sums = measures.map(m => s"sum($m) AS $m").mkString(",\n  ")
+    val sums = Measures.map(m => s"sum($m) AS $m").mkString(",\n  ")
     s"""SELECT ${grain13.mkString(", ")},
        |  $sums
        |FROM (${rawFactSql.replace("\n", "\n  ")})
@@ -190,12 +185,8 @@ object BillingDemo {
   /** q23's narrow twin: the narrow keys + raw measures + credit ARRAYS
     * (the precomputed c_* columns dropped — the caller re-derives them
     * from the arrays, exactly like `rawFact.drop(c_*)`). */
-  private[queries] def narrowRawForArrays(spark: SparkSession, dir: String): DataFrame = {
-    val derived = Seq("c_cud", "c_cud_db", "c_discount", "c_free_tier",
-      "c_promotion", "c_rm", "c_sub_benefit", "c_sud",
-      "internal_credits_cost", "internal_credits_consumption")
-    narrowRaw(spark, dir).drop(derived: _*)
-  }
+  private[queries] def narrowRawForArrays(spark: SparkSession, dir: String): DataFrame =
+    narrowRaw(spark, dir).drop(Measures.drop(3): _*)
 
   /** grain-13 string columns derived per GROUP after a narrow-key
     * aggregation — the twin of [[rawFact]]'s per-row derivations (same
@@ -216,7 +207,7 @@ object BillingDemo {
         lit("unit").as("usage_pricing_unit"),
         lit("USD").as("currency"),
         lit(1.0).as("currency_conversion_rate"),
-        col("cost_type")) ++ measures.map(col)): _*)
+        col("cost_type")) ++ Measures.map(col)): _*)
 
   /** The four narrow grouping keys (see [[narrowRaw]]). */
   private[queries] val narrowKeys: Seq[String] =
@@ -245,8 +236,8 @@ object BillingDemo {
       widenNarrow(dir,
         narrowRaw(spark, dir).drop("credits_type", "credits_amount"))
         .groupBy(narrowKeys.map(col): _*)
-        .agg(measures.map(m => sum(m).as(m)).head,
-          measures.tail.map(m => sum(m).as(m)): _*))
+        .agg(Measures.map(m => sum(m).as(m)).head,
+          Measures.tail.map(m => sum(m).as(m)): _*))
 
   // ---------- synthetic dim: 41 rules × every fact month ----------
   // rid=40 deliberately duplicates rid=0's family-1 keys (A000, wildcard

@@ -12,7 +12,7 @@ import graft.kernel.{BillingSchema, Calculate, Conform, Credits, RuleMatch}
   */
 object KernelQueries {
 
-  import BillingSchema.{CreditColumns, CreditTypeToColumn}
+  import BillingSchema.{CreditColumns, CreditTypeToColumn, Measures}
 
   /** Rounds every DoubleType column to 4 decimals (hash-stability; the SQL
     * twins round the same columns). */
@@ -231,7 +231,7 @@ object KernelQueries {
     val icc = graft.operators.TextOps.sumSql("list_transform(credits_amount, xx -> CAST(xx AS DOUBLE))")
     val keep = (Seq("l_orderkey", "l_linenumber") ++ BillingDemo.grain13 ++
       Seq("usage_amount_in_pricing_units", "cost", "cost_at_list")).mkString(", ")
-    val sums = BillingDemo.measures.map(m => s"sum($m) AS $m").mkString(",\n  ")
+    val sums = Measures.map(m => s"sum($m) AS $m").mkString(",\n  ")
     s"""SELECT ${BillingDemo.grain13.mkString(", ")},
        |  $sums
        |FROM (
@@ -262,8 +262,8 @@ object KernelQueries {
       Credits.deriveCredits(raw)
         .groupBy(BillingDemo.narrowKeys.map(col): _*)
         .agg(
-          sum(BillingDemo.measures.head).as(BillingDemo.measures.head),
-          BillingDemo.measures.tail.map(m => sum(m).as(m)): _*))
+          sum(Measures.head).as(Measures.head),
+          Measures.tail.map(m => sum(m).as(m)): _*))
     val out = Calculate.calculateWithCredits(
       fact, BillingDemo.dim(s, d), BillingDemo.demoExtraDiscount)
     roundDoubles(
@@ -443,8 +443,8 @@ object KernelQueries {
     taggedSql + kernelSuffixSql()) { (s, d) =>
     val fact = bucketedOds(s, d)
       .groupBy(BillingDemo.grain13.map(col): _*)
-      .agg(BillingDemo.measures.map(m => sum(m).as(m)).head,
-        BillingDemo.measures.tail.map(m => sum(m).as(m)): _*)
+      .agg(Measures.map(m => sum(m).as(m)).head,
+        Measures.tail.map(m => sum(m).as(m)): _*)
     val out = Calculate.calculateWithCredits(
       fact, BillingDemo.dim(s, d), BillingDemo.demoExtraDiscount)
     roundDoubles(
@@ -463,7 +463,7 @@ object KernelQueries {
     * arbitrary double's 9th-decimal rounding depends on engine conversion
     * internals (shortest-representation vs scaled-multiply). */
   private val factQuantSql: String = {
-    val cols = BillingDemo.measures.map(m => s"${Stable.sqlR4(m)} AS $m")
+    val cols = Measures.map(m => s"${Stable.sqlR4(m)} AS $m")
     s"""SELECT ${BillingDemo.grain13.mkString(", ")},
        |  ${cols.mkString(",\n  ")}
        |FROM (${BillingDemo.factSql.replace("\n", "\n  ")})""".stripMargin
@@ -533,7 +533,7 @@ object KernelQueries {
     taggedSqlFor(factQuantSql) + kernelSuffixSqlDecimal) { (s, d) =>
     val f = BillingDemo.fact(s, d)
     val factQ = f.select((BillingDemo.grain13.map(col) ++
-      BillingDemo.measures.map(mm => Stable.r4(col(mm)).as(mm))): _*)
+      Measures.map(mm => Stable.r4(col(mm)).as(mm))): _*)
     val out = Calculate.calculateWithCredits(
       factQ, BillingDemo.dim(s, d), BillingDemo.demoExtraDiscount,
       decimalMoney = true)

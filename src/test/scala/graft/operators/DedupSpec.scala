@@ -588,6 +588,62 @@ class DedupSpec extends SparkSpec {
     } finally graft.pipeline.Bucketing.deleteRecursively(dir)
   }
 
+  test("nearDupMatches: self and cross forms = brute-force band sharing and Jaccard ≥ 0.5") {
+    import spark.implicits._
+    // one row per band: a single shared MinHash value makes a candidate,
+    // so some band-sharing pairs fall below the threshold
+    val bp = Dedup.BandParams(1, 16)
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi"
+    val hist = Seq(
+      1L -> base,
+      2L -> base.replace("kappa", "kapa"),
+      3L -> (base + " rho sigma tau"),
+      4L -> "alpha beta gamma delta one two three four five six seven eight nine ten",
+      5L -> "uno dos tres cuatro cinco seis siete ocho nueve diez",
+      6L -> "uno dos tres cuatro cinco seis siete ocho nueve once")
+    val inc = Seq(
+      101L -> base,
+      102L -> "one two three four five six seven eight nine ten alpha beta",
+      103L -> "dos tres cuatro cinco seis siete ocho nueve diez")
+    def side(docs: Seq[(Long, String)]) = Dedup.nearDupPipeline(docs.toDF("doc_id", "t"), bp)
+    def setsOf(s: Dedup.NearDupSide) =
+      s.sets.collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+    def bandsOf(s: Dedup.NearDupSide) =
+      s.bands.collect().groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getLong(1)).toSet }
+    def r4(x: Double) = math.floor(x * 10000.0 + 0.5) / 10000.0
+    def jac(a: Set[String], b: Set[String]) = (a & b).size.toDouble / (a | b).size
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val (h, i) = (side(hist), side(inc))
+    val (hs, hb, is, ib) = (setsOf(h), bandsOf(h), setsOf(i), bandsOf(i))
+    def expected(a: Seq[Long], as: Map[Long, Set[String]], ab: Map[Long, Set[Long]],
+        b: Seq[Long], bs: Map[Long, Set[String]], bb: Map[Long, Set[Long]], self: Boolean) = {
+      val cand = for (x <- a; y <- b if (!self || x < y) && (ab(x) & bb(y)).nonEmpty) yield (x, y)
+      assert(cand.exists { case (x, y) => jac(as(x), bs(y)) < 0.5 }, s"no candidate fails the verify: $cand")
+      cand.filter { case (x, y) => jac(as(x), bs(y)) >= 0.5 }
+        .map { case (x, y) => (x, y) -> r4(jac(as(x), bs(y))) }.toMap
+    }
+    val selfWant = expected(hist.map(_._1), hs, hb, hist.map(_._1), hs, hb, self = true)
+    assert(selfWant.keySet.contains((1L, 2L)) && selfWant.keySet.contains((5L, 6L)), s"$selfWant")
+    assert(got(Dedup.nearDupMatches(h, h, "sh", self = true)) == selfWant)
+    val crossWant = expected(inc.map(_._1), is, ib, hist.map(_._1), hs, hb, self = false)
+    assert(crossWant.get((101L, 1L)).contains(1.0) && crossWant.keySet.contains((103L, 5L)), s"$crossWant")
+    assert(got(Dedup.nearDupMatches(i, h, "sh", self = false)) == crossWant)
+  }
+
+  test("pairMass = brute-force Σ C(n,2) over group sizes, with and without a cutoff") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val keys = Seq.fill(300)(rnd.nextInt(20)).map(k => (k % 4, k))
+    val sizes = keys.groupBy(identity).values.map(_.size.toLong).toSeq
+    def mass(ns: Seq[Long]) = ns.map(n => n * (n - 1) / 2).sum
+    val groups = keys.toDF("a", "b").groupBy("a", "b")
+    assert(sizes.exists(_ > 15) && sizes.exists(_ <= 15), s"cutoff splits nothing: $sizes")
+    assert(Dedup.pairMass(groups, 15L) == ((mass(sizes), mass(sizes.filter(_ <= 15)))))
+    assert(Dedup.pairMass(groups, Long.MaxValue) == ((mass(sizes), mass(sizes))))
+    assert(Dedup.pairMass(Seq.empty[Int].toDF("a").groupBy("a"), 15L) == ((0L, 0L)))
+  }
+
   test("d17 stored-index variant returns exactly d16's rows") {
     val sf = "/root/testdata/sf0.001"
     def rows(q: graft.queries.QueryDef) =
